@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.GraftFunctions.block_pairs
+
 /** The reference's data-driven-relation similarity self-join (J9), exact
   * semantics (mrtarget/modules/DataDrivenRelation.py):
   *
@@ -84,32 +86,12 @@ object DataDrivenRelation {
     // whole toks+weights+window pipeline per side (guide §2.4). Head
     // tokens never reach this group (they live in suffixes), so list
     // sizes are prefix-bounded exactly as the join's per-key output was.
-    // two aligned primitive arrays from one sort_array'd struct list —
-    // primitive UDF parameters skip per-element boxing, sort_array orders
-    // by id (struct's first field) so pairs are deterministic
-    val pairsUdf = udf { (ids: Array[Long], wss: Array[Double]) =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Double)]
-      var i = 0
-      while (i < ids.length) {
-        var j = i + 1
-        while (j < ids.length) {
-          if (ids(i) != ids(j))
-            out += ((ids(i), ids(j), wss(i), wss(j)))
-          j += 1
-        }
-        i += 1
-      }
-      out.toArray
-    }.asNondeterministic()
     val idType = docs.schema(idCol).dataType
     val candidates = prefix.groupBy("tok")
       .agg(collect_list(struct(col("id").cast("long").as("id"), col("ws"))).as("g"))
-      .select(explode(pairsUdf(
-        transform(sort_array(col("g")), x => x.getField("id")),
-        transform(sort_array(col("g")), x => x.getField("ws")))).as("p"))
-      .select(col("p._1").cast(idType).as("id_a"),
-        col("p._2").cast(idType).as("id_b"),
-        col("p._3").as("wsa"), col("p._4").as("wsb"))
+      .select(block_pairs(col("g")))
+      .select(col("a_id").cast(idType).as("id_a"), col("b_id").cast(idType).as("id_b"),
+        col("a_ws").as("wsa"), col("b_ws").as("wsb"))
       .distinct()
 
     // lossless ws-ratio prune BEFORE the expensive intersection sums

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.index.Hashing
+import graft.plans.GraftFunctions.block_pairs
 
 /** Deduplication operators over a `(id, text)` document table: exact
   * (hash-group), n-gram-shingle Jaccard (blocked self-join), MinHash+LSH
@@ -80,59 +81,12 @@ object Dedup {
 
   /** Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= threshold).
     *
-    * Shape: block on shingle -> equi-join -> count intersections -> sizes
-    * join -> threshold filter. Exact, and the cheapest plan (one shuffle
-    * join + one aggregation) when shingle document frequencies are bounded.
+    * Shape: group on shingle -> pair generator -> count intersections ->
+    * threshold filter. Exact, and the cheapest plan (two exchanges, no
+    * join) when shingle document frequencies are bounded.
     * Under Zipf head-shingle skew use [[jaccardPairsPrefix]] — same exact
     * output, head shingles never join keys — or the MinHash variant below
     * when approximate recall is acceptable. */
-  /** All C(df,2) ordered (id_a < id_b) pairs of one shingle's posting
-    * list — the map side of the inverted-index pair generation. Inputs
-    * are two ALIGNED primitive arrays derived from one sort_array'd
-    * struct list (primitive-array UDF parameters skip the per-element
-    * boxing a Seq[Row] pays; sort_array orders by id, the struct's first
-    * field, so output is deterministic). The quadratic emit per list is
-    * exactly the quantity the auto selector's Σ df·(df−1)/2 budget bounds
-    * before this plan is chosen. */
-  private val shinglePairsUdf = udf { (ids: Array[Long], szs: Array[Int]) =>
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Int)]
-    var i = 0
-    while (i < ids.length) {
-      var j = i + 1
-      while (j < ids.length) {
-        // strict id_a < id_b, like the join's a.id < b.id (duplicate-id
-        // input rows must not self-pair; sorted, so dups are adjacent)
-        if (ids(i) != ids(j)) out += ((ids(i), ids(j), szs(i), szs(j)))
-        j += 1
-      }
-      i += 1
-    }
-    out.toArray
-  }.asNondeterministic()
-
-  /** sort_array'd (id, payload) struct list split into the two aligned
-    * primitive columns the pair UDFs take. */
-  private def sortedCols(g: Column): (Column, Column) =
-    (transform(sort_array(g), x => x.getField("id")),
-      transform(sort_array(g), x => x.getField("p")))
-
-  /** Ordered id pairs of one bucket's id list (strict <) — the grouped
-    * form of the banded candidate self-join. */
-  private val idPairsUdf = udf { (g: Array[Long]) =>
-    val arr = g.sorted
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var i = 0
-    while (i < arr.length) {
-      var j = i + 1
-      while (j < arr.length) {
-        if (arr(i) != arr(j)) out += ((arr(i), arr(j)))
-        j += 1
-      }
-      i += 1
-    }
-    out.toArray
-  }.asNondeterministic()
-
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double): DataFrame = {
     // Inverted-index pair generation: ONE scan of the corpus (the old
@@ -141,24 +95,22 @@ object Dedup {
     // ordered pairs, and count per pair — 2 exchanges total, no join
     // (guide §2.4; measured ~1.8x faster than the broadcast self-join at
     // sf0.1). sz rides the rows, so no sizes aggregation or re-join
-    // either. Per-list aggregation state is df entries, bounded by the
-    // selector's budget (df_max² <= 2·Σdf·(df−1)/2 <= 2·blowup·rows).
-    // jaccard is a ratio of exact integers — bit-identical to the join
-    // form.
+    // either. Per-list state is the df-entry posting list; the pair
+    // generator yields its C(df,2) pairs lazily, and their total is the
+    // selector's budget (Σdf·(df−1)/2 <= blowup·rows). jaccard is a ratio
+    // of exact integers — bit-identical to the join form.
     val idType = docs.schema(idCol).dataType
     val sh = shingleTableSized(docs, idCol, textCol, n)
-    val (ids, szs) = sortedCols(col("g"))
     sh.groupBy("shingle")
-      .agg(collect_list(struct(col("id").cast("long").as("id"),
-        col("sz").as("p"))).as("g"))
-      .select(explode(shinglePairsUdf(ids, szs)).as("p"))
-      .groupBy(col("p._1").as("id_a"), col("p._2").as("id_b"),
-        col("p._3").as("sza"), col("p._4").as("szb"))
+      .agg(collect_list(struct(col("id").cast("long").as("id"), col("sz"))).as("g"))
+      .select(block_pairs(col("g")))
+      .groupBy(col("a_id").as("id_a"), col("b_id").as("id_b"),
+        col("a_sz").as("sza"), col("b_sz").as("szb"))
       .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard",
         col("inter") / (col("sza") + col("szb") - col("inter")))
       .filter(col("jaccard") >= threshold)
-      // ids pass through the UDF as longs; restore the caller's id type
+      // ids pass through the generator as longs; restore the caller's id type
       // (integral by the ordered-pair contract) so the output schema is
       // unchanged from the join form
       .select(col("id_a").cast(idType).as("id_a"),
@@ -211,14 +163,11 @@ object Dedup {
     // grouped candidate generation (ONE exchange + ONE computation of the
     // prefix subtree; the self-join recomputed it per side — guide §2.4)
     val idType = docs.schema(idCol).dataType
-    val (cids, cszs) = sortedCols(col("g"))
     val candidates = prefix.groupBy("shingle")
-      .agg(collect_list(struct(col("id").cast("long").as("id"),
-        col("sz").as("p"))).as("g"))
-      .select(explode(shinglePairsUdf(cids, cszs)).as("p"))
-      .select(col("p._1").cast(idType).as("id_a"),
-        col("p._2").cast(idType).as("id_b"),
-        col("p._3").as("sza"), col("p._4").as("szb"))
+      .agg(collect_list(struct(col("id").cast("long").as("id"), col("sz"))).as("g"))
+      .select(block_pairs(col("g")))
+      .select(col("a_id").cast(idType).as("id_a"), col("b_id").cast(idType).as("id_b"),
+        col("a_sz").as("sza"), col("b_sz").as("szb"))
       .distinct()
     val pruned = candidates
       // 1e-6 slack (as in DataDrivenRelation's tEff): float rounding of
@@ -227,18 +176,24 @@ object Dedup {
       // filter below would keep — slack only ever ENLARGES the candidates
       .filter(least(col("sza"), col("szb")) >=
         lit(threshold) * greatest(col("sza"), col("szb")) - 1e-6)
+    verifyJaccard(pruned, docs, idCol, textCol, n, threshold)
+  }
 
-    // exact intersection for survivors via the doc-level shingle ARRAYS
-    // (array_intersect of two distinct sets == the old exploded
-    // join+count, with no aggregation exchange; intersection counts are
-    // exact integers, so the jaccard value is bit-identical)
+  /** Exact-Jaccard verify of candidate (id_a, id_b) pairs: two id
+    * equi-joins onto the doc-level shingle ARRAYS and one array_intersect,
+    * no aggregation exchange (guide §2.4). Intersection and set sizes are
+    * exact integers (size(arr) equals the sized shingle table's sz: both
+    * come from [[shingles]]), so the jaccard values are bit-identical to an
+    * exploded join+count. */
+  private def verifyJaccard(candidates: DataFrame, docs: DataFrame, idCol: String,
+      textCol: String, n: Int, threshold: Double): DataFrame = {
     val arr = shingleArrays(docs, idCol, textCol, n)
-    pruned
+    candidates
       .join(arr.select(col("id").as("id_a"), col("arr").as("_aa")), "id_a")
       .join(arr.select(col("id").as("id_b"), col("arr").as("_ab")), "id_b")
       .withColumn("inter", size(array_intersect(col("_aa"), col("_ab"))))
-      .withColumn("jaccard",
-        col("inter") / (col("sza") + col("szb") - col("inter")))
+      .withColumn("jaccard", col("inter") /
+        (size(col("_aa")) + size(col("_ab")) - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -392,24 +347,13 @@ object Dedup {
     val idType = docs.schema(idCol).dataType
     val candidates = banded.groupBy("band", "bucket")
       .agg(collect_list(col("id")).as("g"))
-      .select(explode(idPairsUdf(col("g"))).as("p"))
-      .select(col("p._1").cast(idType).as("id_a"),
-        col("p._2").cast(idType).as("id_b"))
+      // the exchange and the aggregation buffer carry bare 8-byte ids; the
+      // one-field structs the generator takes are built after them
+      .select(block_pairs(transform(col("g"), id => struct(id.as("id")))))
+      .select(col("a_id").cast(idType).as("id_a"), col("b_id").cast(idType).as("id_b"))
       .distinct()
-
-    // exact verify on the candidate pairs only, via the doc-level shingle
-    // ARRAYS: two id equi-joins + array_intersect replace the old exploded
-    // double-join + count aggregation + two sizes joins (guide §2.4); the
-    // jaccard ratio is over exact integers, so values are bit-identical.
-    val arr = shingleArrays(docs, idCol, textCol, n)
-    candidates
-      .join(arr.select(col("id").as("id_a"), col("arr").as("_aa")), "id_a")
-      .join(arr.select(col("id").as("id_b"), col("arr").as("_ab")), "id_b")
-      .withColumn("inter", size(array_intersect(col("_aa"), col("_ab"))))
-      .withColumn("jaccard", col("inter") /
-        (size(col("_aa")) + size(col("_ab")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    // exact verify on the candidate pairs only
+    verifyJaccard(candidates, docs, idCol, textCol, n, threshold)
   }
 
   /** 64-bit SimHash over the token multiset (weighted bit-vote). Token
@@ -436,6 +380,22 @@ object Dedup {
 
   val simhashUdf = udf((text: String) => simhash64(text)).asNondeterministic()
 
+  private def simhashPairsFromBanded(docs: DataFrame, idCol: String,
+      banded: DataFrame, bandCol: String, maxHamming: Int): DataFrame = {
+    val idType = docs.schema(idCol).dataType
+    val hamming = bit_count(col("a_sh").bitwiseXOR(col("b_sh")))
+    // the Hamming verify sits directly above the generator, in its stage,
+    // so the distinct exchange carries only the rare qualifying pairs, not
+    // every band collision (guide §2.3/§2.4)
+    banded.groupBy(bandCol, "key")
+      .agg(collect_list(struct(col("id"), col("sh"))).as("g"))
+      .select(block_pairs(col("g")))
+      .filter(hamming <= maxHamming)
+      .select(col("a_id").cast(idType).as("id_a"), col("b_id").cast(idType).as("id_b"),
+        hamming.as("hamming"))
+      .distinct()
+  }
+
   /** SimHash near-dup pairs with Hamming distance <= maxHamming, found by
     * banding the 64-bit hash into 4x16-bit keys (any pair within Hamming 3
     * shares at least one exact 16-bit band — pigeonhole; the banded
@@ -451,41 +411,6 @@ object Dedup {
     * [[minhashLshPairs]] bounds candidates by tunable bands x rows and is
     * the wired 100TB path for high-dup corpora. This 4x16 config is right
     * for corpus sizes up to ~10^8 where its single narrow shuffle wins. */
-  /** Ordered (id_a < id_b, hamming) pairs of one band bucket's (id, sh)
-    * list, verified to hamming <= maxHamming INSIDE the generator — the
-    * grouped form of the banded self-join with the verify fused in, so
-    * only qualifying pairs are ever emitted (the distinct exchange carries
-    * the rare survivors, not every band collision — guide §2.3/§2.4). */
-  private def simhashBucketPairsUdf(maxHamming: Int) =
-    udf { (ids: Array[Long], shs: Array[Long]) =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-      var i = 0
-      while (i < ids.length) {
-        var j = i + 1
-        while (j < ids.length) {
-          if (ids(i) != ids(j)) {
-            val h = java.lang.Long.bitCount(shs(i) ^ shs(j))
-            if (h <= maxHamming) out += ((ids(i), ids(j), h))
-          }
-          j += 1
-        }
-        i += 1
-      }
-      out.toArray
-    }.asNondeterministic()
-
-  private def simhashPairsFromBanded(docs: DataFrame, idCol: String,
-      banded: DataFrame, bandCol: String, maxHamming: Int): DataFrame = {
-    val idType = docs.schema(idCol).dataType
-    val (ids, shs) = sortedCols(col("g"))
-    banded.groupBy(bandCol, "key")
-      .agg(collect_list(struct(col("id"), col("sh").as("p"))).as("g"))
-      .select(explode(simhashBucketPairsUdf(maxHamming)(ids, shs)).as("p"))
-      .select(col("p._1").cast(idType).as("id_a"),
-        col("p._2").cast(idType).as("id_b"), col("p._3").as("hamming"))
-      .distinct()
-  }
-
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4-band scheme guarantees recall only to Hamming 3")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** S7: RDF/OWL ontology source + eager ancestor materialization.
@@ -84,9 +85,10 @@ object Ontology {
     * every row missed the join = all tops are roots. `localCheckpoint`
     * cuts the exponentially-growing self-join lineage each round;
     * superseded rounds' blocks are freed as rounds advance, the final
-    * round's through the returned handle. (The tracking probe window is
-    * this thread's checkpoint call; a concurrent persist landing inside it
-    * would at worst be unpersisted early and recompute — never corrupt.) */
+    * round's through the returned handle. Only this closure's own
+    * checkpoint RDDs are ever freed, read off each checkpointed Dataset's
+    * plan: a `localCheckpoint` block cannot be recomputed, so freeing a
+    * concurrent query's checkpoint would fail that query. */
   private def closure(edges: DataFrame, maxRounds: Int, op: String,
       maxPaths: Long = DefaultMaxPaths, requireForest: Boolean = false): PinnedResult = {
     val spark = edges.sparkSession
@@ -97,10 +99,10 @@ object Ontology {
     // pinned-block bookkeeping are unchanged: persist() registers the RDD
     // at mark time, the stats job computes every partition.
     def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
       val out = df.localCheckpoint(false)
-      val added = (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet
-      (out, added)
+      // the checkpointed RDD is the one the returned Dataset's LogicalRDD
+      // wraps — not whatever else became persistent meanwhile
+      (out, out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet)
     }
     def free(ids: Set[Int]): Unit =
       spark.sparkContext.getPersistentRDDs.view

@@ -1,10 +1,14 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StringType}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Generator,
+  JoinedRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType,
+  StringType, StructType}
 
 /** Native Catalyst expressions for the analyzer chain — the tokenizer stays
   * inside whole-stage codegen instead of crossing the Scala-UDF row
@@ -59,6 +63,67 @@ case class SegmentOfExpr(child: Expression, numSegments: Int)
     copy(child = newChild)
 }
 
+/** The pair generator of every blocked similarity join: one group's
+  * `array<struct<id: bigint, ...payload>>` in, one row per element pair
+  * i < j with id_i != id_j out, as the two elements' fields prefixed
+  * `a_`/`b_` (so a_id < b_id). The elements are sorted by id once; pairs
+  * are yielded lazily, each a JoinedRow over the two element structs, so
+  * the payload is never copied and a group holds its n elements, never its
+  * C(n,2) pairs. Interpreted (CodegenFallback): GenerateExec pulls one pair
+  * at a time and projects it straight into the stage above. */
+case class BlockPairsExpr(child: Expression) extends UnaryExpression
+    with Generator with CodegenFallback {
+  private def element: StructType =
+    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(st: StructType, _)
+        if st.fields.headOption.exists(f => f.name == "id" && f.dataType == LongType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<struct<id: bigint, ...>>, got ${other.catalogString}")
+  }
+  override def elementSchema: StructType = StructType(
+    element.fields.map(f => f.copy(name = "a_" + f.name)) ++
+      element.fields.map(f => f.copy(name = "b_" + f.name)))
+  override def prettyName: String = "graft_block_pairs"
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val arr = child.eval(input).asInstanceOf[ArrayData]
+    if (arr == null) return Iterator.empty
+    val n = arr.numElements()
+    val width = element.length
+    val rows = Array.tabulate[InternalRow](n)(arr.getStruct(_, width))
+    // stable sort: equal ids end up adjacent, in one run
+    java.util.Arrays.sort(rows,
+      (x: InternalRow, y: InternalRow) => java.lang.Long.compare(x.getLong(0), y.getLong(0)))
+    def runEnd(k: Int): Int = {
+      var e = k + 1
+      while (e < n && rows(e).getLong(0) == rows(k).getLong(0)) e += 1
+      e
+    }
+    new Iterator[InternalRow] {
+      // i's partners are j in [end of i's id run, n)
+      private var i = 0
+      private var end = runEnd(0)
+      private var j = end
+      override def hasNext: Boolean = {
+        while (i < n && j >= n) {
+          i += 1
+          if (i == end) end = runEnd(i)
+          j = end
+        }
+        i < n
+      }
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        j += 1
+        new JoinedRow(rows(i), rows(j - 1))
+      }
+    }
+  }
+  override protected def withNewChildInternal(newChild: Expression): BlockPairsExpr =
+    copy(child = newChild)
+}
+
 object GraftFunctions {
   import org.apache.spark.sql.GraftColumnBridge
 
@@ -76,6 +141,10 @@ object GraftFunctions {
   def segment_of(c: Column, numSegments: Int): Column =
     GraftColumnBridge.column(
       SegmentOfExpr(GraftColumnBridge.expression(c), numSegments))
+  /** Select-list generator over a grouped `collect_list(struct(id, ...))`
+    * column: `df.select(block_pairs(col("g")))` yields a_* and b_* columns. */
+  def block_pairs(c: Column): Column =
+    GraftColumnBridge.column(BlockPairsExpr(GraftColumnBridge.expression(c)))
 
   /** Imperative registration for an existing session (tests, Demo). */
   def register(spark: SparkSession): Unit = {

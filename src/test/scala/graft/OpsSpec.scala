@@ -312,6 +312,41 @@ class OpsSpec extends SparkSuite {
     assert(full.count() > 0)
   }
 
+  test("ancestorPaths frees only its own checkpoints beside a concurrent localCheckpoint") {
+    import graft.ops.Ontology
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    // a localCheckpoint block cannot be recomputed: a closure that freed
+    // the other thread's checkpoint would make that thread's re-read fail
+    val edges = (2 until 200).flatMap(i => Seq((i.toLong, (i / 2).toLong)) ++
+      (if (i >= 3) Seq((i.toLong, (i / 3).toLong)) else Nil)).toDF("id", "parent")
+    def unpin(d: DataFrame): Unit =
+      d.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.unpersist() }
+    val rounds = 8
+    val failedRounds = (1 to rounds).map { _ =>
+      @volatile var closureError: Option[Throwable] = None
+      val closure = new Thread(() =>
+        try {
+          val m = Ontology.ancestorPathsManaged(edges)
+          m.df.count()
+          m.release()
+        } catch { case e: Throwable => closureError = Some(e) })
+      closure.start()
+      val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val otherError =
+        try {
+          while (closure.isAlive) held += spark.range(0, 1000, 1, 2).toDF("x").localCheckpoint()
+          closure.join()
+          held.foreach(d => assert(d.count() === 1000L))
+          None
+        } catch { case e: Throwable => Some(e) }
+        finally { closure.join(); held.foreach(unpin) }
+      closureError.toSeq ++ otherError
+    }.filter(_.nonEmpty)
+    assert(failedRounds.isEmpty, s"${failedRounds.length} of $rounds rounds failed: " +
+      failedRounds.flatten.map(_.getMessage.take(120)).mkString(" | "))
+  }
+
   test("fingerprint expression equals Analyzer-free sorted token set") {
     val df = Seq((1L, "b a b c a")).toDF("id", "text")
     val fp = df.select(TextOps.fingerprintExpr(col("text"))).head().getString(0)
