@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.search.{BoolQuery, IndexHandle}
@@ -43,8 +43,9 @@ import graft.search.{BoolQuery, IndexHandle}
   * BYTES per task plus the (batch-bounded) id sets (measured in
   * DeleteSpec: 4 segments x 10^6 prior ids re-consolidate in seconds).
   * `deleteByQuery` enumerates and encodes matches per-segment inside
-  * executor tasks; newly-dead counts on both paths come from row
-  * metadata (consolidated-superset df), never from decoding postings.
+  * executor tasks; newly-dead counts on both paths are observed during
+  * the tombstone write (no second query over what was just written),
+  * never from decoding postings.
   * Under sustained mass-delete workloads run `Deletes.purge`
   * periodically — it rewrites postings without the dead docs and resets
   * tombstone volume to zero. */
@@ -65,35 +66,32 @@ object Deletes {
     * encodes the consolidated TermDels row inside the task — the match
     * set is never ranked, never collected, and never crosses to the
     * driver, so a delete matching ~all of a 10^12-doc index streams
-    * segment-parallel like the build does. Only O(affected segments)
-    * metadata (segId, df) reaches the driver for the snapshot commit. */
+    * segment-parallel like the build does. Only the newly-dead count,
+    * observed during the write, reaches the driver for the commit. */
   def deleteByQuery(spark: SparkSession, indexDir: String, q: BoolQuery): SnapshotMeta = {
     import spark.implicits._
     IndexBuilder.ensureLargeCellWriterConf(spark)
     val h = new IndexHandle(spark, indexDir, warm = false)
-    val snap = h.snap
-    val newId = snap.id + 1
-    val rel = f"data/del-$newId%05d"
-    val out = s"$indexDir/$rel"
-    h.matchTombstoneRows(q).write.mode("overwrite").parquet(out)
+    val rel = f"data/del-${h.snap.id + 1}%05d"
+    // each row carries its segment's count of NEW matches (tombstoned docs
+    // are exclusion cursors, never matches) — summed during the write
+    val dead = Observation()
+    h.matchTombstoneRows(q)
+      .observe(dead, coalesce(sum(col("_2")), lit(0L)).as("n"))
+      .map(_._1)
+      .write.mode("overwrite").parquet(s"$indexDir/$rel")
+    commitTombstones(indexDir, h.snap, rel, dead.get("n").asInstanceOf[Long])
+  }
 
-    // commit metadata from the WRITTEN rows (df = |prior ∪ matches| per
-    // affected segment) minus the prior distinct tombstone count of those
-    // segments — both distributed aggregations over tombstone-sized data
-    val written = spark.read.parquet(out)
-      .select("segId", "df").as[(Int, Long)].collect()
-    if (written.isEmpty) {
-      deleteDir(out)
+  /** Commit the tombstone dir `rel` holding `newlyDead` newly-dead docs,
+    * or drop it and keep `snap` when the write killed nothing new. */
+  private def commitTombstones(indexDir: String, snap: SnapshotMeta,
+      rel: String, newlyDead: Long): SnapshotMeta = {
+    if (newlyDead == 0) {
+      deleteDir(s"$indexDir/$rel")
       return snap
     }
-    val affected = written.map(_._1).toSeq
-    val priorCnt = priorDeadCount(spark, indexDir, snap, affected)
-    val newlyDead = written.map(_._2).sum - priorCnt
-    if (newlyDead == 0) { // defensive: enumeration emits only on new matches
-      deleteDir(out)
-      return snap
-    }
-    val neu = snap.copy(id = newId, parent = snap.id,
+    val neu = snap.copy(id = snap.id + 1, parent = snap.id,
       dataDirs = snap.dataDirs :+ rel,
       deletedDocs = snap.deletedDocs + newlyDead)
     Snapshot.commit(indexDir, neu)
@@ -102,23 +100,6 @@ object Deletes {
 
   private def deleteDir(abs: String): Unit =
     IndexBuilder.deleteTree(java.nio.file.Paths.get(abs))
-
-  /** Distinct prior dead count of `affected` segments, from row METADATA
-    * only: every tombstone writer emits one CONSOLIDATED row per segment
-    * (prior ∪ new — see [[deleteDocIds]]), so each segment's rows form a
-    * superset chain and the newest row's `df` IS its distinct dead count.
-    * max(df) per segment over a column-pruned (term, segId, df) scan —
-    * no posting bytes are ever read or decoded. */
-  private def priorDeadCount(spark: SparkSession, indexDir: String,
-      snap: SnapshotMeta, affected: Seq[Int]): Long = {
-    import spark.implicits._
-    spark.read
-      .parquet(snap.dataDirs.map(d => s"$indexDir/$d"): _*)
-      .filter(col("term") === IndexBuilder.TermDels &&
-        col("segId").isin(affected: _*))
-      .groupBy("segId").agg(max("df").as("d"))
-      .agg(coalesce(sum("d"), lit(0L))).as[Long].head()
-  }
 
   /** Commit tombstones for per-segment docId sets. The new data dir holds
     * one CONSOLIDATED TermDels row per affected segment (prior tombstones
@@ -132,7 +113,9 @@ object Deletes {
     * executors varint-encoded and are never materialized as arrays
     * anywhere, so cost scales with tombstone BYTES held per task, not
     * with accumulated dead-doc count on the driver. The newly-dead count
-    * falls out of row metadata (Σ new df − Σ prior df). */
+    * is observed during the write: Σ new df − Σ df of the joined prior
+    * rows (the superset chain makes the max-df row the segment's distinct
+    * dead count). */
   def deleteDocIds(
       spark: SparkSession,
       indexDir: String,
@@ -146,14 +129,12 @@ object Deletes {
     if (requested.isEmpty) return snap
     val affected = requested.keys.toSeq
     val bs = snap.blockSize
-    val newId = snap.id + 1
-    val rel = f"data/del-$newId%05d"
-    val out = s"$indexDir/$rel"
+    val rel = f"data/del-${snap.id + 1}%05d"
 
     // newest prior tombstone row per affected segment (pushed-down scan;
     // rows stay varint-encoded through the shuffle)
-    val priorNewest = spark.read
-      .parquet(snap.dataDirs.map(d => s"$indexDir/$d"): _*)
+    val priorNewest = IndexBuilder.readPostings(spark,
+        snap.dataDirs.map(d => s"$indexDir/$d"))
       .filter(col("term") === IndexBuilder.TermDels &&
         col("segId").isin(affected: _*))
       .as[PostingRow]
@@ -162,27 +143,23 @@ object Deletes {
 
     val reqDs = spark.createDataset(
       requested.toSeq.map { case (s, ids) => (s, ids.distinct.sorted) })
+    val dead = Observation()
     reqDs.joinWith(priorNewest, reqDs("_1") === priorNewest("key"), "left_outer")
       .map { case ((seg, ids), prior) =>
-        val oldIt = Option(prior).map(p => IndexBuilder.docIdStream(p._2))
-          .getOrElse(Iterator.empty)
-        IndexBuilder.encodeDocIdStream(seg,
-          graft.search.MatchEnum.mergeDistinct(Seq(ids.iterator, oldIt)), bs)
+        val p = Option(prior).map(_._2)
+        val oldIt = p.map(IndexBuilder.docIdStream).getOrElse(Iterator.empty)
+        (IndexBuilder.encodeDocIdStream(seg,
+          graft.search.MatchEnum.mergeDistinct(Seq(ids.iterator, oldIt)), bs),
+          p.map(_.df).getOrElse(0L))
       }
-      .write.mode("overwrite").parquet(out)
-
-    val writtenDead = spark.read.parquet(out)
-      .agg(coalesce(sum("df"), lit(0L))).as[Long].head()
-    val newlyDead = writtenDead - priorDeadCount(spark, indexDir, snap, affected)
-    if (newlyDead == 0) { // every requested id was already dead
-      deleteDir(out)
-      return snap
-    }
-    val neu = snap.copy(id = newId, parent = snap.id,
-      dataDirs = snap.dataDirs :+ rel,
-      deletedDocs = snap.deletedDocs + newlyDead)
-    Snapshot.commit(indexDir, neu)
-    neu
+      .observe(dead, coalesce(sum(col("_1.df")), lit(0L)).as("written"),
+        coalesce(sum(col("_2")), lit(0L)).as("prior"))
+      .map(_._1)
+      .write.mode("overwrite").parquet(s"$indexDir/$rel")
+    // zero when every requested id was already dead
+    val newlyDead = dead.get("written").asInstanceOf[Long] -
+      dead.get("prior").asInstanceOf[Long]
+    commitTombstones(indexDir, snap, rel, newlyDead)
   }
 
   /** Expunge tombstoned docs from the posting lists (the forcemerge-with-
@@ -201,7 +178,7 @@ object Deletes {
     val newId = snap.id + 1
     val rel = f"data/purge-$newId%05d"
 
-    spark.read.parquet(snap.dataDirs.map(d => s"$indexDir/$d"): _*)
+    IndexBuilder.readPostings(spark, snap.dataDirs.map(d => s"$indexDir/$d"))
       .as[PostingRow]
       .withColumn("part",
         element_at(lit(IndexBuilder.bijectionKeys(totalSegs)), col("segId") + 1))
@@ -245,11 +222,10 @@ object Deletes {
         val rel2 = f"docsuggest/purge-$newId%05d"
         val live = IndexBuilder.liveUrlsDF(spark, s"$indexDir/$rel",
           snap.numSegments)
-        spark.read.parquet(snap.docSuggestDirs.map(d => s"$indexDir/$d"): _*)
-          .join(live, Seq("url", "gen"), "left_semi")
-          .sort("gram", "url")
-          .write.mode("overwrite").parquet(s"$indexDir/$rel2")
-        (Seq(rel2), spark.read.parquet(s"$indexDir/$rel2").count())
+        (Seq(rel2), IndexBuilder.writeCounted(
+          spark.read.parquet(snap.docSuggestDirs.map(d => s"$indexDir/$d"): _*)
+            .join(live, Seq("url", "gen"), "left_semi")
+            .sort("gram", "url"), s"$indexDir/$rel2"))
       }
     val neu = snap.copy(id = newId, parent = snap.id,
       numDocs = metas.map(_.docs).sum,

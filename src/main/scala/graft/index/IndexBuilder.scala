@@ -3,9 +3,10 @@ package graft.index
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.analysis.Analyzer
 import graft.search.Bm25
@@ -238,6 +239,30 @@ object IndexBuilder {
 
   def segBase(segId: Int): Long = segId.toLong << SegShift
 
+  private val postingSchema: StructType = Encoders.product[PostingRow].schema
+  private val termdictSchema: StructType =
+    StructType.fromDDL("term STRING, df BIGINT, cf BIGINT, maxTf INT, minDl INT")
+
+  /** Posting rows of committed data dirs, read with their known schema:
+    * a schema-less `spark.read.parquet` runs one footer-inference Spark
+    * job per call, a fixed cost every refresh paid a dozen times.
+    * `Snapshot.at` refuses every format but v2, so the schema is exact. */
+  private[graft] def readPostings(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(postingSchema).parquet(paths: _*)
+
+  /** A committed term dictionary, read with its known schema (see
+    * [[readPostings]]). */
+  private[graft] def readTermdict(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(termdictSchema).parquet(path)
+
+  /** Write `df` and return its row count, observed during the write
+    * instead of re-read from the output by a second job. */
+  private[index] def writeCounted(df: DataFrame, outAbs: String): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("n")).write.mode("overwrite").parquet(outAbs)
+    rows.get("n").asInstanceOf[Long]
+  }
+
   /** Large-cell parquet writer safety, applied by every segment-writing
     * path. parquet-java sizes a column page only after
     * `parquet.page.size.row.check.min` values (default 100) have been
@@ -401,8 +426,7 @@ object IndexBuilder {
       snap: SnapshotMeta, candSegs: Seq[Int]): DataFrame = {
     import spark.implicits._
     val chunkDocs = snap.markerChunkDocs
-    spark.read
-      .parquet(snap.dataDirs.map(d => s"$indexDir/$d"): _*)
+    readPostings(spark, snap.dataDirs.map(d => s"$indexDir/$d"))
       .as[PostingRow]
       // pushed-down marker scan: term equality AND segId-candidate prune
       .filter(col("term") === lit(TermUrls) && col("segId").isin(candSegs: _*))
@@ -714,12 +738,10 @@ object IndexBuilder {
     // never leak into suggestions
     val unesc = udf((t: String) => unsafeTerm(t))
     val ng = udf((t: String) => Analyzer.ngrams(unsafeTerm(t)).distinct)
-    spark.read.parquet(termdictAbs)
+    writeCounted(readTermdict(spark, termdictAbs)
       .select(explode(ng(col("term"))).as("gram"),
         unesc(col("term")).as("term"), col("cf"))
-      .sort("gram", "term")
-      .write.mode("overwrite").parquet(outAbs)
-    spark.read.parquet(outAbs).count()
+      .sort("gram", "term"), outAbs)
   }
 
   /** S11/§2.8 DOC-level completion artifact: the reference assembles a
@@ -745,7 +767,7 @@ object IndexBuilder {
       }
       m.toSeq
     })
-    pages.select(col("url"),
+    writeCounted(pages.select(col("url"),
         // output = the first configured field with a non-empty value (the
         // reference's name-defaulting treats '' as missing: `if not name:
         // name = id`, SearchObjects.py:35-43) — nullif('') makes coalesce
@@ -760,9 +782,7 @@ object IndexBuilder {
           .as("ge"))
       .select(col("ge._1").as("gram"), col("url"), col("output"),
         col("payload"), col("ge._2").as("weight"), lit(gen).as("gen"))
-      .sort("gram", "url")
-      .write.mode("overwrite").parquet(outAbs)
-    spark.read.parquet(outAbs).count()
+      .sort("gram", "url"), outAbs)
   }
 
   /** Live (url, generation) pairs of a (purged) data dir: the url tables
@@ -778,7 +798,7 @@ object IndexBuilder {
     // chunks — the segment's dominant bytes — decode one at a time
     // instead of being buffered whole-segment (the groupByKey/toSeq
     // shape this replaces held ~8 GB in one task at a 10^8-doc segment)
-    spark.read.parquet(absDir).as[PostingRow]
+    readPostings(spark, Seq(absDir)).as[PostingRow]
       .filter(col("term") === lit(TermUrls) || col("term") === lit(TermDels))
       .repartition(col("segId"))
       .sortWithinPartitions(col("segId"),
@@ -848,23 +868,21 @@ object IndexBuilder {
   private[graft] def writeTermdictDelta(
       spark: SparkSession, prevTermdictAbs: String, newDirsAbs: Seq[String],
       outAbs: String, saltBuckets: Int): Long = {
-    val delta = spark.read.parquet(newDirsAbs: _*)
+    val delta = readPostings(spark, newDirsAbs)
       .filter(col("term") > TermDels)
       .select(col("term"), pmod(col("segId"), lit(saltBuckets)).as("salt"),
         col("df"), col("cf"), col("maxTf"), col("minDl"))
-    val prev = spark.read.parquet(prevTermdictAbs)
+    val prev = readTermdict(spark, prevTermdictAbs)
       .select(col("term"), lit(-1).as("salt"),
         col("df"), col("cf"), col("maxTf"), col("minDl"))
-    prev.unionByName(delta)
+    writeCounted(prev.unionByName(delta)
       .groupBy(col("term"), col("salt"))
       .agg(sum("df").as("df"), sum("cf").as("cf"),
         max("maxTf").as("maxTf"), min("minDl").as("minDl"))
       .groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"),
         max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-      .sort("term")
-      .write.mode("overwrite").parquet(outAbs)
-    spark.read.parquet(outAbs).count()
+      .sort("term"), outAbs)
   }
 
   /** Driver-side merge of per-field stats (fields are O(schema), both
@@ -884,7 +902,9 @@ object IndexBuilder {
   private[graft] def writeTermdict(
       spark: SparkSession, absDirs: Seq[String], outAbs: String,
       saltBuckets: Int): Long = {
-    spark.read.parquet(absDirs: _*)
+    // returns the distinct-term count, persisted in SnapshotMeta so the
+    // warm handle's driver-dict admission gate needs no per-open count() job
+    writeCounted(readPostings(spark, absDirs)
       .filter(col("term") > TermDels)
       .select("term", "segId", "df", "cf", "maxTf", "minDl")
       .groupBy(col("term"), pmod(col("segId"), lit(saltBuckets)).as("salt"))
@@ -893,12 +913,7 @@ object IndexBuilder {
       .groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"),
         max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-      .sort("term")
-      .write.mode("overwrite").parquet(outAbs)
-    // distinct-term count, persisted in SnapshotMeta so the warm handle's
-    // driver-dict admission gate needs no per-open count() job (metadata-
-    // cheap here, once, instead of once per IndexHandle)
-    spark.read.parquet(outAbs).count()
+      .sort("term"), outAbs)
   }
 
   /** Per-segment lineage metrics recomputed from a written data dir. The
@@ -908,7 +923,7 @@ object IndexBuilder {
     * never move). */
   private[index] def segmentMetrics(
       spark: SparkSession, absDir: String, rel: String): Seq[SegmentMeta] =
-    spark.read.parquet(absDir)
+    readPostings(spark, Seq(absDir))
       .groupBy("segId").agg(
         sum(when(col("term") === TermLens, col("df")).otherwise(0L)).as("docs"),
         sum(when(col("term") === TermLens, col("cf")).otherwise(0L)).as("sumdl"),
@@ -1156,7 +1171,7 @@ object IndexBuilder {
     * Pushed-down scan of the field-lens marker rows' metadata only. */
   private[graft] def fieldStats(
       spark: SparkSession, absDirs: Seq[String]): Seq[FieldStat] =
-    spark.read.parquet(absDirs: _*)
+    readPostings(spark, absDirs)
       .filter(col("term") > lit(TermLens) && col("term") < lit(TermUrls))
       .groupBy("term").agg(sum("df").as("d"), sum("cf").as("c"))
       .collect()
@@ -1197,7 +1212,7 @@ object IndexBuilder {
     val totalSegs = snap.numSegments * snap.generations
     val newId = snap.id + 1
     val rel = f"data/compact-$newId%05d"
-    spark.read.parquet(snap.dataDirs.map(d => s"$indexDir/$d"): _*)
+    readPostings(spark, snap.dataDirs.map(d => s"$indexDir/$d"))
       .as[PostingRow]
       .withColumn("part",
         element_at(lit(bijectionKeys(totalSegs)), col("segId") + 1))

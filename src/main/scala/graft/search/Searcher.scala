@@ -3,7 +3,7 @@ package graft.search
 import scala.collection.mutable.ArrayBuffer
 import scala.collection.parallel.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
@@ -43,6 +43,20 @@ object Searcher {
       else return mid
     }
     -1
+  }
+
+  /** Balanced OR of `ps`: a left-deep reduce(_ || _) builds an OR tree
+    * whose depth equals |ps|, and a large-k page touching many url chunks
+    * then pays analyzer recursion/optimization cost per level; log depth
+    * keeps the exact-pair semantics (and the parquet pushdown of the
+    * OR-of-conjunctions) with a flat tree. */
+  private[graft] def orTree(ps: IndexedSeq[Column]): Column = {
+    require(ps.nonEmpty, "orTree needs at least one predicate")
+    if (ps.length == 1) ps.head
+    else {
+      val (l, r) = ps.splitAt(ps.length / 2)
+      orTree(l) || orTree(r)
+    }
   }
 
   def topK(spark: SparkSession, indexDir: String, query: String, k: Int): Array[Hit] =
@@ -463,7 +477,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     snap.fieldAvgdl, snap.fieldDefs.filter(_.keyword).map(_.name).toSet)
 
   private val termdict: DataFrame =
-    spark.read.parquet(s"$indexDir/${snap.termdictDir.get}")
+    IndexBuilder.readTermdict(spark, s"$indexDir/${snap.termdictDir.get}")
   // driver-side dictionary for warm handles on sane vocabularies. The
   // admission gate must bound the quantity actually collected (DISTINCT
   // terms) BEFORE the collect — gating on the per-segment term-count sum
@@ -488,7 +502,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
   }
 
   private val postings: Dataset[PostingRow] = {
-    val ds = spark.read.parquet(dataPaths: _*).as[PostingRow]
+    val ds = IndexBuilder.readPostings(spark, dataPaths).as[PostingRow]
     if (warm) {
       // cluster by segment (query path then needs no exchange) and sort by
       // term within partitions: the in-memory columnar cache keeps min/max
@@ -656,19 +670,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
         // (segId IN, chunk IN) cross product, whose superset rows (up to
         // |segs|×|chunks| multi-MB url blobs for k wanted cells) would
         // all cross to the driver before any post-filter could drop them.
-        // BALANCED reduction: a left-deep reduce(_ || _) builds an OR tree
-        // whose depth equals |missing|, and a large-k page touching many
-        // chunks then pays analyzer recursion/optimization cost per level;
-        // log-depth keeps the exact-pair semantics (and the parquet
-        // pushdown of the OR-of-conjunctions) with a flat tree.
-        def orTree(ps: IndexedSeq[org.apache.spark.sql.Column])
-            : org.apache.spark.sql.Column =
-          if (ps.length == 1) ps.head
-          else {
-            val (l, r) = ps.splitAt(ps.length / 2)
-            orTree(l) || orTree(r)
-          }
-        val pred = orTree(missing.toIndexedSeq.map { case (s, ch) =>
+        val pred = Searcher.orTree(missing.toIndexedSeq.map { case (s, ch) =>
           col("segId") === s && col("chunk") === ch
         })
         postings
@@ -942,15 +944,6 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
       .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
   }
 
-  /** Distributed match-enumeration sink (ES delete-by-query at corpus
-    * scale): one CONSOLIDATED TermDels row per segment with >= 1 NEW match
-    * — prior tombstones of that segment merged in (streaming k-way merge;
-    * exclusion cursors already keep dead docs out of the match set). The
-    * match set never touches the driver: enumeration, merge and varint
-    * encode all happen inside the per-segment task, and the returned
-    * Dataset is written straight to the tombstone dir. Segments with no
-    * new match emit nothing (their prior rows stay referenced in the old
-    * data dirs). */
   /** Shared preamble of the three match-enumeration surfaces
     * (matchTombstoneRows / countMatches / matchesDF): compile, candidate
     * -segment prune, marker-aware shuffled-term list, and the
@@ -1036,11 +1029,23 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     })
   }
 
-  private[graft] def matchTombstoneRows(q: BoolQuery): Dataset[PostingRow] = {
+  /** Distributed match-enumeration sink (ES delete-by-query at corpus
+    * scale): one CONSOLIDATED TermDels row per segment with >= 1 NEW match
+    * — prior tombstones of that segment merged in (streaming k-way merge;
+    * exclusion cursors already keep dead docs out of the match set) —
+    * paired with that segment's count of new matches, the docs the row
+    * newly kills. The match set never touches the driver: enumeration,
+    * merge and varint encode all happen inside the per-segment task, and
+    * the returned Dataset is written straight to the tombstone dir.
+    * Segments with no new match emit nothing (their prior rows stay
+    * referenced in the old data dirs). */
+  private[graft] def matchTombstoneRows(q: BoolQuery): Dataset[(PostingRow, Long)] = {
     import spark.implicits._
-    enumeratePerSegment[PostingRow](q, extraMarker = None) {
+    enumeratePerSegment[(PostingRow, Long)](q, extraMarker = None) {
       (c, segId, bs, _, dels, terms) =>
-        val matches = MatchEnum.enumerate(segId, terms, dels, c, bs).buffered
+        var fresh = 0L
+        val matches = MatchEnum.enumerate(segId, terms, dels, c, bs)
+          .map { d => fresh += 1; d }.buffered
         if (!matches.hasNext) Iterator.empty
         else {
           // prior tombstones stream off their compressed bytes
@@ -1050,9 +1055,10 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
           // this sink exists for
           val merged = MatchEnum.mergeDistinct(
             matches +: dels.map(IndexBuilder.docIdStream))
-          Iterator.single(IndexBuilder.encodeDocIdStream(segId, merged, bs))
+          val row = IndexBuilder.encodeDocIdStream(segId, merged, bs)
+          Iterator.single((row, fresh))
         }
-    }.getOrElse(spark.emptyDataset[PostingRow])
+    }.getOrElse(spark.emptyDataset[(PostingRow, Long)])
   }
 
   /** Segments that can possibly hold a match for `c`: those with at least

@@ -93,8 +93,8 @@ object IndexStream {
     val topGen = snap.generations - 1
     val committedTop = snap.completedSegIds.filter(_ >= topGen * P).toSeq
     if (committedTop.isEmpty) return true // nothing committed constrains the batch
-    val segUrls = spark.read
-      .parquet(snap.dataDirs.map(d => s"$indexDir/$d"): _*)
+    val segUrls = IndexBuilder.readPostings(spark,
+        snap.dataDirs.map(d => s"$indexDir/$d"))
       .filter(col("segId").isin(committedTop: _*) &&
         col("term") === IndexBuilder.TermUrls)
       .as[graft.index.PostingRow]
@@ -123,8 +123,8 @@ object IndexStream {
         val seg = (snap.generations - 1) * snap.numSegments +
           Hashing.segmentOf(url, snap.numSegments)
         snap.completedSegIds.contains(seg) && {
-          spark.read
-            .parquet(snap.dataDirs.map(d => s"$indexDir/$d"): _*)
+          IndexBuilder.readPostings(spark,
+              snap.dataDirs.map(d => s"$indexDir/$d"))
             .filter(col("segId") === seg &&
               col("term") === IndexBuilder.TermUrls)
             .as[graft.index.PostingRow]

@@ -215,4 +215,31 @@ class BoolQuerySpec extends SparkSuite {
       assert(handle.search(q, docs.size + 1).length.toLong === want, q)
     }
   }
+
+  test("orTree: balanced OR of the given predicates; refuses an empty input") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Or}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.functions.col
+    intercept[IllegalArgumentException](Searcher.orTree(IndexedSeq.empty))
+    // (depth, leaf count) of the OR tree, asserting every OR node splits
+    // its leaves evenly (sizes differ by at most one)
+    def shape(e: Expression): (Int, Int) = e match {
+      case Or(l, r) =>
+        val (dl, nl) = shape(l)
+        val (dr, nr) = shape(r)
+        assert(math.abs(nl - nr) <= 1, s"unbalanced OR node: $e")
+        (1 + math.max(dl, dr), nl + nr)
+      case _ => (0, 1)
+    }
+    Seq(1 -> 0, 2 -> 1, 7 -> 3).foreach { case (n, depth) =>
+      val ids = (0 until n).map(i => 3L * i)
+      val df = spark.range(30).filter(
+        Searcher.orTree(ids.map(i => col("id") === i)))
+      val cond = df.queryExecution.analyzed.collectFirst {
+        case f: Filter => f.condition
+      }.get
+      assert(shape(cond) === ((depth, n)), s"n=$n: $cond")
+      assert(df.as[Long].collect().toSet === ids.toSet, s"n=$n")
+    }
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.analysis.Analyzer
 import graft.corpus.Corpus
 import graft.index.{Deletes, IndexBuilder, IndexConfig, Snapshot}
@@ -251,5 +253,72 @@ class DeleteSpec extends SparkSuite {
     val liveUrl = live.head._1
     assert(Searcher.search(spark, dir,
       BoolQuery(ids = Some(Seq(liveUrl))), 10).map(_.url).toSeq === Seq(liveUrl))
+  }
+
+  test("refresh job budget: delete and warm open, no schema inference") {
+    val dir = freshIndex()
+    val victims = docs.map(_._1).take(25)
+    val (_, del) = JobLog.of(spark)(Deletes.delete(spark, dir, victims))
+    val (h, open) = JobLog.of(spark)(new IndexHandle(spark, dir, warm = true))
+    h.close()
+    info(s"delete ${del.count} jobs, warm open ${open.count} jobs")
+    assert(del.schemaInference.isEmpty && open.schemaInference.isEmpty,
+      s"schema-inference jobs:\n$del\n--\n$open")
+    assert(del.count <= 3, s"delete jobs:\n$del")
+    assert(open.count <= 5, s"warm open jobs:\n$open")
+  }
+
+  test("dead-doc accounting: both tombstone writers count only newly dead docs") {
+    // brute force from the fixture: deletedDocs must equal |dead urls|
+    // after each call, and a call that kills nothing new commits nothing
+    // and leaves no tombstone dir behind
+    def delDirs(dir: String): Set[String] = {
+      val ls = Files.list(java.nio.file.Paths.get(dir, "data"))
+      try ls.iterator().asScala.map(p => s"data/${p.getFileName}")
+        .filter(_.startsWith("data/del-")).toSet
+      finally ls.close()
+    }
+    def checkCommitted(dir: String, dead: Set[String]): Unit = {
+      val snap = Snapshot.latest(dir).get
+      assert(snap.deletedDocs === dead.size.toLong)
+      assert(delDirs(dir) === snap.dataDirs.filter(_.startsWith("data/del-")).toSet)
+    }
+    val urls = docs.map(_._1)
+
+    // by url (deleteDocIds): all new, then a mix, then all already dead
+    val d1 = freshIndex()
+    val first = urls.take(30).toSet
+    Deletes.delete(spark, d1, first.toSeq)
+    checkCommitted(d1, first)
+    val mixed = urls.slice(20, 50).toSet // 10 dead, 20 new
+    Deletes.delete(spark, d1, mixed.toSeq)
+    checkCommitted(d1, first ++ mixed)
+    val before1 = Snapshot.latest(d1).get
+    assert(Deletes.delete(spark, d1, urls.slice(10, 40)).id === before1.id)
+    assert(Snapshot.latest(d1).get.id === before1.id)
+    checkCommitted(d1, first ++ mixed)
+
+    // by query (deleteByQuery): all new, then a mix, then all already dead
+    val d2 = freshIndex()
+    val data = urlsContaining("data")
+    Deletes.deleteByQuery(spark, d2, BoolQuery(filter = Seq("data")))
+    checkCommitted(d2, data)
+    val merge = urlsContaining("merge")
+    assert(merge.intersect(data).nonEmpty && merge.diff(data).nonEmpty)
+    Deletes.deleteByQuery(spark, d2, BoolQuery(filter = Seq("merge")))
+    checkCommitted(d2, data ++ merge)
+    val before2 = Snapshot.latest(d2).get
+    assert(Deletes.deleteByQuery(spark, d2, BoolQuery(filter = Seq("merge"))).id
+      === before2.id)
+    // every match of this query is dead already, through the other writer
+    assert(urlsContaining("sort").diff(data ++ merge).nonEmpty)
+    Deletes.delete(spark, d2, urlsContaining("sort").toSeq)
+    val dead2 = data ++ merge ++ urlsContaining("sort")
+    checkCommitted(d2, dead2)
+    val before3 = Snapshot.latest(d2).get
+    assert(Deletes.deleteByQuery(spark, d2, BoolQuery(filter = Seq("sort"))).id
+      === before3.id)
+    checkCommitted(d2, dead2)
+    assert(Searcher.count(spark, d2, BoolQuery(filter = Seq("sort"))) === 0L)
   }
 }

@@ -197,4 +197,20 @@ class UpsertSpec extends SparkSuite {
       assert(marker.nonEmpty)
     } finally latest.close()
   }
+
+  test("refresh job budget: upsert and warm open, no schema inference") {
+    // deterministic counters behind the refresh wall-clock: every index
+    // read carries its known schema (no footer-inference job) and every
+    // commit count is observed during its write (no read-back job)
+    val dir = freshIndex()
+    val batch = recrawl.toDF("url", "text")
+    val (_, up) = JobLog.of(spark)(IndexBuilder.upsert(spark, batch, dir))
+    val (h, open) = JobLog.of(spark)(new IndexHandle(spark, dir, warm = true))
+    h.close()
+    info(s"upsert ${up.count} jobs, warm open ${open.count} jobs")
+    assert(up.schemaInference.isEmpty && open.schemaInference.isEmpty,
+      s"schema-inference jobs:\n$up\n--\n$open")
+    assert(up.count <= 16, s"upsert jobs:\n$up")
+    assert(open.count <= 5, s"warm open jobs:\n$open")
+  }
 }
