@@ -235,29 +235,34 @@ object Snapshot {
 
   def latest(indexDir: String): Option[SnapshotMeta] = {
     val ptr = snapsDir(indexDir).resolve("LATEST")
-    // between reading LATEST and opening its snap file, a concurrent
-    // commit+vacuum can advance the pointer and reclaim the snap we were
-    // about to open — re-read until the open succeeds or the pointer
-    // reads the SAME id twice in a row (a stable pointer whose snap file
-    // is missing is real corruption, not a race; and commits only ever
-    // advance the id, so the loop is bounded by commit progress)
+    latestVia(
+      () => if (Files.exists(ptr)) Some(Files.readString(ptr).trim.toInt) else None,
+      // a vacuum deleting the snap between at()'s exists-check and its
+      // read is the same race in a narrower window — retryable miss
+      id => try at(indexDir, id)
+            catch { case _: java.nio.file.NoSuchFileException => None })
+  }
+
+  /** The retry loop of `latest`, over a pointer reader and a snap opener
+    * (the seam a spec drives). Between reading LATEST and opening its snap
+    * file, a concurrent commit+vacuum can advance the pointer and reclaim
+    * the snap we were about to open, so re-read until the open succeeds or
+    * the pointer names an id already tried: a revisited id whose snap file
+    * is missing is corruption (or a pointer that oscillates), not a race.
+    * Every retry adds a new id to `seen`, so the loop makes at most one
+    * retry per distinct id the pointer names. */
+  private[graft] def latestVia(readPointer: () => Option[Int],
+      open: Int => Option[SnapshotMeta]): Option[SnapshotMeta] = {
     @annotation.tailrec
-    def loop(prevId: Int): Option[SnapshotMeta] =
-      if (!Files.exists(ptr)) None
-      else {
-        val id = Files.readString(ptr).trim.toInt
-        // a vacuum deleting the snap between at()'s exists-check and its
-        // read is the same race in a narrower window — retryable miss
-        val opened =
-          try at(indexDir, id)
-          catch { case _: java.nio.file.NoSuchFileException => None }
-        opened match {
-          case some @ Some(_) => some
-          case None if id != prevId => loop(id)
-          case None => None
-        }
+    def loop(seen: Set[Int]): Option[SnapshotMeta] = readPointer() match {
+      case None => None
+      case Some(id) => open(id) match {
+        case some @ Some(_) => some
+        case None if !seen(id) => loop(seen + id)
+        case None => None
       }
-    loop(Int.MinValue)
+    }
+    loop(Set.empty)
   }
 
   /** Time travel: read a specific committed snapshot by id. Data dirs of

@@ -416,46 +416,24 @@ private[graft] object MatchEnum {
 
 /** A queryable snapshot. With `warm = true` the posting table is
   * re-clustered by segment and persisted in executor memory, and the term
-  * dictionary is collected to a driver map (bounded by `dictLimit`), so a
+  * dictionary is collected to a driver map (bounded by `DictLimit`), so a
   * steady-state query is ONE shuffle-free Spark job: filter the cached
   * postings (predicate pushdown / in-memory batch pruning on `term`) ->
   * per-partition scoring over the colocated segments -> global
   * TakeOrderedAndProject. The cold path (warm = false) reads parquet
-  * directly and probes the dictionary with a pushed-down filter instead. */
+  * directly and probes the dictionary with a pushed-down filter instead.
+  *
+  * Standard Spark cache-sharing caveat: two warm handles on the same index
+  * and session produce the SAME logical plan, so the second reuses the
+  * first's cache, and close() on EITHER handle unpersists the shared cache
+  * for both. One warm handle per (session, index) is the intended
+  * deployment. */
 final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = true,
-    dictLimit: Long = 2000000,
     // time travel: pin the handle to a specific committed snapshot id
     // instead of LATEST (Iceberg `VERSION AS OF`); readers holding a pinned
     // handle are isolated from concurrent append/delete/upsert commits,
     // whose data dirs stay readable until a vacuum
-    snapshotId: Option[Int] = None,
-    // warm-cache task granularity: how many partitions the cached posting
-    // table is clustered into. Default = min(totalSegments,
-    // spark.sql.shuffle.partitions / 2): per-query scoring tasks are
-    // short, so halving the task count halves the per-query scheduling
-    // floor while keeping the cores busy — measured on a 2M-doc/256-seg
-    // index at local[32], 32 -> 16 partitions cut warm p50 from ~128 to
-    // ~80 ms (tools/LatencyProbe). Per-partition grouping in the query
-    // path is correct at ANY value (segments never split across
-    // partitions).
-    warmPartitions: Option[Int] = None,
-    // in-memory columnar batch size used for the warm posting cache.
-    // Posting rows carry multi-KB..MB compressed blobs, and a cached batch
-    // decompresses WHOLESALE when any of its rows match — at the default
-    // 10k rows/batch a 3-term query decodes tens of MB per touched batch
-    // for three needed rows. 1k keeps batch decode proportional to what
-    // the query reads and tightens min/max term pruning 10x (measured
-    // ~214 -> ~128 ms p50 at 32 partitions, LatencyProbe).
-    //
-    // Standard Spark cache-sharing caveat, stated so the knobs don't
-    // overpromise: two warm handles on the same index + session +
-    // partition count produce the SAME logical plan, so the second reuses
-    // the first's cache — its cacheBatchSize is then a no-op (different
-    // warmPartitions values do split caches), and close() on EITHER
-    // handle unpersists the shared cache for both. One warm handle per
-    // (session, index) is the intended deployment (LatencyProbe restarts
-    // the session per probe for exactly this reason).
-    cacheBatchSize: Int = 1000) {
+    snapshotId: Option[Int] = None) {
   import spark.implicits._
 
   val snap: SnapshotMeta = snapshotId
@@ -478,10 +456,12 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
 
   private val termdict: DataFrame =
     IndexBuilder.readTermdict(spark, s"$indexDir/${snap.termdictDir.get}")
-  // driver-side dictionary for warm handles on sane vocabularies. The
-  // admission gate must bound the quantity actually collected (DISTINCT
+  // driver-side dictionary for warm handles on sane vocabularies: at most
+  // this many distinct terms are collected to the driver
+  private val DictLimit = 2000000L
+  // The admission gate must bound the quantity actually collected (DISTINCT
   // terms) BEFORE the collect — gating on the per-segment term-count sum
-  // admits up to dictLimit x P rows when the vocabulary is mostly
+  // admits up to DictLimit x P rows when the vocabulary is mostly
   // segment-local (Zipf tail), a driver OOM. The distinct-term count is
   // persisted in the snapshot at termdict-write time, so a warm open
   // issues no count() job (it was metadata-cheap but still one Spark job
@@ -495,7 +475,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     def termCount =
       if (snap.termdictRows >= 0) snap.termdictRows
       else { usedTermdictCountFallback = true; termdict.count() }
-    if (warm && termCount <= dictLimit) {
+    if (warm && termCount <= DictLimit) {
       Some(termdict.select("term", "df").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap)
     } else None
@@ -507,14 +487,27 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
       // cluster by segment (query path then needs no exchange) and sort by
       // term within partitions: the in-memory columnar cache keeps min/max
       // stats per batch, so the per-query term filter prunes whole batches
-      // instead of decompressing every posting blob
-      // derive the default from shuffle.partitions (stable, user-tunable),
-      // NOT defaultParallelism — under dynamic allocation the latter can
-      // read 2 before executors register and would collapse the cache to
-      // one partition for the handle's lifetime
-      val parts = warmPartitions.getOrElse(math.max(1, math.min(
-        snap.numSegments * snap.generations,
-        spark.sessionState.conf.numShufflePartitions / 2)))
+      // instead of decompressing every posting blob.
+      // Partition count min(totalSegments, shuffle.partitions / 2):
+      // per-query scoring tasks are short, so halving the task count
+      // halves the per-query scheduling floor while keeping the cores
+      // busy — measured on a 2M-doc/256-seg index at local[32], 32 -> 16
+      // partitions cut warm p50 from ~128 to ~80 ms. Per-partition
+      // grouping in the query path is correct at ANY value (segments never
+      // split across partitions). Derived from shuffle.partitions (stable,
+      // user-tunable), NOT defaultParallelism — under dynamic allocation
+      // the latter can read 2 before executors register and would
+      // collapse the cache to one partition for the handle's lifetime.
+      val parts = math.max(1, math.min(snap.numSegments * snap.generations,
+        spark.sessionState.conf.numShufflePartitions / 2))
+      // In-memory columnar batch size of the cache. Posting rows carry
+      // multi-KB..MB compressed blobs, and a cached batch decompresses
+      // WHOLESALE when any of its rows match — at Spark's default 10k
+      // rows/batch a 3-term query decodes tens of MB per touched batch for
+      // three needed rows. 1k keeps batch decode proportional to what the
+      // query reads and tightens min/max term pruning 10x (measured ~214 ->
+      // ~128 ms p50 at 32 partitions).
+      val cacheBatchRows = 1000
       // the batch-size conf is read when the InMemoryRelation is built;
       // set it for this cache only and restore right after
       // materialization. The save/set/restore triple is serialized by a
@@ -523,7 +516,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
       Searcher.cacheBuildLock.synchronized {
         val key = "spark.sql.inMemoryColumnarStorage.batchSize"
         val prev = spark.conf.getOption(key)
-        spark.conf.set(key, cacheBatchSize.toString)
+        spark.conf.set(key, cacheBatchRows.toString)
         try {
           val c = ds.repartition(parts, col("segId"))
             .sortWithinPartitions("term", "segId").cache()

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Round-6 optimization harness (guide §1): per-query timing with REPEATS
   * and plan capture, WITHOUT touching the frozen `graft.Bench` contract.
@@ -16,6 +16,10 @@ import org.apache.spark.sql.SparkSession
   *  - `GRAFT_EXTRA_PLANS=/path` dumps `.explain("formatted")` per query
   *    (the `plans/r06/` evidence files);
   *  - `GRAFT_EXTRA_ONLY=q11,q29` restricts the sweep while iterating.
+  *
+  * A failed prewarm, query or explain ends the run with a non-zero exit and
+  * an error naming the query: a total that silently leaves a query out
+  * compares nothing.
   *
   * Emits one JSON line: {"metric":"extra", "queries":{...}, "queries_med":{...}}.
   */
@@ -40,40 +44,34 @@ object BenchExtra {
         "q33_ids_filter", "q39_delete_search", "q40_purge_search",
         "q41_upsert_search", "q49_fetch_source", "q51_field_search",
         "q57_scan_midsize")
+      // run one step of query `name`, rethrowing its failure with the name
+      def step[T](what: String, name: String)(body: => T): T =
+        try body catch { case NonFatal(e) =>
+          throw new IllegalStateException(s"$name $what failed", e) }
+      def countSec(what: String, name: String): Double = step(what, name) {
+        val fn = graft.SparkEntry.queries(name)
+        BenchHarness.timed(fn(spark, sfDir).count())._2
+      }
       spark.sparkContext.setJobDescription("prewarm")
-      graft.SparkEntry.queries.get("q01_pricing_summary")
-        .foreach(fn => try fn(spark, sfDir).count() catch { case _: Throwable => () })
+      countSec("prewarm", "q01_pricing_summary")
       val prewarm = indexBacked.filter(n => only.forall(_.exists(n.startsWith)))
-        .flatMap(name => graft.SparkEntry.queries.get(name).map { fn =>
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-                   catch { case e: Throwable =>
-                     System.err.println(s"$name prewarm FAILED: $e"); false }
-          name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-        })
+        .map(name => name -> countSec("prewarm", name))
       plansDir.foreach { pd =>
         Files.createDirectories(Paths.get(pd))
         names.foreach { name =>
-          try {
+          step("explain", name) {
             val df = graft.SparkEntry.queries(name)(spark, sfDir)
             Files.write(Paths.get(pd, s"$name$suffix.txt"),
               df.queryExecution.explainString(
                 org.apache.spark.sql.execution.FormattedMode)
                 .getBytes("UTF-8"))
-          } catch { case e: Throwable =>
-            System.err.println(s"$name explain FAILED: $e")
           }
         }
       }
       val samples = (1 to reps).map { r =>
         names.map { name =>
           spark.sparkContext.setJobDescription(s"$name rep$r")
-          val fn = graft.SparkEntry.queries(name)
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-                   catch { case e: Throwable =>
-                     System.err.println(s"$name FAILED: $e"); false }
-          name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+          name -> countSec("query", name)
         }.toMap
       }
       def fmt(m: Map[String, Double]): String =
@@ -82,7 +80,7 @@ object BenchExtra {
       val meds = names.map(n => n -> BenchHarness.median(samples.map(_(n)))).toMap
       val pw = prewarm.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
         .mkString("{", ",", "}")
-      println(s"""{"metric":"extra","reps":$reps,"prewarm":$pw,"queries_min":${fmt(mins)},"queries_med":${fmt(meds)},"total_min":${"%.3f".format(mins.values.filter(_ >= 0).sum)}}""")
+      println(s"""{"metric":"extra","reps":$reps,"prewarm":$pw,"queries_min":${fmt(mins)},"queries_med":${fmt(meds)},"total_min":${"%.3f".format(mins.values.sum)}}""")
     } finally {
       spark.stop()
       BenchHarness.deleteDir(base)

@@ -6,12 +6,10 @@ import org.apache.spark.sql.SparkSession
 
 import graft.corpus.Corpus
 
-/** Shared plumbing for the benchmark/probe mains (Bench, ScalingProbe,
-  * BuildBench, LatencyProbe, BigSmoke, ServeBench). Each of these tools
-  * independently re-derived the same three traps — the /dev/shm fallback,
-  * the _SUCCESS-guarded one-time corpus staging, and the
-  * clear-then-rebuild session restart — and at least one had already
-  * drifted. One home ends that. */
+/** Shared plumbing for `graft.Bench`, the perfbench workloads and the
+  * tool mains: the /dev/shm fallback, the _SUCCESS-guarded one-time corpus
+  * staging, the clear-then-rebuild session restart, timing, percentiles
+  * and the machine-speed canary, each defined once. */
 object BenchHarness {
 
   /** RAM-backed work root (stand-in for a cluster node's local NVMe);
@@ -114,10 +112,10 @@ object BenchHarness {
     * the ceil(p/100*n)-th order statistic — index ceil(...)−1. The naive
     * (n*p)/100 index reads the MAXIMUM as "p95" at n=20, which on a noisy
     * shared host reports exactly the outlier a percentile exists to
-    * exclude. ONE definition for every benchmark (Bench, ServeBench,
-    * LatencyProbe) so cross-tool p50/p95 comparisons compare the same
-    * order statistic. Empty samples are a caller bug — fail loudly, not
-    * with an opaque IndexOutOfBounds. */
+    * exclude. ONE definition for every benchmark (Bench, perfbench) so
+    * cross-tool p50/p95 comparisons compare the same order statistic.
+    * Empty samples are a caller bug — fail loudly, not with an opaque
+    * IndexOutOfBounds. */
   def pctl(sorted: Seq[Double], p: Int): Double = {
     require(sorted.nonEmpty, s"pctl(p=$p) over an empty sample")
     sorted(math.ceil(p / 100.0 * sorted.length).toInt - 1)

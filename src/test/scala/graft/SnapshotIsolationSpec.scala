@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 import graft.index.{IndexBuilder, IndexConfig, Snapshot}
 import graft.search.IndexHandle
@@ -72,5 +76,32 @@ class SnapshotIsolationSpec extends SparkSuite {
     assert(Snapshot.latest(dir).get.id === committed.id)
     assert(Snapshot.list(dir).map(_.id) === Seq(committed.id),
       "orphan snap file leaked into the committed history")
+  }
+
+  test("latest ends when the pointer revisits an id whose snap file is missing") {
+    // LATEST oscillates 2, 1, 2, 1, ... and neither snap file exists. No
+    // two reads in a row agree, so a loop that stops only on an immediate
+    // repeat never ends; the timeout bounds that case here
+    val reads = new AtomicInteger(0)
+    @volatile var abandoned = false
+    val pointer = () => {
+      if (abandoned) throw new IllegalStateException("abandoned by the test")
+      Some(1 + reads.incrementAndGet() % 2)
+    }
+    val result = Future(Snapshot.latestVia(pointer, _ => None))(ExecutionContext.global)
+    try assert(Await.result(result, 10.seconds) === None)
+    finally abandoned = true
+    assert(reads.get === 3) // 2, 1, then the revisited 2
+  }
+
+  test("latest retries past a pointer that moved on to a newer snapshot") {
+    val dir = Files.createTempDirectory("graft-latest").toString
+    val snap = IndexBuilder.build(spark, Seq(("doc://0", "alpha")).toDF("url", "text"),
+      dir, IndexConfig(numSegments = 1, blockSize = 4))
+    // the first read names a snap that a vacuum has already reclaimed
+    val ids = Iterator(snap.id + 7, snap.id)
+    assert(Snapshot.latestVia(() => Some(ids.next()), Snapshot.at(dir, _))
+      .map(_.id) === Some(snap.id))
+    assert(Snapshot.latestVia(() => None, Snapshot.at(dir, _)) === None)
   }
 }

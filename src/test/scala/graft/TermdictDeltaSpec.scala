@@ -15,7 +15,7 @@ import graft.index.{Deletes, FieldDef, IndexBuilder, IndexConfig, Snapshot}
   *      tombstones (df keeps dead docs until purge) and post-purge
   *      appends;
   *   2. PLAN — the commit actually took the delta path (the structural
-  *      guard; timing lives in tools/UpsertFlatProbe), falling back to
+  *      guard; timing lives in the perfbench `update` workload), falling back to
   *      the full scan exactly where it must (first build, resume from a
   *      partial commit that carries no termdict). */
 class TermdictDeltaSpec extends SparkSuite {

@@ -33,8 +33,9 @@ class UpsertSpec extends SparkSuite {
   test("upsert candidate segments stay batch-bounded as the index grows") {
     // the regression guard for streaming-upsert flatness: the marker scan
     // reads exactly |distinct s0(batch urls)| x generations segments —
-    // O(batch x generations), NEVER O(index). Timing lives in
-    // tools/UpsertFlatProbe; this pins the count formula.
+    // O(batch x generations), NEVER O(index). Timing lives in the
+    // perfbench `update` workload (refresh cost on 2000-, 8000- and
+    // 16000-page bases, perfbench/README.md); this pins the count formula.
     val dir = freshIndex()
     val batchUrls = docs.take(7).map(_._1)
     val batch = batchUrls.map(u => (u, "probe text")).toDF("url", "text")
