@@ -82,8 +82,8 @@ case class IndexConfig(
   * allocation. Chunking invariant: every non-final chunk holds EXACTLY
   * markerChunkDocs slots, so chunk c's first rank is c·markerChunkDocs —
   * readers (upsert's marker scan, the scan/scroll rank-lockstep walk)
-  * derive rank bases per row with no cross-row state. Purge preserves the
-  * invariant (dead rank slots stay in the tables so docIds never move).
+  * derive rank bases per row with no cross-row state. A merge rewrites the
+  * tables densely over the live documents, so it keeps the invariant.
   * `chunk` is 0 for posting and tombstone rows.
   */
 case class PostingRow(
@@ -106,6 +106,11 @@ case class PostingRow(
   * sort ahead of every real term within their segment. */
 case class TokRow(
     segId: Int, term: String, docId: Long, tf: Int, doclen: Int, url: String)
+
+/** Row shape entering the merge ([[IndexBuilder.compact]]): a stored
+  * posting or marker row (`url` null), or one url-table slot with its old
+  * docId (`row` null). */
+case class MergeRow(segId: Int, url: String, docId: Long, row: PostingRow)
 
 /** From-scratch distributed inverted-index build (the half the reference
   * delegates to Elasticsearch — SURVEY.md §2.8). Document-partitioned
@@ -191,7 +196,7 @@ object IndexBuilder {
     * TermDels -- is NOT guaranteed by the analyzer alone: word_delimiter's
     * preserve_original keeps the raw lowercased whitespace token, so crawl
     * text containing control bytes can emit tokens (e.g. "\u0001abc")
-    * that sort below or between the markers, corrupting purge's
+    * that sort below or between the markers, corrupting the merge's
     * sorted-stream walk and the termdict's `> TermDels` filter. Fix at the
     * index boundary: any term whose first character is <= '\u0003' is
     * stored behind a '\u0003' escape prefix (terms already starting with
@@ -430,14 +435,17 @@ object IndexBuilder {
       .as[PostingRow]
       // pushed-down marker scan: term equality AND segId-candidate prune
       .filter(col("term") === lit(TermUrls) && col("segId").isin(candSegs: _*))
-      .flatMap { r =>
-        // chunk c's first rank is c*markerChunkDocs (chunking invariant) —
-        // each chunk row maps to docIds independently, no cross-row state
-        val base = segBase(r.segId) + r.chunk.toLong * chunkDocs
-        Varint.decodeStrings(r.tfBytes).iterator.zipWithIndex
-          .map { case (u, i) => (r.segId, u, base + i + 1) }
-      }
+      .flatMap(r => chunkUrls(r, chunkDocs).map { case (u, d) => (r.segId, u, d) })
       .toDF("segId", "url", "docId")
+  }
+
+  /** (url, docId) of every slot of one url-table chunk row, dead slots
+    * included. Chunk c's first rank is c*markerChunkDocs (chunking
+    * invariant), so each chunk row maps to docIds with no cross-row state. */
+  private def chunkUrls(r: PostingRow, chunkDocs: Int): Iterator[(String, Long)] = {
+    val base = segBase(r.segId) + r.chunk.toLong * chunkDocs
+    Varint.decodeStrings(r.tfBytes).iterator.zipWithIndex
+      .map { case (u, i) => (u, base + i + 1) }
   }
 
   /** Recrawl/update (ES index-with-same-_id, Iceberg merge-on-read): every
@@ -445,9 +453,9 @@ object IndexBuilder {
     * the batch is appended as a fresh generation — two snapshot commits,
     * latest version wins for search and `ids` lookups. Contract: one row
     * per url in the batch (a duplicated url would index twice). Existing
-    * postings are never rewritten (that is `Deletes.purge`'s job) and —
-    * like ES between a delete and a merge — N/avgdl/df keep counting the
-    * replaced versions until a purge. The old-docId resolution is a
+    * postings are never rewritten (that is [[compact]]'s job, the merge)
+    * and — like ES between a delete and a merge — N/avgdl/df keep counting
+    * the replaced versions until a merge. The old-docId resolution is a
     * distributed join of the batch's urls against the per-segment url
     * tables of the CANDIDATE segments only (see [[upsertCandidateSegs]] —
     * the scan is batch-bounded, not index-bounded); only the MATCHED
@@ -785,20 +793,20 @@ object IndexBuilder {
       .sort("gram", "url"), outAbs)
   }
 
-  /** Live (url, generation) pairs of a (purged) data dir: the url tables
-    * minus tombstoned ranks, enumerated executor-side per segment. An
-    * upserted url's OLD docId is tombstoned, so each live url surfaces
-    * exactly with its CURRENT generation — the doc-suggest purge filter
-    * joins on both columns to drop superseded-generation rows. */
+  /** Live (url, generation) pairs of data dirs: the url tables minus
+    * tombstoned ranks, enumerated executor-side per segment. An upserted
+    * url's OLD docId is tombstoned, so each live url surfaces exactly with
+    * its CURRENT generation — the merge's doc-suggest filter joins on both
+    * columns to drop superseded-generation rows. */
   private[index] def liveUrlsDF(
-      spark: SparkSession, absDir: String, numSegments: Int): DataFrame = {
+      spark: SparkSession, absDirs: Seq[String], numSegments: Int): DataFrame = {
     import spark.implicits._
     // sort each partition (segId, tombstones-first, chunk): the dead
     // bitset is complete before the first url chunk arrives, so the url
     // chunks — the segment's dominant bytes — decode one at a time
     // instead of being buffered whole-segment (the groupByKey/toSeq
     // shape this replaces held ~8 GB in one task at a 10^8-doc segment)
-    readPostings(spark, Seq(absDir)).as[PostingRow]
+    readPostings(spark, absDirs).as[PostingRow]
       .filter(col("term") === lit(TermUrls) || col("term") === lit(TermDels))
       .repartition(col("segId"))
       .sortWithinPartitions(col("segId"),
@@ -860,8 +868,8 @@ object IndexBuilder {
     * O(segments x vocab) — the round-4 "index-shaped residual" in the
     * streaming upsert loop. Tombstone rows (term <= TermDels) contribute
     * nothing on either path, matching the df-includes-deleted semantics
-    * the termdict keeps until purge; purge itself rewrites the single
-    * surviving dir and takes the full path. The prior's rows ride one
+    * the termdict keeps until a merge; the merge writes one fresh dir and
+    * takes the full path. The prior's rows ride one
     * reserved salt bucket (-1): they are already one-row-per-term, so the
     * Zipf head-term skew the salting defends against cannot come from
     * them, only from the (bounded, <= P segments) new-dir partials. */
@@ -917,10 +925,9 @@ object IndexBuilder {
   }
 
   /** Per-segment lineage metrics recomputed from a written data dir. The
-    * TermLens rows' (df, cf) carry (live docs, live doclen sum) per chunk —
-    * summing to the url-table length for never-purged segments, smaller
-    * after a purge (dead rank slots stay in the tables so surviving docIds
-    * never move). */
+    * TermLens rows' (df, cf) carry (docs, doclen sum) per chunk, so `docs`
+    * is the url-table length: a build and a merge both write dense tables
+    * (tombstoned docs keep counting until a merge drops them). */
   private[index] def segmentMetrics(
       spark: SparkSession, absDir: String, rel: String): Seq[SegmentMeta] =
     readPostings(spark, Seq(absDir))
@@ -1130,7 +1137,7 @@ object IndexBuilder {
   /** Lazy docId stream over one posting row — decodes the contiguous
     * delta stream sequentially without materializing the list. The
     * counterpart of [[encodeDocIdStream]] for READING corpus-sized
-    * tombstone rows (delete-by-query prior counts, purge bitset fills):
+    * tombstone rows (delete-by-query prior counts, merge bitset fills):
     * [[decodePostings]] would allocate 8 bytes per covered doc in-task,
     * an executor-OOM risk right after a prior mass delete. */
   private[graft] def docIdStream(r: PostingRow): Iterator[Long] =
@@ -1149,7 +1156,7 @@ object IndexBuilder {
 
   /** Lazy (docId, tf) stream over one posting row — the streaming
     * counterpart of [[decodePostings]] for REWRITING corpus-sized rows
-    * (purge re-encode): a stopword term's row can cover ~all docs of a
+    * (the merge re-encode): a stopword term's row can cover ~all docs of a
     * segment, and decodePostings would allocate O(df) Long/Int arrays
     * in-task. Pairs with [[encodeRun]] for an O(block) rewrite. */
   private[graft] def postingStream(r: PostingRow): Iterator[(Long, Int)] =
@@ -1195,37 +1202,188 @@ object IndexBuilder {
     encodeRun(segId, TermDels, sortedIds.map(d => (d, 1, 1)), blockSize)
 
 
-  /** Segment compaction — the engine's analogue of the reference's
-    * post-load forcemerge to one segment (mrtarget/common/esutil.py:96-101).
-    * A resumed build accumulates one data dir per attempt; compaction
-    * rewrites all committed posting rows into a single dir (re-clustered
-    * one-segment-per-task, term-sorted for Parquet rowgroup pruning) and
-    * commits a snapshot referencing only it. Old dirs stay on disk and
-    * unreferenced (snapshot isolation); callers may vacuum separately. */
+  /** The merge, the engine's analogue of the reference's post-load
+    * forcemerge (mrtarget/common/esutil.py:96-101), which drops deleted
+    * docs and renumbers the rest. It rewrites the index into the rows a
+    * fresh [[build]] over its live documents writes: for each slot s in
+    * [0, P), the live documents of segments {gP + s : g < generations}
+    * become segment s, each with the docId a fresh build gives it (the
+    * rank of its url within the slot). Posting rows, url and doc-length
+    * tables, termdict, suggest, per-field and snapshot statistics equal
+    * that build's (generations = 1, deletedDocs = 0); the doc-suggest rows
+    * of live documents' current generations are kept, re-keyed to
+    * generation 0. No source text is read: [[mergeSlot]] turns the stored
+    * rows back into the token stream the build's encoder takes.
+    *
+    * Contract: docIds MOVE at a merge. A `search_after` cursor (score,
+    * docId) taken before the merge is not valid after it. Readers pinned
+    * with `Snapshot.at` or `IndexHandle(snapshotId)` keep reading the old
+    * files, which stay on disk until [[vacuum]]. An index that is already
+    * merged (one data dir, no tombstones) is returned as is, with no Spark
+    * job. `Deletes.purge` runs this same merge. */
   def compact(spark: SparkSession, indexDir: String): SnapshotMeta = {
     import spark.implicits._
     ensureLargeCellWriterConf(spark)
     val snap = Snapshot.latest(indexDir)
       .getOrElse(throw new IllegalStateException(s"no snapshot under $indexDir"))
-    require(snap.isComplete, "compact requires a complete index")
-    if (snap.dataDirs.size == 1) return snap
-    val totalSegs = snap.numSegments * snap.generations
+    require(snap.isComplete, "a merge requires a complete index")
+    if (snap.dataDirs.size == 1 && snap.deletedDocs == 0) return snap
+    val P = snap.numSegments
+    val G = snap.generations
+    val bs = snap.blockSize
+    val chunkDocs = snap.markerChunkDocs
+    val fields = snap.fieldDefs
     val newId = snap.id + 1
-    val rel = f"data/compact-$newId%05d"
-    readPostings(spark, snap.dataDirs.map(d => s"$indexDir/$d"))
-      .as[PostingRow]
-      .withColumn("part",
-        element_at(lit(bijectionKeys(totalSegs)), col("segId") + 1))
-      .repartition(totalSegs, col("part"))
+    val rel = f"data/merge-$newId%05d"
+    val dirs = snap.dataDirs.map(d => s"$indexDir/$d")
+    // one scan; the url tables enter one row per slot, so the shuffle's
+    // sort ranks each slot's urls
+    val in = readPostings(spark, dirs).as[PostingRow].flatMap { r =>
+      if (r.term == TermUrls)
+        chunkUrls(r, chunkDocs).map { case (u, d) => MergeRow(r.segId, u, d, null) }
+      else Iterator.single(MergeRow(r.segId, null, 0L, r))
+    }
+    val term = col("row.term")
+    // per slot: tombstones, doc-length tables, url slots by url, then
+    // posting rows by (term, generation), the order mergeSlot walks
+    val phase = when(col("url").isNotNull, 2).when(term === lit(TermDels), 0)
+      .when(term < lit(TermUrls), 1).otherwise(3)
+    in.withColumn("part",
+        element_at(lit(bijectionKeys(P)), pmod(col("segId"), lit(P)) + 1))
+      .repartition(P, col("part"))
+      .sortWithinPartitions(phase, col("url"), term, col("segId"),
+        col("row.chunk"), col("docId"))
       .drop("part")
-      .sortWithinPartitions("segId", "term", "chunk")
+      .as[MergeRow]
+      .mapPartitions { it =>
+        val slot = org.apache.spark.TaskContext.getPartitionId()
+        val toks = mergeSlot(it, slot, P, G, fields.nonEmpty)
+        if (toks.hasNext) encodePartition(toks, bs, chunkDocs)
+        else emptySegmentRows(slot)
+      }
       .write.mode("overwrite").parquet(s"$indexDir/$rel")
-    val compacted = snap.copy(
-      id = newId, parent = snap.id,
-      dataDirs = Seq(rel),
-      segments = snap.segments.map(_.copy(dataDir = rel)))
-    Snapshot.commit(indexDir, compacted)
-    compacted
+
+    val metas = segmentMetrics(spark, s"$indexDir/$rel", rel)
+    val dictRel = f"termdict/snap-$newId%05d"
+    val dictRows = writeTermdict(spark, Seq(s"$indexDir/$rel"),
+      s"$indexDir/$dictRel", IndexConfig().saltBuckets)
+    val (sugRel, sugRows) = snap.suggestDir match {
+      case None => (None, 0L)
+      case Some(_) =>
+        val rel2 = f"suggest/snap-$newId%05d"
+        (Some(rel2), writeSuggest(spark, s"$indexDir/$dictRel", s"$indexDir/$rel2"))
+    }
+    // doc-suggest: only the rows of LIVE documents' CURRENT generations —
+    // until a merge, superseded and tombstoned docs' grams keep serving,
+    // like ES's completion suggester between a delete and a merge
+    val (docSugDirs, docSugRows) =
+      if (snap.docSuggestDirs == null || snap.docSuggestDirs.isEmpty) (Nil, 0L)
+      else {
+        val rel2 = f"docsuggest/merge-$newId%05d"
+        val rows = spark.read.parquet(snap.docSuggestDirs.map(d => s"$indexDir/$d"): _*)
+        (Seq(rel2), writeCounted(rows
+          .join(liveUrlsDF(spark, dirs, P), Seq("url", "gen"), "left_semi")
+          .select(rows.columns.map(c => if (c == "gen") lit(0).as(c) else col(c)): _*)
+          .sort("gram", "url"), s"$indexDir/$rel2"))
+      }
+    val neu = snap.copy(id = newId, parent = snap.id,
+      numDocs = metas.map(_.docs).sum,
+      sumDocLen = metas.map(_.sumDocLen).sum,
+      dataDirs = Seq(rel), termdictDir = Some(dictRel),
+      // the merged vocabulary can SHRINK — a stale count would make warm
+      // handles refuse the driver dictionary forever after a mass delete
+      termdictRows = dictRows,
+      segments = metas, deletedDocs = 0L,
+      suggestDir = sugRel, suggestRows = sugRows,
+      docSuggestDirs = docSugDirs, docSuggestRows = docSugRows,
+      fieldStats =
+        if (fields.isEmpty) Nil else fieldStats(spark, Seq(s"$indexDir/$rel")))
+    Snapshot.commit(indexDir, neu)
+    neu
+  }
+
+  /** The token stream a fresh build encodes for segment `slot`, rebuilt
+    * from the stored rows of segments {gP + slot} in [[compact]]'s order:
+    * tombstones (dead ranks per generation), doc-length tables (rank-indexed
+    * per generation), url slots in url order (each live one takes the next
+    * rank), then posting rows by (term, generation), remapped to the new
+    * docIds and merged. Task memory is O(docs per segment) ints — dead
+    * bitsets, doc-length tables and rank remaps; url strings and posting
+    * lists stream. */
+  private def mergeSlot(it0: Iterator[MergeRow], slot: Int, P: Int, G: Int,
+      multiField: Boolean): Iterator[TokRow] = {
+    val it = it0.buffered
+    val segB = segBase(slot)
+    def stored(p: String => Boolean): Iterator[PostingRow] = new Iterator[PostingRow] {
+      def hasNext: Boolean = it.hasNext && it.head.row != null && p(it.head.row.term)
+      def next(): PostingRow = it.next().row
+    }
+    def oldRank(segId: Int, docId: Long): Int = (docId - segBase(segId) - 1).toInt
+    val dead = Array.fill(G)(new java.util.BitSet())
+    stored(_ == TermDels).foreach { r =>
+      docIdStream(r).foreach(d => dead(r.segId / P).set(oldRank(r.segId, d)))
+    }
+    // marker term -> per-generation rank-indexed table
+    val tables: Map[String, Array[Array[Int]]] =
+      stored(_ < TermUrls).toSeq.groupBy(_.term).map { case (t, rows) =>
+        val byGen = new Array[Array[Int]](G)
+        rows.groupBy(_.segId).foreach { case (s, rs) => byGen(s / P) = concatLens(rs) }
+        t -> byGen
+      }
+    val oldLens = tables(TermLens)
+    val fieldTerms = tables.keys.filter(_ != TermLens).toSeq.sorted
+    val oldField = fieldTerms.map(tables).toArray
+    val remap = oldLens.map(t => new Array[Int](t.length))
+    val nLive = oldLens.indices
+      .map(g => oldLens(g).length - dead(g).get(0, oldLens(g).length).cardinality()).sum
+    val lens = new Array[Int](nLive)
+    val newField = Array.fill(fieldTerms.size)(new Array[Int](nLive))
+    var n = 0
+    val docs = new Iterator[MergeRow] {
+      def hasNext: Boolean = it.hasNext && it.head.row == null
+      def next(): MergeRow = it.next()
+    }.flatMap { m =>
+      val g = m.segId / P
+      val rank = oldRank(m.segId, m.docId)
+      if (dead(g).get(rank)) Iterator.empty
+      else {
+        remap(g)(rank) = n + 1
+        lens(n) = oldLens(g)(rank)
+        var f = 0
+        while (f < newField.length) { newField(f)(n) = oldField(f)(g)(rank); f += 1 }
+        n += 1
+        Iterator.single(TokRow(slot, TermLens, segB + n, 0, lens(n - 1), m.url))
+      }
+    }
+    def fieldDocs = fieldTerms.indices.iterator.flatMap { f =>
+      (0 until n).iterator.map(i =>
+        TokRow(slot, fieldTerms(f), segB + i + 1, newField(f)(i), 0, null))
+    }
+    // a posting's doc length: its field's for an analyzed multi-field term,
+    // 1 for a keyword term (norms disabled), the global one otherwise
+    val byField = fieldTerms.indices.map(f => fieldTerms(f).substring(1) -> newField(f)).toMap
+    def doclens(term: String): Array[Int] =
+      if (!multiField) lens
+      else byField.getOrElse(term.substring(0, math.max(term.indexOf(FieldSep), 0)), null)
+    def postings = new Iterator[Seq[PostingRow]] {
+      def hasNext: Boolean = it.hasNext
+      def next(): Seq[PostingRow] = {
+        val t = it.head.row.term
+        stored(_ == t).toSeq
+      }
+    }.flatMap { rows =>
+      val term = rows.head.term
+      val dl = doclens(term)
+      graft.search.MatchEnum.mergeDistinctBy(rows.map { r =>
+        val m = remap(r.segId / P)
+        postingStream(r).map { case (id, tf) => (m(oldRank(r.segId, id)), tf) }
+          .filter(_._1 > 0)
+      })(_._1.toLong).map { case (rank, tf) =>
+        TokRow(slot, term, segB + rank, tf, if (dl == null) 1 else dl(rank - 1), null)
+      }
+    }
+    // each part is built only once the one before it is drained
+    docs ++ fieldDocs ++ postings
   }
 
   /** Iceberg-style rollback: re-point LATEST at the state of snapshot

@@ -400,15 +400,24 @@ private[graft] object MatchEnum {
   /** k-way merge of strictly-ascending sorted Long iterators with dedup
     * (prior tombstone rows may overlap each other; matches are disjoint
     * from them by construction). Streaming — O(k) state. */
-  def mergeDistinct(sources: Seq[Iterator[Long]]): Iterator[Long] = {
+  def mergeDistinct(sources: Seq[Iterator[Long]]): Iterator[Long] =
+    mergeDistinctBy(sources)(identity)
+
+  /** [[mergeDistinct]] over elements ordered by a Long `key`; of elements
+    * with equal keys, the one from the earliest source is kept. */
+  def mergeDistinctBy[T](sources: Seq[Iterator[T]])(key: T => Long): Iterator[T] = {
     val its = sources.map(_.buffered)
-    new Iterator[Long] {
+    new Iterator[T] {
       def hasNext: Boolean = its.exists(_.hasNext)
-      def next(): Long = {
+      def next(): T = {
         var min = Long.MaxValue
-        its.foreach(it => if (it.hasNext && it.head < min) min = it.head)
-        its.foreach(it => while (it.hasNext && it.head == min) it.next())
-        min
+        var best: BufferedIterator[T] = null
+        its.foreach(it => if (it.hasNext && (best == null || key(it.head) < min)) {
+          min = key(it.head); best = it
+        })
+        val v = best.next()
+        its.foreach(it => while (it.hasNext && key(it.head) == min) it.next())
+        v
       }
     }
   }

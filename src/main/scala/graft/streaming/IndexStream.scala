@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.index.{Hashing, IndexBuilder, IndexConfig, Snapshot, SnapshotMeta, Varint}
+import graft.index.{IndexBuilder, IndexConfig, Snapshot, SnapshotMeta, Varint}
 
 /** Incremental index maintenance from a page stream — the streaming
   * counterpart of the engine's own batch build (SURVEY §2.10 applied to
@@ -17,12 +17,15 @@ import graft.index.{Hashing, IndexBuilder, IndexConfig, Snapshot, SnapshotMeta, 
   * Exactly-once across restarts WITHOUT a side ledger: Structured Streaming
   * replays at most the last unacknowledged micro-batch, and whether that
   * batch's generation already committed is decided from the index itself —
-  * the batch's first url either resolves in the TOP generation (fully
+  * some url of the batch either is a document of the TOP generation (fully
   * applied → skip), or the top generation is incomplete (crash mid-append →
-  * resume completes it deterministically from the same batch), or is absent
-  * (apply). The snapshot log doubles as the idempotence ledger. Input
-  * contract (BASELINE.json input_hint): url is the primary key — a url must
-  * appear in at most one micro-batch. */
+  * resume completes it deterministically from the same batch), or neither
+  * (apply). A merge (`IndexBuilder.compact`) folds every generation into
+  * generation 0, then the only one, and drops deleted documents, so a batch
+  * applied before it still resolves there unless every one of its urls was
+  * deleted before the merge. The snapshot log doubles as the idempotence
+  * ledger. Input contract (BASELINE.json input_hint): url is the primary
+  * key — a url must appear in at most one micro-batch. */
 object IndexStream {
 
   def readPages(spark: SparkSession, srcDir: String,
@@ -109,29 +112,22 @@ object IndexStream {
       batchSegUrls.join(segUrls, Seq("segId", "url"), "left_anti").isEmpty
   }
 
-  /** True iff `url` is already a document of the latest snapshot's TOP
-    * generation — one pushed-down parquet read of that generation's url
-    * table for the url's segment; no IndexHandle, no posting bytes. The
-    * membership test runs executor-side (only a boolean crosses to the
-    * driver), so driver memory stays independent of docs/segment. */
+  /** True iff some url of `pages` is already a document (tombstoned or
+    * not) of the latest snapshot's TOP generation: the upsert's url-marker
+    * scan, pruned to the top generation's segments the batch's urls route
+    * to, semi-joined with the batch executor-side — only a boolean crosses
+    * to the driver. Any url, not one: a delete followed by a merge removes
+    * a url from the tables, and the batch's other urls still tell. */
   private[graft] def inTopGeneration(
-      spark: SparkSession, indexDir: String, url: String): Boolean =
+      spark: SparkSession, indexDir: String, pages: DataFrame): Boolean =
     Snapshot.latest(indexDir) match {
       case None => false
       case Some(snap) =>
-        import spark.implicits._
-        val seg = (snap.generations - 1) * snap.numSegments +
-          Hashing.segmentOf(url, snap.numSegments)
-        snap.completedSegIds.contains(seg) && {
-          IndexBuilder.readPostings(spark,
-              snap.dataDirs.map(d => s"$indexDir/$d"))
-            .filter(col("segId") === seg &&
-              col("term") === IndexBuilder.TermUrls)
-            .as[graft.index.PostingRow]
-            .map(r => Varint.decodeStrings(r.tfBytes).contains(url))
-            .filter(identity[Boolean] _)
-            .head(1).nonEmpty
-        }
+        val top = (snap.generations - 1) * snap.numSegments
+        val segs = IndexBuilder.upsertCandidateSegs(pages, snap).filter(_ >= top)
+        segs.nonEmpty && IndexBuilder.upsertMarkerScan(spark, indexDir, snap, segs)
+          .join(pages.select("url"), Seq("url"), "left_semi")
+          .head(1).nonEmpty
     }
 
   /** foreachBatch body; public so tests can drive replay scenarios. */
@@ -141,8 +137,7 @@ object IndexStream {
     // no side ledger here, so resume safety rests on content evidence
     buildOrResume(spark, indexDir, cfg, batch,
         p => resumeMatchesBatch(spark, indexDir, p, batch)) { _ =>
-      val firstUrl = batch.select("url").head().getString(0)
-      if (!inTopGeneration(spark, indexDir, firstUrl))
+      if (!inTopGeneration(spark, indexDir, batch))
         IndexBuilder.append(spark, batch, indexDir)
       // else: replayed, already-committed batch → no-op
     }
@@ -161,7 +156,7 @@ object IndexStream {
 
   // ---- streaming RECRAWL ingestion: micro-batches may re-capture urls ----
 
-  /** appendStream's replay detection (is the batch's first url in the top
+  /** appendStream's replay detection (is a url of the batch in the top
     * generation?) breaks down when batches legitimately recapture urls, so
     * the recrawl stream keeps an explicit ledger next to the snapshot log,
     * written atomically AFTER the batch's commits. The ledger records
@@ -189,7 +184,8 @@ object IndexStream {
     * tombstone-not-purged state, N/avgdl/df count the dead duplicate until
     * `Deletes.purge`, so absolute BM25 scores in that window differ from a
     * never-crashed run's (ES between a delete and a merge behaves the same
-    * way). Run purge on any schedule to converge stats. */
+    * way). A purge on any schedule converges the stats; it is the merge,
+    * so it renumbers docIds and ends every open `search_after` cursor. */
   private def ledgerPath(indexDir: String) =
     java.nio.file.Paths.get(indexDir, "snapshots", "STREAM_LEDGER")
 

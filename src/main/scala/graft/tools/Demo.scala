@@ -42,7 +42,9 @@ object Demo {
       val qc = Snapshot.metricsDiff(partial, resumed)
       println(s"[demo] QC diff partial->resumed: ${qc.size} deltas, e.g. ${qc.take(2).mkString("; ")}")
       val merged = IndexBuilder.compact(spark, dir)
-      println(s"[demo] compacted snapshot ${merged.id}: dataDirs=${merged.dataDirs.size}")
+      println(s"[demo] merged snapshot ${merged.id}: dataDirs=${merged.dataDirs.size} " +
+        s"segments=${merged.segments.size} generations=${merged.generations} " +
+        s"deletedDocs=${merged.deletedDocs}")
       val vacuumed = IndexBuilder.vacuum(dir)
       println(s"[demo] vacuumed ${vacuumed.size} superseded dirs")
       // append a url-disjoint batch as a new generation

@@ -15,6 +15,7 @@ import graft.search.{Bm25, BoolQuery, IndexHandle, OracleSearch, Searcher}
   * expectations, and prints one JSON line on stdout. A failed check throws.
   *
   *  - `segment [docs=5e7]`: one segment, chunked markers, delete + purge
+  *    (the merge)
   *  - `segments [docs=2e5] [P=4096]`: thousands of segments, oracle identity
   *    and count/scan agreement
   *  - `big [docs=8e6] [P=512]`: build throughput and bytes per posting
@@ -91,7 +92,7 @@ object Smoke {
     }
   }
 
-  /** `segment`: upper-segment-size and streaming-purge evidence for the
+  /** `segment`: upper-segment-size and streaming-merge evidence for the
     * block-chunked marker tables. Builds `docs` documents into ONE segment
     * with `chunkDocs`-slot marker chunks (at 5x10^7 docs the url table is
     * about 4 GB, past the ~3x10^7-url / 2 GiB JVM-array ceiling a
@@ -106,14 +107,15 @@ object Smoke {
     *  - bit-identical BM25 top-10 docIds, scores and urls for "vary"
     *  - search_after pages stitch into the one-shot top 30
     *  - one url marker row per chunk, never one monolithic cell
-    * and after deleteByQuery("needle") + purge:
+    * and after deleteByQuery("needle") + purge, which merges:
     *  - deletedDocs is the needle count before purge, 0 after; numDocs and
     *    sumDocLen are the live sums
     *  - count(needle) is 0; edge and rare drop by exactly the deleted overlap
-    *  - survivors keep their docIds and urls (dead rank slots stay)
+    *  - each survivor's docId is its dense rank (old rank minus the needles
+    *    before it), with its url
     *  - top-10 scores follow the live df/avgdl (purge rewrote stats)
-    *  - the url chunk count is unchanged; one consolidated tombstone row
-    *    covers exactly the deleted class */
+    *  - no tombstone row remains; the url tables hold ⌈live / chunkDocs⌉
+    *    chunks */
   def segment(spark: SparkSession, base: String, docs: Long, chunkDocs: Int): String = {
     import spark.implicits._
     require(docs % 8 == 0, "docs must be a multiple of 8 (closed-form sumdl)")
@@ -140,7 +142,6 @@ object Smoke {
       (if (docs < chunkDocs) 0L else (docs - chunkDocs) / chunkDocs + 1)
     val nBoth = countMod(9973000L) // needle AND rare (lcm = 9973*1000)
     val sumdl = 3 * docs + (docs / 8) * 28 + nNeedle + nRare + nEdge
-    val nChunks = ((docs - 1) / chunkDocs + 1).toInt
     // the deleted class is small enough to fold exactly
     val deleted = 0L until docs by 1000
     val liveDocs = docs - nNeedle
@@ -162,28 +163,34 @@ object Smoke {
         .orderBy("docId").as[(Long, String, Int)].collect().toSeq)
     // query "vary": the best class is tf=7, dl=10 (i%8==7, no planted
     // extras); ties break by docId ascending, and docId = rank + 1 = i + 1
-    val expIds = Iterator.iterate(7L)(_ + 8)
+    val expI = Iterator.iterate(7L)(_ + 8)
       .filter(i => !c.isNeedle(i) && !c.isRare(i) && !c.isEdge(i))
-      .take(10).map(_ + 1).toSeq
-    def topK(what: String, numDocs: Long, sumDocLen: Long, dfVary: Long): Double = {
+      .take(10).toSeq
+    // the purge's merge renumbers densely: a survivor's rank drops by the
+    // needles (multiples of 1000) before it
+    def denseId(i: Long): Long = i + 1 - (i + 999) / 1000
+    def topK(what: String, numDocs: Long, sumDocLen: Long, dfVary: Long,
+        docId: Long => Long): Double = {
       val expScore = Bm25.idf(numDocs, dfVary) *
         Bm25.tfNorm(7, 10, Bm25.avgdl(numDocs, sumDocLen))
+      val expIds = expI.map(docId)
       val (hits, sec) = timed(Searcher.topK(spark, idxDir, "vary", 10))
       require(hits.map(_.docId).toSeq == expIds,
         s"$what top-10 docIds ${hits.map(_.docId).toSeq} != $expIds")
       require(hits.forall(_.score == expScore),
         s"$what scores ${hits.map(_.score).toSeq} != closed-form $expScore")
-      require(hits.map(_.url).toSeq == expIds.map(d => c.url(d - 1)),
+      require(hits.map(_.url).toSeq == expI.map(c.url),
         s"$what top-10 urls drifted")
       sec
     }
     def rows() = IndexBuilder.readPostings(spark,
       Snapshot.latest(idxDir).get.dataDirs.map(d => s"$idxDir/$d")).as[PostingRow]
-    def urlCells(what: String): Array[Long] = {
+    def urlCells(what: String, live: Long): Array[Long] = {
       val cells = rows().filter(col("term") === IndexBuilder.TermUrls)
         .map(_.tfBytes.length.toLong).collect()
-      require(cells.length == nChunks,
-        s"$what: expected $nChunks url chunk rows, got ${cells.length}")
+      val chunks = (live - 1) / chunkDocs + 1
+      require(cells.length == chunks,
+        s"$what: expected $chunks url chunk rows, got ${cells.length}")
       cells
     }
 
@@ -196,14 +203,14 @@ object Smoke {
     val expectedEdge = (1L until docs).filter(c.isEdge).map(i => (i + 1, c.url(i), 0))
     require(edgeRows == expectedEdge,
       s"edge enumeration drifted: got ${edgeRows.length} rows")
-    val tTopK = topK("built", docs, sumdl, docs - docs / 8)
+    val tTopK = topK("built", docs, sumdl, docs - docs / 8, _ + 1)
     val h = new IndexHandle(spark, idxDir, warm = false)
     val oneShot = h.search(BoolQuery.text("vary"), 30)
     val p1 = h.searchAfter(BoolQuery.text("vary"), 15, None)
     val p2 = h.searchAfter(BoolQuery.text("vary"), 15, Some((p1.last.score, p1.last.docId)))
     require((p1 ++ p2).map(x => (x.docId, x.score)).toSeq ==
       oneShot.map(x => (x.docId, x.score)).toSeq, "search_after drifted")
-    val cells = urlCells("built")
+    val cells = urlCells("built", docs)
 
     // ---- delete the needle class, then purge ----
     val (_, delSec) = timed(
@@ -220,15 +227,14 @@ object Smoke {
     countIs("purged rare", BoolQuery(filter = Seq("rare")),
       nRare - deleted.count(c.isRare))
     val (survivors, tScanPurged) = edgeScan()
-    require(survivors == edgeRows.filterNot { case (docId, _, _) => c.isNeedle(docId - 1) },
-      s"survivor enumeration moved: ${survivors.length} rows")
+    require(survivors == edgeRows.collect {
+        case (docId, url, tf) if !c.isNeedle(docId - 1) => (denseId(docId - 1), url, tf)
+      }, s"survivor enumeration drifted: ${survivors.length} rows")
     // every deleted id is a multiple of 1000 = 8 * 125, so none has tf(vary) > 0
-    val tTopKPurged = topK("purged", liveDocs, liveSumdl, docs - docs / 8)
-    val purgedCells = urlCells("purged")
-    val dels = rows().filter(col("term") === IndexBuilder.TermDels)
-      .map(r => (r.df, r.docBytes.length.toLong)).collect()
-    require(dels.length == 1 && dels.head._1 == nNeedle,
-      s"expected one consolidated tombstone of df=$nNeedle, got ${dels.toSeq}")
+    val tTopKPurged = topK("purged", liveDocs, liveSumdl, docs - docs / 8, denseId)
+    val purgedCells = urlCells("purged", liveDocs)
+    val dels = rows().filter(col("term") === IndexBuilder.TermDels).count()
+    require(dels == 0L, s"the purge left $dels tombstone rows")
 
     f"""{"segment_docs":$docs,"chunk_docs":$chunkDocs,"build_sec":$buildSec%.1f,""" +
       f""""docs_per_sec":${docs / buildSec}%.0f,"url_chunks":${cells.length},""" +
@@ -238,8 +244,8 @@ object Smoke {
       f""""scan_edge_sec":$tScan%.2f,"topk_sec":$tTopK%.2f,"deleted":$nNeedle,""" +
       f""""delete_sec":$delSec%.1f,"purge_sec":$purgeSec%.1f,""" +
       f""""purge_docs_per_sec":${docs / purgeSec}%.0f,""" +
+      f""""purged_url_chunks":${purgedCells.length},""" +
       f""""purged_max_url_cell_bytes":${purgedCells.max},""" +
-      f""""tombstone_bytes":${dels.head._2},""" +
       f""""purged_count_edge_sec":$tEdgePurged%.2f,""" +
       f""""purged_scan_edge_sec":$tScanPurged%.2f,""" +
       f""""purged_topk_sec":$tTopKPurged%.2f,"all_closed_form_checks":"pass"}"""

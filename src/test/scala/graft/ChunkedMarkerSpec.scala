@@ -18,7 +18,7 @@ import graft.search.{BoolQuery, IndexHandle, OracleSearch, Searcher}
   * reader crosses many chunk boundaries at spec scale, and pin full
   * result identity against a single-chunk build of the same corpus
   * through the whole lifecycle (search, served, ids, count, scan, upsert,
-  * delete, purge, append, compact). */
+  * delete, append, and the merge behind purge and compact). */
 class ChunkedMarkerSpec extends SparkSuite {
   import spark.implicits._
 
@@ -138,42 +138,54 @@ class ChunkedMarkerSpec extends SparkSuite {
     assert(ids.forall(_.docId >= IndexBuilder.segBase(P))) // generation 1
   }
 
-  test("delete + purge preserve chunk tables; scores match a fresh live build") {
+  /** Every stored row of `dir`'s latest snapshot, arrays as sequences. */
+  private def storedRows(dir: String) = {
+    val snap = Snapshot.latest(dir).get
+    spark.read.parquet(snap.dataDirs.map(d => s"$dir/$d"): _*).as[PostingRow]
+      .collect().map(r => (r.segId, r.term, r.chunk, r.df, r.cf, r.maxTf,
+        r.minDl, r.docBytes.toSeq, r.tfBytes.toSeq, r.blockLast.toSeq,
+        r.blockMaxTf.toSeq, r.blockMinDl.toSeq, r.blockDocOff.toSeq,
+        r.blockTfOff.toSeq))
+      .sortBy(r => (r._1, r._2, r._3)).toSeq
+  }
+
+  test("delete + purge rewrite dense chunk tables equal to a fresh live build") {
     val dir = build(cfgChunked)
     val deadUrls = docs.map(_._1).sorted.grouped(9).map(_.head).toSet
     Deletes.delete(spark, dir, deadUrls.toSeq)
     Deletes.purge(spark, dir)
     val snap = Snapshot.latest(dir).get
     assert(snap.numDocs === (230 - deadUrls.size).toLong)
-    // url chunk rows are preserved verbatim (slots never move)
-    val urls = markerRows(dir, IndexBuilder.TermUrls)
-    urls.groupBy(_.segId).foreach { case (_, rows) =>
-      assert(rows.sortBy(_.chunk).dropRight(1).forall(_.df === 7L))
-    }
     val live = docs.filterNot(d => deadUrls.contains(d._1))
+    val freshDir = Files.createTempDirectory("graft-chunk-fresh").toString
+    IndexBuilder.build(spark, live.toDF("url", "text"), freshDir, cfgChunked)
+    // the purge renumbers: dead slots leave the url tables, so every row —
+    // chunk ordinals and the 7-slot chunking invariant included — equals
+    // the fresh build's
+    assert(storedRows(dir) === storedRows(freshDir))
     Seq("the", "data crawl", "w1x w5x").foreach { q =>
       val engine = Searcher.topK(spark, dir, q, 10)
-      // purge makes stats live-only: (url, score) identical to a fresh
-      // build over the live docs. docIds intentionally differ — dead rank
-      // slots stay in the engine's tables so surviving docIds never move,
-      // while a fresh build ranks the survivors compactly.
       val oracle = OracleSearch.topK(live, q, 10, P)
-      assert(engine.map(h => (h.url, h.score)).toSeq ===
-        oracle.map(h => (h.url, h.score)).toSeq, s"query: $q")
+      assert(engine.map(h => (h.docId, h.url, h.score)).toSeq ===
+        oracle.map(h => (h.docId, h.url, h.score)).toSeq, s"query: $q")
     }
   }
 
-  test("append + compact keep chunk ordinals; results stay identical") {
+  test("append + compact rechunk to a fresh build; results stay identical") {
     val dirA = build(cfgChunked)
+    // urls are a function of the row id: start past the base corpus
     val extra = Corpus.pages(spark, 40, seed = 99, vocabSize = 300,
-      medianLen = 40).toDF()
-    IndexBuilder.append(spark, extra.select("url", "text"), dirA)
-    val before = Searcher.topK(spark, dirA, "the data", 10)
-      .map(h => (h.docId, h.url, h.score)).toSeq
+      medianLen = 40, startId = 230).toDF().select("url", "text")
+    IndexBuilder.append(spark, extra, dirA)
     IndexBuilder.compact(spark, dirA)
+    val all = docs ++ extra.as[(String, String)].collect().toSeq
+    val freshDir = Files.createTempDirectory("graft-chunk-fresh").toString
+    IndexBuilder.build(spark, all.toDF("url", "text"), freshDir, cfgChunked)
+    assert(storedRows(dirA) === storedRows(freshDir))
     val after = Searcher.topK(spark, dirA, "the data", 10)
       .map(h => (h.docId, h.url, h.score)).toSeq
-    assert(after === before)
+    assert(after === OracleSearch.topK(all, "the data", 10, P)
+      .map(h => (h.docId, h.url, h.score)).toSeq)
   }
 
   test("format gate: a snapshot without formatVersion (v1 file) is refused loudly") {

@@ -10,9 +10,9 @@ import graft.index.{Deletes, IndexBuilder, IndexConfig, Snapshot}
 import graft.search.{BoolQuery, IndexHandle, OracleSearch, Searcher}
 
 /** Delete lifecycle: tombstones (soft deletes, ES/Lucene semantics — docs
-  * vanish from results, stats keep counting them) and purge (expunge merge
-  * — post-purge results score-identical to a fresh build over live docs,
-  * docIds of survivors unchanged). */
+  * vanish from results, stats keep counting them) and purge (the merge —
+  * post-purge results identical to a fresh build over live docs, docIds
+  * included). */
 class DeleteSpec extends SparkSuite {
   import spark.implicits._
 
@@ -177,11 +177,11 @@ class DeleteSpec extends SparkSuite {
     val freshDir = Files.createTempDirectory("graft-del-fresh").toString
     IndexBuilder.build(spark, live.toDF("url", "text"), freshDir, cfg)
     queries.foreach { q =>
-      val a = Searcher.topK(spark, dir, q, 10).map(h => (h.url, h.score)).toSeq
-      val b = Searcher.topK(spark, freshDir, q, 10).map(h => (h.url, h.score)).toSeq
-      assert(a === b, s"purged vs fresh drift for: $q")
+      def hits(d: String) = Searcher.topK(spark, d, q, 10)
+        .map(h => (h.docId, h.url, h.score)).toSeq
+      assert(hits(dir) === hits(freshDir), s"purged vs fresh drift for: $q")
     }
-    // purged urls stay dead for ids lookups (rank slots are tombstoned)
+    // purged urls stay dead for ids lookups (they left the url tables)
     val deadUrl = matching.head
     assert(Searcher.search(spark, dir,
       BoolQuery(ids = Some(Seq(deadUrl))), 10).isEmpty)
@@ -210,23 +210,63 @@ class DeleteSpec extends SparkSuite {
     }
   }
 
-  test("compact carries tombstones; vacuum reclaims pre-purge dirs") {
+  test("compact drops tombstones like purge; vacuum reclaims pre-merge dirs") {
     val dir = freshIndex()
     val deleted = docs.map(_._1).take(30).toSet
     Deletes.delete(spark, dir, deleted.toSeq)
-    IndexBuilder.compact(spark, dir)
-    val oracle = OracleSearch.topK(docs, "the data", 10, cfg.numSegments, deleted)
+    val merged = IndexBuilder.compact(spark, dir)
+    assert(merged.deletedDocs === 0L && merged.dataDirs.size === 1)
+    val live = docs.filterNot(d => deleted.contains(d._1))
+    queries.foreach { q =>
+      val oracle = OracleSearch.topK(live, q, 10, cfg.numSegments)
+      assert(Searcher.topK(spark, dir, q, 10)
+        .map(h => (h.docId, h.url, h.score)).toSeq ===
+        oracle.map(h => (h.docId, h.url, h.score)).toSeq, s"query: $q")
+    }
+    // purge of the merged index is the same merge: nothing left to do
+    assert(Deletes.purge(spark, dir).id === merged.id)
+    val removed = IndexBuilder.vacuum(dir)
+    assert(removed.toSet === Set("data/build-00001", "data/del-00002",
+      "termdict/snap-00001"))
     assert(Searcher.topK(spark, dir, "the data", 10)
       .map(h => (h.docId, h.score)).toSeq ===
-      oracle.map(h => (h.docId, h.score)).toSeq)
-
-    Deletes.purge(spark, dir)
-    val removed = IndexBuilder.vacuum(dir)
-    assert(removed.nonEmpty)
-    val live = docs.filterNot(d => deleted.contains(d._1))
-    val hits = Searcher.topK(spark, dir, "the data", 10)
-    assert(hits.nonEmpty && hits.forall(h => !deleted.contains(h.url)))
+      OracleSearch.topK(live, "the data", 10, cfg.numSegments)
+        .map(h => (h.docId, h.score)).toSeq)
     assert(Snapshot.latest(dir).get.numDocs === live.size)
+  }
+
+  test("deleteDocIds ships its id sets by broadcast, not inside the task") {
+    val dir = freshIndex()
+    // 6 segments x 20,000 ids = 960 KB of ids; only the 6 affected segIds
+    // may travel as a local relation (Spark serializes local relations
+    // into the plan every task deserializes)
+    val perSeg = 20000
+    val bySeg = (0 until cfg.numSegments).map(s =>
+      s -> Array.tabulate(perSeg)(i => IndexBuilder.segBase(s) + i + 1)).toMap
+    val localBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.optimizedPlan.foreach {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+            .create(l.schema)
+          localBytes.addAndGet(l.data.map(r => proj(r).getSizeInBytes.toLong).sum)
+        case _ =>
+      }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val snap =
+      try {
+        val s = Deletes.deleteDocIds(spark, dir, bySeg)
+        org.apache.spark.ListenerDrain(spark.sparkContext)
+        s
+      } finally spark.listenerManager.unregister(listener)
+    assert(snap.deletedDocs === cfg.numSegments.toLong * perSeg)
+    assert(localBytes.get > 0L, "no local relation observed: the check went blind")
+    assert(localBytes.get < 4096L,
+      s"${localBytes.get} bytes of local relations in the tombstone write")
   }
 
   test("deletes across appended generations") {

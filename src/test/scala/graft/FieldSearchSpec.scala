@@ -230,13 +230,14 @@ class FieldSearchSpec extends SparkSuite {
     assert(byName("body") ===
       (liveRows.count(r => dlOf(r._3) > 0).toLong,
         liveRows.map(r => dlOf(r._3)).sum))
-    // (url, score) identical to a fresh build over the live docs — docIds
-    // intentionally differ (dead rank slots stay in the engine's tables)
+    // (docId, url, score) identical to a fresh build over the live docs:
+    // the purge is the merge, which renumbers like that build
     val q = BoolQuery(should = BoolQuery.fieldText("title", topTitleTok) ++
       BoolQuery.fieldText("body", topBodyTok))
-    val engine = Searcher.search(spark, dir, q, 12).map(h => (h.url, h.score)).toSeq
+    val engine = Searcher.search(spark, dir, q, 12)
+      .map(h => (h.docId, h.url, h.score)).toSeq
     val oracle = OracleSearch.fieldTopK(live, fields, q, 12, cfg.numSegments)
-      .map(h => (h.url, h.score)).toSeq
+      .map(h => (h.docId, h.url, h.score)).toSeq
     assert(engine === oracle)
     assert(engine.nonEmpty)
   }

@@ -214,10 +214,11 @@ class IndexSearchSpec extends SparkSuite {
     }
     // idempotent
     assert(IndexBuilder.compact(spark, dir).id === compacted.id)
-    // vacuum removes exactly the two superseded build dirs, answers intact
+    // vacuum removes exactly the two superseded build dirs and the
+    // termdict the merge replaced, answers intact
     val removed = IndexBuilder.vacuum(dir)
-    // termdict survives: compaction reuses it (contents are unchanged)
-    assert(removed.toSet === Set("data/build-00001", "data/build-00002"))
+    assert(removed.toSet ===
+      Set("data/build-00001", "data/build-00002", "termdict/snap-00002"))
     assert(IndexBuilder.vacuum(dir).isEmpty) // second pass: nothing left
     val after = Searcher.topK(spark, dir, "the data", 10).toSeq
     assert(after === Searcher.topK(spark, indexDir, "the data", 10).toSeq)
@@ -288,11 +289,12 @@ class IndexSearchSpec extends SparkSuite {
       assert(Searcher.topK(spark, dir2, q, 10).toSeq ===
         Searcher.topK(spark, dir, q, 10).toSeq, s"query: $q")
     }
-    // compaction still works across generations
+    // the merge folds the generations into a fresh build over the union,
+    // docIds included
     val comp = IndexBuilder.compact(spark, dir2)
-    assert(comp.dataDirs.size === 1)
+    assert(comp.dataDirs.size === 1 && comp.generations === 1)
     assert(Searcher.topK(spark, dir2, "the data", 10).toSeq ===
-      Searcher.topK(spark, dir, "the data", 10).toSeq)
+      Searcher.topK(spark, freshDir, "the data", 10).toSeq)
   }
 
   test("concurrent queries on one handle are identical and race-free") {

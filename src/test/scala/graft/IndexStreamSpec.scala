@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.corpus.Corpus
-import graft.index.{IndexBuilder, IndexConfig, Snapshot}
+import graft.index.{Deletes, IndexBuilder, IndexConfig, Snapshot}
 import graft.search.Searcher
 import graft.streaming.IndexStream
 
@@ -84,6 +84,29 @@ class IndexStreamSpec extends SparkSuite {
     assert(done.numDocs === 300)
   }
 
+  test("replay across a merge: the merged batch stays a no-op, a new one appends") {
+    val (_, all) = stage()
+    val idxDir = Files.createTempDirectory("graft-istream-merge").toString
+    val chunks = all.grouped(100).toSeq
+    IndexStream.applyBatch(spark, idxDir, cfg)(chunks(0).toDF("url", "text"), 0L)
+    IndexStream.applyBatch(spark, idxDir, cfg)(chunks(1).toDF("url", "text"), 1L)
+    // the batch's first url is deleted, and the merge drops it from the
+    // url tables while folding both batches into generation 0
+    Deletes.delete(spark, idxDir, Seq(chunks(1).head._1))
+    val merged = IndexBuilder.compact(spark, idxDir)
+    assert(merged.generations === 1 && merged.numDocs === 199)
+    // replay of the batch applied just before the merge: still a no-op
+    IndexStream.applyBatch(spark, idxDir, cfg)(chunks(1).toDF("url", "text"), 1L)
+    assert(Snapshot.latest(idxDir).get.id === merged.id)
+    // the next batch is not mistaken for a replay
+    IndexStream.applyBatch(spark, idxDir, cfg)(chunks(2).toDF("url", "text"), 2L)
+    val next = Snapshot.latest(idxDir).get
+    assert(next.generations === 2 && next.numDocs === 299)
+    // and replaying it is a no-op again
+    IndexStream.applyBatch(spark, idxDir, cfg)(chunks(2).toDF("url", "text"), 2L)
+    assert(Snapshot.latest(idxDir).get.id === next.id)
+  }
+
   test("foreign batch cannot complete a crashed generation; rollback remediates") {
     val (_, all) = stage()
     val idxDir = Files.createTempDirectory("graft-istream-foreign").toString
@@ -123,10 +146,11 @@ class IndexStreamSpec extends SparkSuite {
   test("inTopGeneration detects committed urls only") {
     val (_, all) = stage()
     val idxDir = Files.createTempDirectory("graft-istream-top").toString
-    assert(!IndexStream.inTopGeneration(spark, idxDir, all.head._1))
+    def url(u: String) = Seq(u).toDF("url")
+    assert(!IndexStream.inTopGeneration(spark, idxDir, url(all.head._1)))
     IndexStream.applyBatch(spark, idxDir, cfg)(
       all.take(100).toDF("url", "text"), 0L)
-    assert(IndexStream.inTopGeneration(spark, idxDir, all.head._1))
-    assert(!IndexStream.inTopGeneration(spark, idxDir, all(150)._1))
+    assert(IndexStream.inTopGeneration(spark, idxDir, url(all.head._1)))
+    assert(!IndexStream.inTopGeneration(spark, idxDir, url(all(150)._1)))
   }
 }
