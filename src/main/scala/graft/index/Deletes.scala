@@ -50,8 +50,12 @@ object Deletes {
   /** Tombstone documents by url (ES delete-by-id). Unknown urls are ignored
     * (ES `delete` 404 semantics); re-deleting a dead doc is a no-op. */
   def delete(spark: SparkSession, indexDir: String, urls: Seq[String]): SnapshotMeta = {
-    val h = new IndexHandle(spark, indexDir, warm = false)
-    deleteDocIds(spark, indexDir, h.resolveDocIds(urls))
+    val snap = Snapshot.latest(indexDir)
+      .getOrElse(throw new IllegalStateException(s"no snapshot under $indexDir"))
+    require(snap.isComplete, "delete requires a complete index")
+    deleteDocIds(spark, indexDir, IndexBuilder.docIdsBySeg(IndexBuilder.resolveUrls(
+      IndexBuilder.snapshotPostings(spark, indexDir, snap), snap, urls,
+      0 until snap.generations).valuesIterator))
   }
 
   /** Tombstone every document matching `q` (ES delete-by-query) via a
@@ -135,11 +139,9 @@ object Deletes {
 
     // newest prior tombstone row per affected segment (pushed-down scan;
     // rows stay varint-encoded through the shuffle)
-    val priorNewest = IndexBuilder.readPostings(spark,
-        snap.dataDirs.map(d => s"$indexDir/$d"))
+    val priorNewest = IndexBuilder.snapshotPostings(spark, indexDir, snap)
       .filter(col("term") === IndexBuilder.TermDels &&
         col("segId").isin(affected: _*))
-      .as[PostingRow]
       .groupByKey(_.segId)
       .reduceGroups((a, b) => if (a.df >= b.df) a else b)
 

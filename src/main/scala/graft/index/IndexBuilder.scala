@@ -3,13 +3,13 @@ package graft.index
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.analysis.Analyzer
-import graft.search.Bm25
+import graft.search.{Bm25, OracleSearch}
 
 /** One indexed field of a multi-field document (the reference's ES mappings
   * declare text + keyword multi-fields on nearly every string column,
@@ -27,7 +27,6 @@ case class FieldDef(name: String, keyword: Boolean = false)
 case class IndexConfig(
     numSegments: Int = 32,
     blockSize: Int = 128,
-    saltBuckets: Int = 8,
     // rank slots per marker CHUNK (url/doc-length tables are block-chunked
     // — see PostingRow). Pinned like numSegments/blockSize: readers derive
     // chunk rank bases from it, so appends/purges re-use the snapshot's
@@ -81,7 +80,7 @@ case class IndexConfig(
   * docs/segment, and every reader of a big segment would pay one huge
   * allocation. Chunking invariant: every non-final chunk holds EXACTLY
   * markerChunkDocs slots, so chunk c's first rank is c·markerChunkDocs —
-  * readers (upsert's marker scan, the scan/scroll rank-lockstep walk)
+  * readers (the url resolver, the scan/scroll rank-lockstep walk)
   * derive rank bases per row with no cross-row state. A merge rewrites the
   * tables densely over the live documents, so it keeps the invariant.
   * `chunk` is 0 for posting and tombstone rows.
@@ -382,6 +381,15 @@ object IndexBuilder {
           "re-supply the original batch or IndexBuilder.rollback")
       return prior
     }
+    appendTo(spark, newPages, indexDir, prior, resume, simulateOnlySegments)
+  }
+
+  /** [[append]] of a batch known to be non-empty onto `prior`, the latest
+    * snapshot. */
+  private def appendTo(spark: SparkSession, newPages: DataFrame,
+      indexDir: String, prior: SnapshotMeta, resume: Boolean,
+      simulateOnlySegments: Option[Set[Int]]): SnapshotMeta = {
+    val P = prior.numSegments
     // fields are a pinned index property — re-derive from the snapshot so
     // appended generations tokenize identically to the original build
     val cfg = IndexConfig(P, prior.blockSize, fields = prior.fieldDefs,
@@ -405,39 +413,93 @@ object IndexBuilder {
       segOffset = gen * P, wanted)
   }
 
-  /** Candidate segments for an upsert batch: segment assignment is a pure
-    * murmur3 function of url (docId = segId<<40 | rank), so a url can only
-    * live in segments {g*P + segment_of(url, P) : g < generations}. The
-    * distinct per-batch s0 set is a tiny aggregation (bounded by min(P,
-    * |batch|) values), computed once driver-side and pushed down — the
-    * marker scan then reads O(|batch| x generations) segments instead of
-    * the whole index, which is what keeps a STREAMING upsert's per-batch
-    * cost proportional to the batch, not the accumulated index. */
-  private[graft] def upsertCandidateSegs(
-      newPages: DataFrame, snap: SnapshotMeta): Seq[Int] = {
+  /** The url -> docId resolver, the engine's lookup by primary key (ES
+    * `_id`): for each of `urls`, the (segId, docId) of every document it
+    * has in generations `gens`, tombstoned ones included. Segment
+    * assignment is a pure function of the url, so a url can only live in
+    * segment g*P + segmentOf(url, P) of generation g: only those segments
+    * are scanned (term AND segId pushed into the scan), and each of their
+    * url chunks binary-searches, executor-side, the probes that route to
+    * it (seg-local rank IS the url sort position, and chunk c holds ranks
+    * [c*markerChunkDocs, (c+1)*markerChunkDocs)). Only the found pairs,
+    * bounded by the probe list, cross to the driver. The probes travel as
+    * one broadcast destroyed after the job; captured in the task closure
+    * they would be serialized into the task binary. `postings` is the
+    * snapshot's posting table: a warm handle probes its cache, every other
+    * caller reads [[snapshotPostings]]. */
+  private[graft] def resolveUrls(postings: Dataset[PostingRow],
+      snap: SnapshotMeta, urls: scala.collection.Seq[String],
+      gens: Range): Map[String, Array[(Int, Long)]] = {
     val P = snap.numSegments
-    val spark = newPages.sparkSession
+    val chunkDocs = snap.markerChunkDocs
+    val probes: Map[Int, Array[String]] =
+      urls.distinct.groupBy(u => Hashing.segmentOf(u, P))
+        .map { case (s0, us) => s0 -> us.toArray }
+    val segs = probes.keys.toSeq.sorted.flatMap(s0 => gens.map(_ * P + s0))
+    if (segs.isEmpty) return Map.empty
+    val spark = postings.sparkSession
     import spark.implicits._
-    val s0 = newPages
-      .select(graft.plans.GraftFunctions.segment_of(col("url"), P).as("s0"))
-      .distinct().as[Int].collect().sorted
-    (0 until snap.generations).flatMap(g => s0.map(_ + g * P))
+    val bc = spark.sparkContext.broadcast(probes)
+    val found =
+      try postings
+        .filter(col("term") === lit(TermUrls) && col("segId").isin(segs: _*))
+        .mapPartitions { it =>
+          val probes = bc.value
+          it.flatMap { r =>
+            val targets = probes.getOrElse(r.segId % P, Array.empty[String])
+            // range precheck against the chunk's (first, last) urls — a
+            // prefix walk, two String allocations — so only the ONE chunk
+            // per segment that can bracket a probe pays the full decode
+            // (2^20 String allocations); a point lookup against a 10^8-doc
+            // segment otherwise decodes ~100 chunks to run ~20 comparisons
+            val inRange =
+              if (targets.isEmpty) targets
+              else Varint.firstLastStrings(r.tfBytes) match {
+                case None => Array.empty[String]
+                case Some((first, last)) => targets.filter(u =>
+                  OracleSearch.utf8Compare(u, first) >= 0 &&
+                  OracleSearch.utf8Compare(u, last) <= 0)
+              }
+            if (inRange.isEmpty) Iterator.empty
+            else {
+              val tab = Varint.decodeStrings(r.tfBytes)
+              val base = segBase(r.segId) + r.chunk.toLong * chunkDocs
+              inRange.iterator.flatMap { u =>
+                val idx = binarySearchUtf8(tab, u)
+                if (idx >= 0) Iterator.single((u, r.segId, base + idx + 1))
+                else Iterator.empty
+              }
+            }
+          }
+        }.collect()
+      finally bc.destroy()
+    found.groupBy(_._1).map { case (u, arr) => u -> arr.map(t => (t._2, t._3)) }
   }
 
-  /** The upsert's url-marker scan, segId-pruned to `candSegs` (factored so
-    * the plan audit can assert the pushdown): one (segId, url, docId) row
-    * per document of the candidate segments. */
-  private[graft] def upsertMarkerScan(spark: SparkSession, indexDir: String,
-      snap: SnapshotMeta, candSegs: Seq[Int]): DataFrame = {
-    import spark.implicits._
-    val chunkDocs = snap.markerChunkDocs
-    readPostings(spark, snap.dataDirs.map(d => s"$indexDir/$d"))
-      .as[PostingRow]
-      // pushed-down marker scan: term equality AND segId-candidate prune
-      .filter(col("term") === lit(TermUrls) && col("segId").isin(candSegs: _*))
-      .flatMap(r => chunkUrls(r, chunkDocs).map { case (u, d) => (r.segId, u, d) })
-      .toDF("segId", "url", "docId")
+  /** Binary search in UTF-8 byte order, the order the build sorts urls by. */
+  private def binarySearchUtf8(tab: Array[String], u: String): Int = {
+    var lo = 0
+    var hi = tab.length - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val c = OracleSearch.utf8Compare(tab(mid), u)
+      if (c < 0) lo = mid + 1
+      else if (c > 0) hi = mid - 1
+      else return mid
+    }
+    -1
   }
+
+  /** [[resolveUrls]]' pairs grouped by segment, docIds ascending. */
+  private[graft] def docIdsBySeg(
+      pairs: Iterator[Array[(Int, Long)]]): Map[Int, Array[Long]] =
+    pairs.flatten.toArray.groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2).sorted }
+
+  /** Posting rows of every data dir of `snap`. */
+  private[graft] def snapshotPostings(spark: SparkSession, indexDir: String,
+      snap: SnapshotMeta): Dataset[PostingRow] =
+    readPostings(spark, snap.dataDirs.map(d => s"$indexDir/$d"))
+      .as(Encoders.product[PostingRow])
 
   /** (url, docId) of every slot of one url-table chunk row, dead slots
     * included. Chunk c's first rank is c*markerChunkDocs (chunking
@@ -455,12 +517,12 @@ object IndexBuilder {
     * per url in the batch (a duplicated url would index twice). Existing
     * postings are never rewritten (that is [[compact]]'s job, the merge)
     * and — like ES between a delete and a merge — N/avgdl/df keep counting
-    * the replaced versions until a merge. The old-docId resolution is a
-    * distributed join of the batch's urls against the per-segment url
-    * tables of the CANDIDATE segments only (see [[upsertCandidateSegs]] —
-    * the scan is batch-bounded, not index-bounded); only the MATCHED
-    * (segId, docId) pairs — bounded by the batch size — are collected for
-    * the tombstone commit. */
+    * the replaced versions until a merge. The old docIds come from
+    * [[resolveUrls]] over every generation, which scans only the segments
+    * the batch's urls route to: per-batch cost follows the batch and the
+    * generation count, not the index size. Memory budget: the batch's
+    * distinct urls are held on the driver once, the same bound
+    * `Deletes.delete` has for its url list. */
   def upsert(
       spark: SparkSession,
       newPages: DataFrame,
@@ -469,17 +531,17 @@ object IndexBuilder {
     val snap = Snapshot.latest(indexDir)
       .getOrElse(throw new IllegalStateException(s"no snapshot under $indexDir"))
     require(snap.isComplete, "upsert requires a complete index")
-    val candSegs = upsertCandidateSegs(newPages, snap)
-    val matched = upsertMarkerScan(spark, indexDir, snap, candSegs)
-      .join(newPages.select("url").distinct(), Seq("url"))
-      .select(col("segId"), col("docId"))
-      .as[(Int, Long)]
-      .collect()
-    val bySeg = matched.groupBy(_._1).map { case (s, rows) => s -> rows.map(_._2) }
+    val urls = newPages.select("url").as[String].collect()
+    // an empty batch commits nothing, like append's own emptiness check,
+    // which the collected urls make redundant here
+    if (urls.isEmpty) return snap
+    val old = resolveUrls(snapshotPostings(spark, indexDir, snap), snap, urls,
+      0 until snap.generations)
     // already-tombstoned old versions no-op inside deleteDocIds; a batch of
     // only never-seen urls commits no tombstone snapshot at all
-    Deletes.deleteDocIds(spark, indexDir, bySeg)
-    append(spark, newPages, indexDir)
+    val tombstoned = Deletes.deleteDocIds(spark, indexDir, docIdsBySeg(old.valuesIterator))
+    appendTo(spark, newPages, indexDir, tombstoned, resume = false,
+      simulateOnlySegments = None)
   }
 
   private def buildSegments(
@@ -627,30 +689,20 @@ object IndexBuilder {
     val generations = allSegments.map(_.segId).max / P + 1
     val complete = allSegments.map(_.segId).distinct.size == P * generations
 
-    // term dictionary over all committed segments.
-    // Explicit two-phase salted aggregation: head terms (Zipf skew) are first
-    // combined per (term, salt) bucket, then reduced per term -- the salted
-    // merge step the north rule requires for posting consolidation at scale.
-    // When the prior commit carries a termdict (every complete commit does),
-    // only the NEW dir is aggregated and merged with it — per-commit
-    // dictionary read cost is O(vocab + batch metadata), flat in the number
-    // of accumulated generations, instead of O(segments x vocab). A prior
-    // without a termdict (crashed append being resumed) falls back to the
-    // full scan, once.
+    // term dictionary over all committed segments. When the prior commit
+    // carries a termdict (every complete commit does), only the NEW dir is
+    // aggregated and merged with it — per-commit dictionary read cost is
+    // O(vocab + batch metadata), flat in the number of accumulated
+    // generations, instead of O(segments x vocab). A prior without a
+    // termdict (crashed append being resumed) falls back to the full scan,
+    // once.
     val termdictRel = if (complete) Some(f"termdict/snap-$snapId%05d") else None
     val termdictRows = termdictRel.map { rel =>
-      prior.flatMap(_.termdictDir) match {
-        case Some(prevRel) if newDirs.nonEmpty =>
-          lastTermdictPlan = s"delta:${newDirs.size}"
-          timed("termdict-delta")(writeTermdictDelta(spark,
-            s"$indexDir/$prevRel", newDirs.map(d => s"$indexDir/$d"),
-            s"$indexDir/$rel", cfg.saltBuckets))
-        case _ =>
-          lastTermdictPlan = s"full:${allDataDirs.size}"
-          timed("termdict")(writeTermdict(spark,
-            allDataDirs.map(d => s"$indexDir/$d"), s"$indexDir/$rel",
-            cfg.saltBuckets))
-      }
+      val prevDict = prior.flatMap(_.termdictDir).filter(_ => newDirs.nonEmpty)
+      val dirs = if (prevDict.isDefined) newDirs else allDataDirs
+      lastTermdictPlan = (if (prevDict.isDefined) "delta:" else "full:") + dirs.size
+      timed("termdict")(writeTermdict(spark, prevDict.map(d => s"$indexDir/$d"),
+        dirs.map(d => s"$indexDir/$d"), s"$indexDir/$rel"))
     }.getOrElse(-1L)
 
     // suggest artifact: sticky across append/resume — once an index was
@@ -847,10 +899,6 @@ object IndexBuilder {
       .toDF("url", "gen")
   }
 
-  /** Global term dictionary over committed segment dirs. Explicit two-phase
-    * salted aggregation: head terms (Zipf skew) are first combined per
-    * (term, salt) bucket, then reduced per term — the salted merge step the
-    * north rule requires for posting consolidation at scale. */
   /** Observability for the commit-time dictionary plan (mirrors the dedup
     * selector's decision record): "delta:<newDirs>" when the commit merged
     * the prior termdict with a new-dirs-only aggregation, "full:<dirs>"
@@ -858,32 +906,43 @@ object IndexBuilder {
     * a streaming index can see per-commit dictionary cost stays flat. */
   @volatile private[graft] var lastTermdictPlan: String = ""
 
-  /** Append-shaped termdict update: merge the prior committed termdict
-    * with an aggregation over ONLY the newly written data dirs. Exact by
-    * algebra — every termdict measure (sum df, sum cf, max maxTf,
-    * min minDl) is associative and commutative, and a committed termdict
-    * IS the exact reduction of its snapshot's dirs — so the merged output
-    * is value-identical to [[writeTermdict]] over all dirs (spec-pinned).
+  /** Salt buckets of the termdict's two-phase aggregation. A constant, not
+    * a setting: a delta commit merges its partials with the prior
+    * dictionary, so every commit of an index must salt alike, and the
+    * value changes no output row, only how head-term partials spread. */
+  private val SaltBuckets = 8
+
+  /** Write the global term dictionary of `dirsAbs`, merged with the
+    * committed dictionary `priorAbs` when given; returns the distinct-term
+    * count, persisted in SnapshotMeta so the warm handle's driver-dict
+    * admission gate needs no per-open count() job. Explicit two-phase
+    * salted aggregation: head terms (Zipf skew) are first combined per
+    * (term, salt) bucket, then reduced per term — the salted merge step
+    * the north rule requires for posting consolidation at scale.
+    *
+    * With a prior the result is value-identical to a full rebuild over all
+    * dirs (spec-pinned) by algebra: every termdict measure (sum df, sum
+    * cf, max maxTf, min minDl) is associative and commutative, and a
+    * committed termdict IS the exact reduction of its snapshot's dirs.
     * Cost: O(vocab + new-dir metadata rows) per commit instead of
-    * O(segments x vocab) — the round-4 "index-shaped residual" in the
-    * streaming upsert loop. Tombstone rows (term <= TermDels) contribute
-    * nothing on either path, matching the df-includes-deleted semantics
-    * the termdict keeps until a merge; the merge writes one fresh dir and
-    * takes the full path. The prior's rows ride one
-    * reserved salt bucket (-1): they are already one-row-per-term, so the
-    * Zipf head-term skew the salting defends against cannot come from
-    * them, only from the (bounded, <= P segments) new-dir partials. */
-  private[graft] def writeTermdictDelta(
-      spark: SparkSession, prevTermdictAbs: String, newDirsAbs: Seq[String],
-      outAbs: String, saltBuckets: Int): Long = {
-    val delta = readPostings(spark, newDirsAbs)
+    * O(segments x vocab). Tombstone rows (term <= TermDels) contribute
+    * nothing, matching the df-includes-deleted semantics the termdict
+    * keeps until a merge; the merge writes one fresh dir and passes no
+    * prior. The prior's rows ride one reserved salt bucket (-1): they are
+    * already one-row-per-term, so the Zipf head-term skew the salting
+    * defends against cannot come from them, only from the (bounded, <= P
+    * segments) new-dir partials. */
+  private[graft] def writeTermdict(spark: SparkSession, priorAbs: Option[String],
+      dirsAbs: Seq[String], outAbs: String): Long = {
+    val parts = readPostings(spark, dirsAbs)
       .filter(col("term") > TermDels)
-      .select(col("term"), pmod(col("segId"), lit(saltBuckets)).as("salt"),
+      .select(col("term"), pmod(col("segId"), lit(SaltBuckets)).as("salt"),
         col("df"), col("cf"), col("maxTf"), col("minDl"))
-    val prev = readTermdict(spark, prevTermdictAbs)
+    val all = priorAbs.fold(parts)(p => readTermdict(spark, p)
       .select(col("term"), lit(-1).as("salt"),
         col("df"), col("cf"), col("maxTf"), col("minDl"))
-    writeCounted(prev.unionByName(delta)
+      .unionByName(parts))
+    writeCounted(all
       .groupBy(col("term"), col("salt"))
       .agg(sum("df").as("df"), sum("cf").as("cf"),
         max("maxTf").as("maxTf"), min("minDl").as("minDl"))
@@ -905,23 +964,6 @@ object IndexBuilder {
       }
     }
     m.values.toSeq.sortBy(_.name)
-  }
-
-  private[graft] def writeTermdict(
-      spark: SparkSession, absDirs: Seq[String], outAbs: String,
-      saltBuckets: Int): Long = {
-    // returns the distinct-term count, persisted in SnapshotMeta so the
-    // warm handle's driver-dict admission gate needs no per-open count() job
-    writeCounted(readPostings(spark, absDirs)
-      .filter(col("term") > TermDels)
-      .select("term", "segId", "df", "cf", "maxTf", "minDl")
-      .groupBy(col("term"), pmod(col("segId"), lit(saltBuckets)).as("salt"))
-      .agg(sum("df").as("df"), sum("cf").as("cf"),
-        max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-      .groupBy("term")
-      .agg(sum("df").as("df"), sum("cf").as("cf"),
-        max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-      .sort("term"), outAbs)
   }
 
   /** Per-segment lineage metrics recomputed from a written data dir. The
@@ -1265,8 +1307,8 @@ object IndexBuilder {
 
     val metas = segmentMetrics(spark, s"$indexDir/$rel", rel)
     val dictRel = f"termdict/snap-$newId%05d"
-    val dictRows = writeTermdict(spark, Seq(s"$indexDir/$rel"),
-      s"$indexDir/$dictRel", IndexConfig().saltBuckets)
+    val dictRows = writeTermdict(spark, None, Seq(s"$indexDir/$rel"),
+      s"$indexDir/$dictRel")
     val (sugRel, sugRows) = snap.suggestDir match {
       case None => (None, 0L)
       case Some(_) =>

@@ -29,22 +29,6 @@ object Searcher {
     * columnar batch-size conf (see IndexHandle.postings). */
   private[search] val cacheBuildLock = new Object
 
-  /** Binary search in UTF-8 byte order — the order the builder sorted by.
-    * Static (no handle state) so executor-side probes don't capture the
-    * handle in their closure. */
-  private[search] def binarySearchUtf8(tab: Array[String], u: String): Int = {
-    var lo = 0
-    var hi = tab.length - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val c = OracleSearch.utf8Compare(tab(mid), u)
-      if (c < 0) lo = mid + 1
-      else if (c > 0) hi = mid - 1
-      else return mid
-    }
-    -1
-  }
-
   /** Balanced OR of `ps`: a left-deep reduce(_ || _) builds an OR tree
     * whose depth equals |ps|, and a large-k page touching many url chunks
     * then pays analyzer recursion/optimization cost per level; log depth
@@ -214,6 +198,40 @@ private[search] final case class NormCtx(
 private[search] final case class SegLens(
     global: Array[Int], byField: Map[String, Array[Int]])
 
+/** What scoring and match enumeration share for one segment: its posting
+  * rows by term, the ids allowlist (null = no ids clause) and one
+  * exclusion cursor per tombstone row. */
+private[search] final class SegmentScope(
+    val byTerm: scala.collection.Map[String, PostingRow],
+    val ids: Array[Long],
+    val tombstones: Seq[PostingIterator])
+
+private[search] object SegmentScope {
+
+  /** The scope of segment `segId` under `c`, or None when the segment
+    * cannot match: a required term is missing, or the ids clause lists no
+    * document of this segment. */
+  def of(segId: Int, rows: Seq[PostingRow], dels: Seq[PostingRow],
+      c: CompiledQuery, blockSize: Int): Option[SegmentScope] = {
+    val byTerm = new scala.collection.mutable.HashMap[String, PostingRow]
+    rows.foreach(r => byTerm.update(r.term, r))
+    if (!c.must.forall(byTerm.contains) || !c.filter.forall(byTerm.contains) ||
+        (c.hasIds && !c.idsBySeg.contains(segId))) None
+    else Some(new SegmentScope(byTerm,
+      if (c.hasIds) c.idsBySeg(segId) else null,
+      // tombstoned docs (Deletes) are zero-idf exclusion cursors — the same
+      // veto machinery as mustNot, so WAND/conjunction pruning stays exact
+      dels.map(cursor(_, blockSize))))
+  }
+
+  /** A started zero-idf cursor: navigation only, no scoring. */
+  def cursor(r: PostingRow, blockSize: Int): PostingIterator = {
+    val it = new PostingIterator(r, 0.0, blockSize, 1.0, null)
+    it.start()
+    it
+  }
+}
+
 /** Per-segment evaluation shared by the distributed and served paths. */
 private[search] object BoolEval {
 
@@ -230,21 +248,9 @@ private[search] object BoolEval {
       floor: Double = Double.NegativeInfinity,
       // search_after paging cursor (Wand.topK docs)
       after: SegHit = null): Iterator[(Long, Double, Int)] = {
-    val byTerm = new scala.collection.mutable.HashMap[String, PostingRow]
-    rows.foreach(r => byTerm.update(r.term, r))
-    // a segment missing any required term cannot match
-    var i = 0
-    while (i < c.must.length) {
-      if (!byTerm.contains(c.must(i))) return Iterator.empty; i += 1
-    }
-    i = 0
-    while (i < c.filter.length) {
-      if (!byTerm.contains(c.filter(i))) return Iterator.empty; i += 1
-    }
-    val ids: Array[Long] =
-      if (!c.hasIds) null
-      else c.idsBySeg.getOrElse(segId, return Iterator.empty)
-
+    val scope = SegmentScope.of(segId, rows, dels, c, blockSize)
+      .getOrElse(return Iterator.empty)
+    val byTerm = scope.byTerm
     // ONE cursor per term, shared across the required/scoring/excluded
     // roles: a must term otherwise decompresses its posting list twice per
     // segment per query. Sharing is sound because every per-candidate
@@ -260,18 +266,11 @@ private[search] object BoolEval {
       it
     })
     val scoring = c.scoringTerms.filter(byTerm.contains).map(iter)
-    // tombstoned docs (Deletes) are zero-idf exclusion cursors — the same
-    // veto machinery as mustNot, so WAND/conjunction pruning stays exact
-    val excluded = c.mustNot.filter(byTerm.contains).map(iter) ++
-      dels.map { r =>
-        val d = new PostingIterator(r, 0.0, blockSize, 1.0, null)
-        d.start()
-        d
-      }
+    val excluded = c.mustNot.filter(byTerm.contains).map(iter) ++ scope.tombstones
     val hits =
       if (c.hasRequired)
         BooleanScorer.conjunctiveTopK((c.must ++ c.filter).map(iter), scoring,
-          excluded, ids, IndexBuilder.segBase(segId), k, floor,
+          excluded, scope.ids, IndexBuilder.segBase(segId), k, floor,
           after)
       else if (scoring.isEmpty) Array.empty[SegHit]
       else Wand.topK(scoring, k, excluded, floor, after)
@@ -293,32 +292,13 @@ private[graft] object MatchEnum {
       dels: Seq[PostingRow],
       c: CompiledQuery,
       blockSize: Int): Iterator[Long] = {
-    val byTerm = new scala.collection.mutable.HashMap[String, PostingRow]
-    rows.foreach(r => byTerm.update(r.term, r))
-    var i = 0
-    while (i < c.must.length) {
-      if (!byTerm.contains(c.must(i))) return Iterator.empty; i += 1
-    }
-    i = 0
-    while (i < c.filter.length) {
-      if (!byTerm.contains(c.filter(i))) return Iterator.empty; i += 1
-    }
-    val ids: Array[Long] =
-      if (!c.hasIds) null
-      else c.idsBySeg.getOrElse(segId, return Iterator.empty)
-
+    val scope = SegmentScope.of(segId, rows, dels, c, blockSize)
+      .getOrElse(return Iterator.empty)
+    val ids = scope.ids
     // idf/avgdl/lens are irrelevant without scoring — cursors only navigate
-    def iter(t: String): PostingIterator = {
-      val it = new PostingIterator(byTerm(t), 0.0, blockSize, 1.0, null)
-      it.start()
-      it
-    }
-    val excluded = c.mustNot.filter(byTerm.contains).map(iter) ++
-      dels.map { r =>
-        val d = new PostingIterator(r, 0.0, blockSize, 1.0, null)
-        d.start()
-        d
-      }
+    def iter(t: String): PostingIterator = SegmentScope.cursor(scope.byTerm(t), blockSize)
+    val excluded = c.mustNot.filter(scope.byTerm.contains).map(iter) ++
+      scope.tombstones
     def notExcluded(doc: Long): Boolean = {
       var e = 0
       var veto = false
@@ -369,7 +349,7 @@ private[graft] object MatchEnum {
       ids.iterator.filter(notExcluded)
     } else {
       // pure-should: union of the scoring cursors' docs
-      val cursors = c.scoringTerms.filter(byTerm.contains).map(iter)
+      val cursors = c.scoringTerms.filter(scope.byTerm.contains).map(iter)
       if (cursors.isEmpty) return Iterator.empty
       new Iterator[Long] {
         private var nextDoc = advance()
@@ -721,77 +701,16 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
         .collect { case (t, Some(df)) => t -> df }
   }
 
-  /** ids (urls) -> per-segment sorted docIds, resolved EXECUTOR-side: each
-    * url chunk of the candidate segments binary-searches the probe urls
-    * that hash to its segment (seg-local rank IS the url sort position,
-    * and chunk c holds ranks [c*markerChunkDocs, (c+1)*markerChunkDocs)),
-    * so only (segId, docId) pairs — bounded by the probe list — cross to
-    * the driver. The whole-table driver fetch this replaces decoded every
-    * candidate segment's url table into driver memory (multi-GB at the
-    * documented 10^8-doc segment sizing) to answer a handful of probes.
-    * A url may exist in one segment per generation; all generations are
-    * probed. Tombstoned urls still resolve — their docIds are vetoed at
-    * scoring time, and [[graft.index.Deletes]] uses this to find the
-    * docIds to tombstone. */
-  private[graft] def resolveDocIds(urls: Seq[String]): Map[Int, Array[Long]] = {
-    if (urls.isEmpty) return Map.empty
-    val resolved = cachedFetch(idsCache, idsCache, urls.distinct)(
-      missing => resolveUncached(missing),
+  /** ids (urls) -> per-segment sorted docIds of every generation,
+    * tombstoned docs included (they are vetoed at scoring time): the LRU
+    * over [[IndexBuilder.resolveUrls]], probing this handle's postings. */
+  private[graft] def resolveDocIds(urls: Seq[String]): Map[Int, Array[Long]] =
+    IndexBuilder.docIdsBySeg(cachedFetch(idsCache, idsCache, urls.distinct)(
+      IndexBuilder.resolveUrls(postings, snap, _, 0 until snap.generations),
       // the handle pins its snapshot, so an absent url stays absent —
       // negative-cache it (same argument as fetchPostings), making
       // repeated ids lookups job-free (the S10 LRU point-lookup surface)
-      absent = Some(_ => Array.empty[(Int, Long)]))
-    resolved.valuesIterator.flatten.toArray
-      .groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2).sorted }
-  }
-
-  /** The Spark job behind [[resolveDocIds]], for urls not in the LRU. */
-  private def resolveUncached(urls: Seq[String])
-      : Map[String, Array[(Int, Long)]] = {
-    import spark.implicits._
-    val P = snap.numSegments
-    val gens = snap.generations
-    val chunkDocs = snap.markerChunkDocs
-    // task-closure probe map, bounded by the caller's url list
-    val probes: Map[Int, Array[String]] =
-      urls.groupBy(u => Hashing.segmentOf(u, P))
-        .map { case (s0, us) => s0 -> us.toArray }
-    val segs = probes.keys.flatMap(s0 => (0 until gens).map(_ * P + s0)).toSeq
-    val found = postings
-      .filter(col("term") === IndexBuilder.TermUrls &&
-        col("segId").isin(segs: _*))
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          val targets = probes.getOrElse(r.segId % P, Array.empty[String])
-          // range precheck against the chunk's (first, last) urls — a
-          // prefix walk, two String allocations — so only the ONE chunk
-          // per segment that can bracket a probe pays the full decode
-          // (2^20 String allocations); a point lookup against a 10^8-doc
-          // segment otherwise decodes ~100 chunks to run ~20 comparisons
-          val inRange =
-            if (targets.isEmpty) targets
-            else Varint.firstLastStrings(r.tfBytes) match {
-              case None => Array.empty[String]
-              case Some((first, last)) => targets.filter(u =>
-                OracleSearch.utf8Compare(u, first) >= 0 &&
-                OracleSearch.utf8Compare(u, last) <= 0)
-            }
-          if (inRange.isEmpty) Iterator.empty
-          else {
-            val tab = Varint.decodeStrings(r.tfBytes)
-            val base =
-              IndexBuilder.segBase(r.segId) + r.chunk.toLong * chunkDocs
-            inRange.iterator.flatMap { u =>
-              val idx = Searcher.binarySearchUtf8(tab, u)
-              if (idx >= 0) Iterator.single((u, r.segId, base + idx + 1))
-              else Iterator.empty
-            }
-          }
-        }
-      }.collect()
-    found.groupBy(_._1)
-      .map { case (u, arr) => u -> arr.map(t => (t._2, t._3)) }
-  }
+      absent = Some(_ => Array.empty[(Int, Long)])).valuesIterator)
 
   /** Compile against this snapshot; None = provably-empty result. */
   private def compile(q0: BoolQuery): Option[CompiledQuery] = {
@@ -1362,7 +1281,7 @@ object OracleSearch {
     * supplementary characters (a surrogate pair sorts below U+E000 in UTF-16
     * but above it in UTF-8). The oracle must rank urls exactly like the
     * builder's `orderBy(url)` or docIds diverge for non-ASCII urls. */
-  private[search] def utf8Compare(a: String, b: String): Int = {
+  private[graft] def utf8Compare(a: String, b: String): Int = {
     val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val n = math.min(x.length, y.length)

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.index.{IndexBuilder, IndexConfig, Snapshot, SnapshotMeta, Varint}
+import graft.index.{Hashing, IndexBuilder, IndexConfig, Snapshot, SnapshotMeta}
 
 /** Incremental index maintenance from a page stream — the streaming
   * counterpart of the engine's own batch build (SURVEY §2.10 applied to
@@ -20,8 +19,13 @@ import graft.index.{IndexBuilder, IndexConfig, Snapshot, SnapshotMeta, Varint}
   * some url of the batch either is a document of the TOP generation (fully
   * applied → skip), or the top generation is incomplete (crash mid-append →
   * resume completes it deterministically from the same batch), or neither
-  * (apply). A merge (`IndexBuilder.compact`) folds every generation into
-  * generation 0, then the only one, and drops deleted documents, so a batch
+  * (apply). Whether a url is in the top generation, and whether a batch
+  * is the crashed one ([[resumeMatchesBatch]]), are both asked of the
+  * index's one url -> docId resolver (`IndexBuilder.resolveUrls`) over
+  * the top generation only, so their cost follows the batch, not the
+  * generation count; this object reads no url row itself. A merge
+  * (`IndexBuilder.compact`) folds every generation into generation 0,
+  * then the only one, and drops deleted documents, so a batch
   * applied before it still resolves there unless every one of its urls was
   * deleted before the merge. The snapshot log doubles as the idempotence
   * ledger. Input contract (BASELINE.json input_hint): url is the primary
@@ -79,55 +83,55 @@ object IndexStream {
 
   /** Content evidence that `pages` is the crashed generation's own batch:
     * segment content is a pure function of the batch (urls hash-route to
-    * segments, immutably), so EVERY committed segment of the incomplete
-    * generation must hold EXACTLY the batch urls routing to it. Checked
-    * over ALL committed top-generation segments at once with a single pair
-    * of anti-joins on (segId, url) (executor-side; only counts cross to
-    * the driver). Auditing one segment was not enough: a small batch can
+    * segments, immutably), so EVERY committed segment s of the incomplete
+    * generation must hold EXACTLY the batch urls routing to it. The url
+    * resolver (`IndexBuilder.resolveUrls`, top generation only) checks
+    * that every distinct batch url routing to s resolves into s, and
+    * `SegmentMeta(s).docs` — the length of s's url table — must equal
+    * their number: together the same url set, without reading url rows.
+    * A segment holding a url twice fails the count, so such a resume is
+    * refused. Auditing one segment was not enough: a small batch can
     * leave some committed segments url-empty, and a foreign batch with no
     * urls hashing to the audited segment would pass a single-segment
     * check. With every committed segment constrained, a foreign batch must
     * produce the identical url->segment image across all of them —
-    * i.e. be content-identical where it matters. */
+    * i.e. be content-identical where it matters. The batch's distinct
+    * urls are held on the driver once. */
   private[graft] def resumeMatchesBatch(spark: SparkSession, indexDir: String,
       snap: SnapshotMeta, pages: DataFrame): Boolean = {
     import spark.implicits._
     val P = snap.numSegments
     val topGen = snap.generations - 1
-    val committedTop = snap.completedSegIds.filter(_ >= topGen * P).toSeq
+    val committedTop = snap.segments.filter(_.segId >= topGen * P)
     if (committedTop.isEmpty) return true // nothing committed constrains the batch
-    val segUrls = IndexBuilder.readPostings(spark,
-        snap.dataDirs.map(d => s"$indexDir/$d"))
-      .filter(col("segId").isin(committedTop: _*) &&
-        col("term") === IndexBuilder.TermUrls)
-      .as[graft.index.PostingRow]
-      .flatMap(r => Varint.decodeStrings(r.tfBytes).map(u => (r.segId, u)))
-      .toDF("segId", "url")
-    val batchSegUrls = pages.select(col("url"))
-      .withColumn("segId",
-        graft.plans.GraftFunctions.segment_of(col("url"), P) + lit(topGen * P))
-      .filter(col("segId").isin(committedTop: _*))
-      .select("segId", "url")
-    segUrls.join(batchSegUrls, Seq("segId", "url"), "left_anti").isEmpty &&
-      batchSegUrls.join(segUrls, Seq("segId", "url"), "left_anti").isEmpty
+    val routed = pages.select("url").as[String].collect().distinct
+      .groupBy(u => topGen * P + Hashing.segmentOf(u, P))
+    def routedTo(s: Int) = routed.getOrElse(s, Array.empty[String])
+    val found = IndexBuilder.resolveUrls(
+      IndexBuilder.snapshotPostings(spark, indexDir, snap), snap,
+      committedTop.flatMap(m => routedTo(m.segId)), topGen to topGen)
+    committedTop.forall { m =>
+      routedTo(m.segId).length == m.docs && routedTo(m.segId).forall(u =>
+        found.get(u).exists(_.exists(_._1 == m.segId)))
+    }
   }
 
   /** True iff some url of `pages` is already a document (tombstoned or
-    * not) of the latest snapshot's TOP generation: the upsert's url-marker
-    * scan, pruned to the top generation's segments the batch's urls route
-    * to, semi-joined with the batch executor-side — only a boolean crosses
-    * to the driver. Any url, not one: a delete followed by a merge removes
-    * a url from the tables, and the batch's other urls still tell. */
+    * not) of the latest snapshot's TOP generation: the url resolver over
+    * the top generation only, so the per-batch cost stays flat as
+    * generations pile up between merges. Any url, not one: a delete
+    * followed by a merge removes a url from the tables, and the batch's
+    * other urls still tell. The batch's distinct urls are held on the
+    * driver once. */
   private[graft] def inTopGeneration(
       spark: SparkSession, indexDir: String, pages: DataFrame): Boolean =
     Snapshot.latest(indexDir) match {
       case None => false
       case Some(snap) =>
-        val top = (snap.generations - 1) * snap.numSegments
-        val segs = IndexBuilder.upsertCandidateSegs(pages, snap).filter(_ >= top)
-        segs.nonEmpty && IndexBuilder.upsertMarkerScan(spark, indexDir, snap, segs)
-          .join(pages.select("url"), Seq("url"), "left_semi")
-          .head(1).nonEmpty
+        import spark.implicits._
+        val top = snap.generations - 1
+        IndexBuilder.resolveUrls(IndexBuilder.snapshotPostings(spark, indexDir, snap),
+          snap, pages.select("url").as[String].collect(), top to top).nonEmpty
     }
 
   /** foreachBatch body; public so tests can drive replay scenarios. */
@@ -262,7 +266,7 @@ object IndexStream {
       // lineage's replayed batch complete the foreign partial generation —
       // silent mixed-generation corruption). The legitimate same-lineage
       // verbatim replay passes the content check anyway, so demanding it
-      // always costs one anti-join pair on the rare crash path and closes
+      // always costs one resolver job on the rare crash path and closes
       // the hole; it also covers a first-batch crash with no ledger yet.
       buildOrResume(spark, indexDir, cfg, processed,
           p => resumeMatchesBatch(spark, indexDir, p, processed)) { _ =>

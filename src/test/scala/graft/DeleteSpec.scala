@@ -269,6 +269,44 @@ class DeleteSpec extends SparkSuite {
       s"${localBytes.get} bytes of local relations in the tombstone write")
   }
 
+  test("delete by url ships its url probes by broadcast, not inside the task") {
+    val dir = freshIndex()
+    // 10^5 urls, about 5 MB, all but five absent: captured in the url
+    // resolver's task closure they were serialized into the task binary,
+    // which Spark reports as a WARN above 1000 KiB
+    val present = docs.take(5).map(_._1)
+    val urls = present ++ (0 until 100000).map(i =>
+      f"https://absent.example.org/crawl/section-$i%06d/page.html")
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "task-size", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("large task binary") || m.contains("very large size"))
+          warned.add(m)
+      }
+    }
+    appender.start()
+    val loggers = Seq("org.apache.spark.scheduler.DAGScheduler",
+        "org.apache.spark.scheduler.TaskSetManager")
+      .map(n => org.apache.logging.log4j.LogManager.getLogger(n)
+        .asInstanceOf[org.apache.logging.log4j.core.Logger])
+    loggers.foreach(_.addAppender(appender))
+    val (control, snap) =
+      try {
+        // a 2 MB closure must be reported, or the check went blind
+        val big = new Array[Byte](2 << 20)
+        spark.sparkContext.parallelize(Seq(1), 1).map(_ + big.length).count()
+        val c = warned.size
+        warned.clear()
+        (c, Deletes.delete(spark, dir, urls))
+      } finally loggers.foreach(_.removeAppender(appender))
+    assert(control > 0, "no task-size warning observed: the check went blind")
+    assert(snap.deletedDocs === present.size)
+    assert(warned.isEmpty, warned.asScala.mkString("\n"))
+  }
+
   test("deletes across appended generations") {
     val dir = Files.createTempDirectory("graft-del-gen").toString
     val batchA = Corpus.pages(spark, 250, seed = 7, vocabSize = 500, medianLen = 50)

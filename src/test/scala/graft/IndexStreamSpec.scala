@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.corpus.Corpus
-import graft.index.{Deletes, IndexBuilder, IndexConfig, Snapshot}
+import graft.index.{Deletes, Hashing, IndexBuilder, IndexConfig, Snapshot}
 import graft.search.Searcher
 import graft.streaming.IndexStream
 
@@ -141,6 +141,46 @@ class IndexStreamSpec extends SparkSuite {
     IndexStream.applyBatch(spark, idxDir, cfg)(chunks(1).toDF("url", "text"), 2L)
     assert(Snapshot.latest(idxDir).get.isComplete)
     assert(Snapshot.latest(idxDir).get.numDocs === 300)
+  }
+
+  test("resume refuses a near-miss batch; the verbatim batch resumes to the one-shot result") {
+    val (_, all) = stage()
+    val idxDir = Files.createTempDirectory("graft-istream-near").toString
+    val chunks = all.grouped(100).toSeq
+    val P = cfg.numSegments
+    IndexStream.applyBatch(spark, idxDir, cfg)(chunks(0).toDF("url", "text"), 0L)
+    // crash mid-append of chunk 1 (generation 1, segs 4..7; only 4,5 commit)
+    val committed = Set(4, 5)
+    IndexBuilder.append(spark, chunks(1).toDF("url", "text"), idxDir,
+      simulateOnlySegments = Some(committed))
+    val partial = Snapshot.latest(idxDir).get
+    def routesToCommitted(u: String) =
+      committed.contains(P + Hashing.segmentOf(u, P))
+    val dropped = chunks(1).find(d => routesToCommitted(d._1)).get
+    val foreign = chunks(2).find(d => routesToCommitted(d._1)).get
+    // one url short of a committed segment (the url count refuses it), one
+    // foreign url in it, or one swapped for a foreign one (the resolver
+    // check refuses it with the count intact)
+    val short = chunks(1).filterNot(_ == dropped)
+    Seq(short, chunks(1) :+ foreign, short :+ foreign).foreach { b =>
+      val e = intercept[IllegalStateException](
+        IndexStream.applyBatch(spark, idxDir, cfg)(b.toDF("url", "text"), 1L))
+      assert(e.getMessage.contains("rollback"))
+      assert(Snapshot.latest(idxDir).get.id === partial.id)
+    }
+    IndexStream.applyBatch(spark, idxDir, cfg)(chunks(1).toDF("url", "text"), 1L)
+    val oneShot = Files.createTempDirectory("graft-istream-near1").toString
+    IndexBuilder.build(spark, chunks(0).toDF("url", "text"), oneShot, cfg)
+    IndexBuilder.append(spark, chunks(1).toDF("url", "text"), oneShot)
+    def segs(dir: String) = Snapshot.latest(dir).get.segments
+      .map(m => (m.segId, m.docs, m.terms, m.postings, m.sumDocLen))
+    assert(Snapshot.latest(idxDir).get.isComplete)
+    assert(segs(idxDir) === segs(oneShot))
+    Seq("the data", "merge sort", "crawl web page").foreach { q =>
+      assert(Searcher.topK(spark, idxDir, q, 10).map(h => (h.docId, h.url, h.score)).toSeq ===
+        Searcher.topK(spark, oneShot, q, 10).map(h => (h.docId, h.url, h.score)).toSeq,
+        s"query: $q")
+    }
   }
 
   test("inTopGeneration detects committed urls only") {

@@ -7,12 +7,12 @@ import graft.index.{Deletes, FieldDef, IndexBuilder, IndexConfig, Snapshot}
 
 /** Incremental commit-time artifact maintenance: an append-shaped commit
   * merges the prior termdict with a new-dirs-only aggregation
-  * (`IndexBuilder.writeTermdictDelta`) and sums per-field stats
-  * driver-side, instead of rescanning every committed dir. These tests
-  * pin the two claims that make that safe at 10^12 docs:
+  * (`IndexBuilder.writeTermdict` given the prior dictionary) and sums
+  * per-field stats driver-side, instead of rescanning every committed dir.
+  * These tests pin the two claims that make that safe at 10^12 docs:
   *   1. EXACTNESS — the delta-merged termdict is value-identical to a
-  *      full `writeTermdict` rebuild over all dirs, across appends,
-  *      tombstones (df keeps dead docs until purge) and post-purge
+  *      full `writeTermdict` rebuild (no prior) over all dirs, across
+  *      appends, tombstones (df keeps dead docs until purge) and post-purge
   *      appends;
   *   2. PLAN — the commit actually took the delta path (the structural
   *      guard; timing lives in the perfbench `update` workload), falling back to
@@ -51,8 +51,8 @@ class TermdictDeltaSpec extends SparkSuite {
   private def fullRebuild(indexDir: String): Seq[DictRow] = {
     val snap = Snapshot.latest(indexDir).get
     val out = Files.createTempDirectory("graft-td-full").toString + "/dict"
-    IndexBuilder.writeTermdict(spark,
-      snap.dataDirs.map(d => s"$indexDir/$d"), out, cfg.saltBuckets)
+    IndexBuilder.writeTermdict(spark, None,
+      snap.dataDirs.map(d => s"$indexDir/$d"), out)
     readDict(out)
   }
 

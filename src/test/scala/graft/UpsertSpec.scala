@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.analysis.Analyzer
 import graft.corpus.Corpus
 import graft.index.{Deletes, Hashing, IndexBuilder, IndexConfig, Snapshot}
@@ -30,15 +36,47 @@ class UpsertSpec extends SparkSuite {
     .collect { case ((url, text), i) if i % 5 == 0 =>
       (url, text + " zzrecrawled fresh tokens") }
 
+  /** PushedFilters of every posting scan that `body` executes, taken from
+    * the executed plans. */
+  private def pushedScans[T](body: => T): (T, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val walk = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        walk.foreach(qe.executedPlan) {
+          case s: FileSourceScanExec => s.metadata.get("PushedFilters").foreach(seen.add)
+          case _ =>
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (r, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private val urlTerm = s"EqualTo(term,${IndexBuilder.TermUrls})"
+
+  /** The segIds a scan's pushed `In`/`EqualTo` filter on segId admits. */
+  private def pushedSegs(filters: String): Set[Int] =
+    ("""In\(segId, \[([0-9, ]+)\]\)""".r.findFirstMatchIn(filters)
+      .map(_.group(1).split(",").map(_.trim.toInt).toSet) orElse
+      """EqualTo\(segId,(\d+)\)""".r.findFirstMatchIn(filters)
+        .map(m => Set(m.group(1).toInt)))
+      .getOrElse(fail(s"no segId filter pushed: $filters"))
+
   test("upsert candidate segments stay batch-bounded as the index grows") {
-    // the regression guard for streaming-upsert flatness: the marker scan
-    // reads exactly |distinct s0(batch urls)| x generations segments —
+    // the regression guard for streaming-upsert flatness: the url resolver
+    // scans exactly |distinct s0(batch urls)| x generations segments —
     // O(batch x generations), NEVER O(index). Timing lives in the
     // perfbench `update` workload (refresh cost on 2000-, 8000- and
     // 16000-page bases, perfbench/README.md); this pins the count formula.
     val dir = freshIndex()
+    val P = cfg.numSegments
     val batchUrls = docs.take(7).map(_._1)
-    val batch = batchUrls.map(u => (u, "probe text")).toDF("url", "text")
+    val s0 = batchUrls.map(u => Hashing.segmentOf(u, P)).distinct
     Seq(1, 2, 4).foreach { gens =>
       while (Snapshot.latest(dir).get.generations < gens) {
         val g = Snapshot.latest(dir).get.generations
@@ -46,15 +84,18 @@ class UpsertSpec extends SparkSuite {
           medianLen = 40, startId = 1000L * g).select("url", "text").toDF()
         IndexBuilder.append(spark, extra, dir)
       }
-      val snap = Snapshot.latest(dir).get
-      assert(snap.generations === gens)
-      val cand = IndexBuilder.upsertCandidateSegs(batch, snap)
-      val s0 = batchUrls.map(u =>
-        graft.index.Hashing.segmentOf(u, cfg.numSegments)).distinct.sorted
-      assert(cand.sorted === s0.flatMap(x =>
-        (0 until gens).map(_ * cfg.numSegments + x)).sorted)
-      assert(cand.size === s0.size * gens)
-      assert(cand.size <= batchUrls.size * gens) // batch-bounded, not index
+      assert(Snapshot.latest(dir).get.generations === gens)
+      val batch = batchUrls.map(u => (u, s"probe text $gens")).toDF("url", "text")
+      val (after, scans) = pushedScans(IndexBuilder.upsert(spark, batch, dir))
+      val urlScans = scans.filter(_.contains(urlTerm))
+      assert(urlScans.size === 1, s"url-table scans: $scans")
+      assert(pushedSegs(urlScans.head) ===
+        s0.flatMap(x => (0 until gens).map(_ * P + x)).toSet)
+      // end state: each batch url has one live doc, in the new generation
+      assert(after.generations === gens + 1)
+      val hits = Searcher.search(spark, dir, BoolQuery(ids = Some(batchUrls)), 20)
+      assert(hits.map(_.url).sorted.toSeq === batchUrls.sorted)
+      assert(hits.forall(h => (h.docId >> IndexBuilder.SegShift) >= gens * P))
     }
   }
 
@@ -83,32 +124,30 @@ class UpsertSpec extends SparkSuite {
 
   test("upsert marker scan is batch-bounded: candidate segments only") {
     val dir = freshIndex()
-    // grow to 3 generations so the candidate set must span generations
+    val P = cfg.numSegments
     IndexBuilder.upsert(spark, recrawl.toDF("url", "text"), dir)
     val snap = Snapshot.latest(dir).get
     assert(snap.generations === 2)
-    // a single-url batch: candidates = {g*P + murmur3(url) mod P} exactly
+    // a single url: the resolver scans {g*P + segmentOf(url, P)} exactly,
+    // with the marker-term equality and the segId prune both pushed into
+    // the parquet scan (it reads O(batch) segments, not the whole index)
     val u = recrawl.head._1
-    val batch = Seq((u, "one fresh doc")).toDF("url", "text")
-    val cands = IndexBuilder.upsertCandidateSegs(batch, snap)
-    val s0 = graft.index.Hashing.segmentOf(u, cfg.numSegments)
-    assert(cands === (0 until snap.generations).map(_ * cfg.numSegments + s0))
-    // the scan's pushed parquet filters carry the candidate prune (the scan
-    // reads O(batch) segments, not the whole index)
-    val planStr = IndexBuilder.upsertMarkerScan(spark, dir, snap, cands)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(planStr.contains("In(segId"), s"segId pushdown missing:\n$planStr")
-    // and the scan's OUTPUT rows come from candidate segments only
-    val segsTouched = IndexBuilder.upsertMarkerScan(spark, dir, snap, cands)
-      .select("segId").distinct().collect().map(_.getInt(0)).toSet
-    assert(segsTouched.subsetOf(cands.toSet))
+    val s0 = Hashing.segmentOf(u, P)
+    val (found, scans) = pushedScans(IndexBuilder.resolveUrls(
+      IndexBuilder.snapshotPostings(spark, dir, snap), snap, Seq(u),
+      0 until snap.generations))
+    assert(scans.size === 1, s"scans: $scans")
+    assert(scans.head.contains(urlTerm), s"term pushdown missing: ${scans.head}")
+    assert(pushedSegs(scans.head) === Set(s0, P + s0))
+    // both versions resolve, the tombstoned generation-0 one included
+    assert(found.keySet === Set(u))
+    assert(found(u).map(_._1).sorted.toSeq === Seq(s0, P + s0))
     // end-to-end: the pruned upsert behaves identically (third version wins)
-    val after = IndexBuilder.upsert(spark, batch, dir)
+    val after = IndexBuilder.upsert(spark, Seq((u, "one fresh doc")).toDF("url", "text"), dir)
     assert(after.generations === 3)
     val hits = Searcher.search(spark, dir, BoolQuery(ids = Some(Seq(u))), 10)
     assert(hits.map(_.url).toSeq === Seq(u))
-    assert((hits.head.docId >> IndexBuilder.SegShift) >= 2 * cfg.numSegments)
+    assert((hits.head.docId >> IndexBuilder.SegShift) >= 2 * P)
   }
 
   test("upsert of never-seen urls == plain append (no tombstone commit)") {
@@ -211,7 +250,7 @@ class UpsertSpec extends SparkSuite {
     info(s"upsert ${up.count} jobs, warm open ${open.count} jobs")
     assert(up.schemaInference.isEmpty && open.schemaInference.isEmpty,
       s"schema-inference jobs:\n$up\n--\n$open")
-    assert(up.count <= 16, s"upsert jobs:\n$up")
+    assert(up.count <= 12, s"upsert jobs:\n$up")
     assert(open.count <= 5, s"warm open jobs:\n$open")
   }
 }
