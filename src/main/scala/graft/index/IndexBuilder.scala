@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSes
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.CollectionAccumulator
 
 import graft.analysis.Analyzer
 import graft.search.{Bm25, OracleSearch}
@@ -130,7 +131,8 @@ case class MergeRow(segId: Int, url: String, docId: Long, row: PostingRow)
   *     -> analyze once, flatMap to doc/posting rows [narrow]
   *     -> sortWithinPartitions(term, docId)         [external sort; segId
   *        is constant per partition, so term leads for a useful sort prefix]
-  *     -> mapPartitions streaming encoder           [narrow, run-bounded mem]
+  *     -> mapPartitions streaming encoder           [narrow, run-bounded mem;
+  *        per-segment metrics observed on its output]
   *     -> parquet segments + snapshot commit
   *
   * Global stats (N, sum doclen) are exact integer sums over per-segment
@@ -432,10 +434,7 @@ object IndexBuilder {
       gens: Range): Map[String, Array[(Int, Long)]] = {
     val P = snap.numSegments
     val chunkDocs = snap.markerChunkDocs
-    val probes: Map[Int, Array[String]] =
-      urls.distinct.groupBy(u => Hashing.segmentOf(u, P))
-        .map { case (s0, us) => s0 -> us.toArray }
-    val segs = probes.keys.toSeq.sorted.flatMap(s0 => gens.map(_ * P + s0))
+    val (probes, segs) = routeUrls(urls, P, gens)
     if (segs.isEmpty) return Map.empty
     val spark = postings.sparkSession
     import spark.implicits._
@@ -445,35 +444,51 @@ object IndexBuilder {
         .filter(col("term") === lit(TermUrls) && col("segId").isin(segs: _*))
         .mapPartitions { it =>
           val probes = bc.value
-          it.flatMap { r =>
-            val targets = probes.getOrElse(r.segId % P, Array.empty[String])
-            // range precheck against the chunk's (first, last) urls — a
-            // prefix walk, two String allocations — so only the ONE chunk
-            // per segment that can bracket a probe pays the full decode
-            // (2^20 String allocations); a point lookup against a 10^8-doc
-            // segment otherwise decodes ~100 chunks to run ~20 comparisons
-            val inRange =
-              if (targets.isEmpty) targets
-              else Varint.firstLastStrings(r.tfBytes) match {
-                case None => Array.empty[String]
-                case Some((first, last)) => targets.filter(u =>
-                  OracleSearch.utf8Compare(u, first) >= 0 &&
-                  OracleSearch.utf8Compare(u, last) <= 0)
-              }
-            if (inRange.isEmpty) Iterator.empty
-            else {
-              val tab = Varint.decodeStrings(r.tfBytes)
-              val base = segBase(r.segId) + r.chunk.toLong * chunkDocs
-              inRange.iterator.flatMap { u =>
-                val idx = binarySearchUtf8(tab, u)
-                if (idx >= 0) Iterator.single((u, r.segId, base + idx + 1))
-                else Iterator.empty
-              }
-            }
-          }
+          it.flatMap(r => findInChunk(r, probes, P, chunkDocs)
+            .map { case (u, d) => (u, r.segId, d) })
         }.collect()
       finally bc.destroy()
     found.groupBy(_._1).map { case (u, arr) => u -> arr.map(t => (t._2, t._3)) }
+  }
+
+  /** The resolver's probes, the distinct `urls` keyed by the slot
+    * segmentOf(url, P) they route to, and the candidate segments
+    * {g*P + slot : g in gens} they can live in, ascending by slot. */
+  private[index] def routeUrls(urls: scala.collection.Seq[String], P: Int,
+      gens: Range): (Map[Int, Array[String]], Seq[Int]) = {
+    val probes = urls.distinct.groupBy(u => Hashing.segmentOf(u, P))
+      .map { case (s0, us) => s0 -> us.toArray }
+    (probes, probes.keys.toSeq.sorted.flatMap(s0 => gens.map(_ * P + s0)))
+  }
+
+  /** The (url, docId) of every probe routing to `r`'s slot that url-table
+    * chunk row `r` holds, dead slots included: the resolver's executor-side
+    * search, shared with the tombstone-by-url write. */
+  private[index] def findInChunk(r: PostingRow, probes: Map[Int, Array[String]],
+      P: Int, chunkDocs: Int): Iterator[(String, Long)] = {
+    val targets = probes.getOrElse(r.segId % P, Array.empty[String])
+    // range precheck against the chunk's (first, last) urls — a prefix
+    // walk, two String allocations — so only the ONE chunk per segment
+    // that can bracket a probe pays the full decode (2^20 String
+    // allocations); a point lookup against a 10^8-doc segment otherwise
+    // decodes ~100 chunks to run ~20 comparisons
+    val inRange =
+      if (targets.isEmpty) targets
+      else Varint.firstLastStrings(r.tfBytes) match {
+        case None => Array.empty[String]
+        case Some((first, last)) => targets.filter(u =>
+          OracleSearch.utf8Compare(u, first) >= 0 &&
+          OracleSearch.utf8Compare(u, last) <= 0)
+      }
+    if (inRange.isEmpty) Iterator.empty
+    else {
+      val tab = Varint.decodeStrings(r.tfBytes)
+      val base = segBase(r.segId) + r.chunk.toLong * chunkDocs
+      inRange.iterator.flatMap { u =>
+        val idx = binarySearchUtf8(tab, u)
+        if (idx >= 0) Iterator.single((u, base + idx + 1)) else Iterator.empty
+      }
+    }
   }
 
   /** Binary search in UTF-8 byte order, the order the build sorts urls by. */
@@ -517,12 +532,13 @@ object IndexBuilder {
     * per url in the batch (a duplicated url would index twice). Existing
     * postings are never rewritten (that is [[compact]]'s job, the merge)
     * and — like ES between a delete and a merge — N/avgdl/df keep counting
-    * the replaced versions until a merge. The old docIds come from
-    * [[resolveUrls]] over every generation, which scans only the segments
-    * the batch's urls route to: per-batch cost follows the batch and the
-    * generation count, not the index size. Memory budget: the batch's
-    * distinct urls are held on the driver once, the same bound
-    * `Deletes.delete` has for its url list. */
+    * the replaced versions until a merge. The old versions are tombstoned
+    * by url in one Spark execution, the one `Deletes.delete` runs: it
+    * scans only the url chunks and tombstone rows of the segments the
+    * batch's urls route to, in every generation, so per-batch cost follows
+    * the batch and the generation count, not the index size. Memory
+    * budget: the batch's distinct urls are held on the driver once, the
+    * same bound `Deletes.delete` has for its url list. */
   def upsert(
       spark: SparkSession,
       newPages: DataFrame,
@@ -535,11 +551,9 @@ object IndexBuilder {
     // an empty batch commits nothing, like append's own emptiness check,
     // which the collected urls make redundant here
     if (urls.isEmpty) return snap
-    val old = resolveUrls(snapshotPostings(spark, indexDir, snap), snap, urls,
-      0 until snap.generations)
-    // already-tombstoned old versions no-op inside deleteDocIds; a batch of
-    // only never-seen urls commits no tombstone snapshot at all
-    val tombstoned = Deletes.deleteDocIds(spark, indexDir, docIdsBySeg(old.valuesIterator))
+    // already-tombstoned old versions no-op; a batch of only never-seen
+    // urls commits no tombstone snapshot at all
+    val tombstoned = Deletes.tombstoneUrls(spark, indexDir, snap, urls)
     appendTo(spark, newPages, indexDir, tombstoned, resume = false,
       simulateOnlySegments = None)
   }
@@ -655,7 +669,8 @@ object IndexBuilder {
     }
 
     val wantedSet = wanted.toSet
-    timed("encode+write") {
+    val metas = spark.sparkContext.collectionAccumulator[SegmentMeta]("segment metrics")
+    timed("encode+write+metrics") {
       tokRows
         // partition == segment (bijection), so segId is constant here and
         // must NOT lead the sort key: Spark derives the radix/sort prefix
@@ -669,17 +684,16 @@ object IndexBuilder {
           // the snapshot stays permanently incomplete (a corpus with fewer
           // docs than P would brick the index with no remediation).
           val segId = segOffset + org.apache.spark.TaskContext.getPartitionId()
-          if (it.hasNext) encodePartition(it, blockSize, chunkDocs)
-          else if (wantedSet.contains(segId)) emptySegmentRows(segId)
-          else Iterator.empty
+          observeSegments(
+            if (it.hasNext) encodePartition(it, blockSize, chunkDocs)
+            else if (wantedSet.contains(segId)) emptySegmentRows(segId)
+            else Iterator.empty, metas, buildDirRel)
         }
         .write.mode("overwrite").parquet(buildDir)
     }
 
-    // per-segment lineage metrics from the freshly written segments
-    val metrics = timed("metrics")(segmentMetrics(spark, buildDir, buildDirRel))
-
-    val allSegments = (prior.map(_.segments).getOrElse(Nil) ++ metrics).sortBy(_.segId)
+    val allSegments = (prior.map(_.segments).getOrElse(Nil) ++ metas.value.asScala)
+      .sortBy(_.segId)
     val priorDirs = prior.map(_.dataDirs).getOrElse(Nil)
     val allDataDirs = (priorDirs :+ buildDirRel).distinct
     // this commit is append-shaped by construction (old dirs are immutable,
@@ -942,14 +956,18 @@ object IndexBuilder {
       .select(col("term"), lit(-1).as("salt"),
         col("df"), col("cf"), col("maxTf"), col("minDl"))
       .unionByName(parts))
+    // the second phase reduces over the range exchange that orders the
+    // output (range partitioning on term clusters by term), so the file
+    // set is globally term-sorted with no exchange of its own
     writeCounted(all
       .groupBy(col("term"), col("salt"))
       .agg(sum("df").as("df"), sum("cf").as("cf"),
         max("maxTf").as("maxTf"), min("minDl").as("minDl"))
+      .repartitionByRange(col("term"))
       .groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"),
         max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-      .sort("term"), outAbs)
+      .sortWithinPartitions("term"), outAbs)
   }
 
   /** Driver-side merge of per-field stats (fields are O(schema), both
@@ -966,22 +984,30 @@ object IndexBuilder {
     m.values.toSeq.sortBy(_.name)
   }
 
-  /** Per-segment lineage metrics recomputed from a written data dir. The
-    * TermLens rows' (df, cf) carry (docs, doclen sum) per chunk, so `docs`
-    * is the url-table length: a build and a merge both write dense tables
-    * (tombstoned docs keep counting until a merge drops them). */
-  private[index] def segmentMetrics(
-      spark: SparkSession, absDir: String, rel: String): Seq[SegmentMeta] =
-    readPostings(spark, Seq(absDir))
-      .groupBy("segId").agg(
-        sum(when(col("term") === TermLens, col("df")).otherwise(0L)).as("docs"),
-        sum(when(col("term") === TermLens, col("cf")).otherwise(0L)).as("sumdl"),
-        sum(when(col("term") > TermDels, 1L).otherwise(0L)).as("terms"),
-        sum(when(col("term") > TermDels, col("df")).otherwise(0L)).as("postings"))
-      .collect()
-      .map(r => SegmentMeta(r.getInt(0), r.getLong(1), r.getLong(3),
-        r.getLong(4), r.getLong(2), rel))
-      .sortBy(_.segId).toSeq
+  /** `rows`, passed on to the writer of data dir `dir`; once they are
+    * drained, the lineage metrics of each segment among them are added to
+    * `metas`, so a write commits its segments' metrics with no re-read of
+    * what it wrote. The TermLens rows' (df, cf) carry (docs, doclen sum)
+    * per chunk, so `docs` is the url-table length: a build and a merge
+    * both write dense tables (tombstoned docs keep counting until a merge
+    * drops them). Any row, an empty segment's marker rows included, puts
+    * its segment in. Called in the write's result stage, where Spark
+    * applies each task's accumulator update once: a retried or speculative
+    * task cannot count a segment twice. */
+  private def observeSegments(rows: Iterator[PostingRow],
+      metas: CollectionAccumulator[SegmentMeta], dir: String): Iterator[PostingRow] = {
+    // segId -> (docs, sumDocLen, terms, postings)
+    val bySeg = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+    rows.map { r =>
+      val m = bySeg.getOrElseUpdate(r.segId, new Array[Long](4))
+      if (r.term == TermLens) { m(0) += r.df; m(1) += r.cf }
+      else if (r.term > TermDels) { m(2) += 1; m(3) += r.df }
+      r
+    } ++ {
+      bySeg.foreach { case (s, m) => metas.add(SegmentMeta(s, m(0), m(2), m(3), m(1), dir)) }
+      Iterator.empty
+    }
+  }
 
   /** Marker rows (doc-length + url tables, both empty) for a segment that
     * received zero documents, so it counts as committed in the snapshot. */
@@ -1290,6 +1316,7 @@ object IndexBuilder {
     // posting rows by (term, generation), the order mergeSlot walks
     val phase = when(col("url").isNotNull, 2).when(term === lit(TermDels), 0)
       .when(term < lit(TermUrls), 1).otherwise(3)
+    val metas = spark.sparkContext.collectionAccumulator[SegmentMeta]("segment metrics")
     in.withColumn("part",
         element_at(lit(bijectionKeys(P)), pmod(col("segId"), lit(P)) + 1))
       .repartition(P, col("part"))
@@ -1300,12 +1327,13 @@ object IndexBuilder {
       .mapPartitions { it =>
         val slot = org.apache.spark.TaskContext.getPartitionId()
         val toks = mergeSlot(it, slot, P, G, fields.nonEmpty)
-        if (toks.hasNext) encodePartition(toks, bs, chunkDocs)
-        else emptySegmentRows(slot)
+        observeSegments(
+          if (toks.hasNext) encodePartition(toks, bs, chunkDocs)
+          else emptySegmentRows(slot), metas, rel)
       }
       .write.mode("overwrite").parquet(s"$indexDir/$rel")
 
-    val metas = segmentMetrics(spark, s"$indexDir/$rel", rel)
+    val segments = metas.value.asScala.toSeq.sortBy(_.segId)
     val dictRel = f"termdict/snap-$newId%05d"
     val dictRows = writeTermdict(spark, None, Seq(s"$indexDir/$rel"),
       s"$indexDir/$dictRel")
@@ -1329,13 +1357,13 @@ object IndexBuilder {
           .sort("gram", "url"), s"$indexDir/$rel2"))
       }
     val neu = snap.copy(id = newId, parent = snap.id,
-      numDocs = metas.map(_.docs).sum,
-      sumDocLen = metas.map(_.sumDocLen).sum,
+      numDocs = segments.map(_.docs).sum,
+      sumDocLen = segments.map(_.sumDocLen).sum,
       dataDirs = Seq(rel), termdictDir = Some(dictRel),
       // the merged vocabulary can SHRINK — a stale count would make warm
       // handles refuse the driver dictionary forever after a mass delete
       termdictRows = dictRows,
-      segments = metas, deletedDocs = 0L,
+      segments = segments, deletedDocs = 0L,
       suggestDir = sugRel, suggestRows = sugRows,
       docSuggestDirs = docSugDirs, docSuggestRows = docSugRows,
       fieldStats =

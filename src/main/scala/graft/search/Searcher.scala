@@ -509,7 +509,9 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
         try {
           val c = ds.repartition(parts, col("segId"))
             .sortWithinPartitions("term", "segId").cache()
-          c.count()
+          // fill the cache with an action that runs no aggregate: a
+          // count() adds a single-partition exchange, one more job
+          c.write.format("noop").mode("overwrite").save()
           c
         } finally prev match {
           case Some(v) => spark.conf.set(key, v)

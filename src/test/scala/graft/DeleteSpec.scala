@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.analysis.Analyzer
 import graft.corpus.Corpus
-import graft.index.{Deletes, IndexBuilder, IndexConfig, Snapshot}
+import graft.index.{Deletes, Hashing, IndexBuilder, IndexConfig, PostingRow, Snapshot, SnapshotMeta}
 import graft.search.{BoolQuery, IndexHandle, OracleSearch, Searcher}
 
 /** Delete lifecycle: tombstones (soft deletes, ES/Lucene semantics — docs
@@ -333,6 +333,109 @@ class DeleteSpec extends SparkSuite {
       BoolQuery(ids = Some(Seq(liveUrl))), 10).map(_.url).toSeq === Seq(liveUrl))
   }
 
+  /** Decoded TermDels rows of data dirs `rels` of `dir`, per segment. */
+  private def tombstones(dir: String, rels: Seq[String]): Map[Int, Set[Long]] =
+    if (rels.isEmpty) Map.empty
+    else IndexBuilder.readPostings(spark, rels.map(d => s"$dir/$d"))
+      .filter($"term" === IndexBuilder.TermDels).as[PostingRow].collect()
+      .groupBy(_.segId).map { case (s, rs) => s -> rs.flatMap(IndexBuilder.docIdStream).toSet }
+
+  private def copyIndex(src: String): String = {
+    val dst = Files.createTempDirectory("graft-del-copy")
+    val walk = Files.walk(java.nio.file.Paths.get(src))
+    try walk.iterator().asScala.foreach { p =>
+      val t = dst.resolve(java.nio.file.Paths.get(src).relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else Files.copy(p, t, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
+    dst.toString
+  }
+
+  private def delDirsOnDisk(dir: String): Set[String] = {
+    val ls = Files.list(java.nio.file.Paths.get(dir, "data"))
+    try ls.iterator().asScala.map(p => s"data/${p.getFileName}")
+      .filter(_.startsWith("data/del-")).toSet
+    finally ls.close()
+  }
+
+  test("tombstone by url == deleteDocIds over the resolver's pairs, upsert too") {
+    // the one-execution url path against the id path fed by the
+    // driver-side resolver, each on its own copy of the same index
+    val P = cfg.numSegments
+    val dir = Files.createTempDirectory("graft-del-parity").toString
+    IndexBuilder.build(spark, pages.toDF(), dir, cfg)
+    val urls = docs.map(_._1)
+    // urls 0..19 get a second document in generation 1 (append does not
+    // tombstone), so each is live in two generations
+    IndexBuilder.append(spark, (urls.take(20).map(u => (u, "second edition")) ++
+      (0 until 20).map(i => (s"https://fresh.example/$i", "fresh page"))).toDF("url", "text"), dir)
+    val absent = (0 until 40).map(i => s"https://absent.example/$i")
+
+    def byResolver(d: String, us: Seq[String]): Map[Int, Array[Long]] = {
+      val snap = Snapshot.latest(d).get
+      IndexBuilder.docIdsBySeg(IndexBuilder.resolveUrls(
+        IndexBuilder.snapshotPostings(spark, d, snap), snap, us,
+        0 until snap.generations).valuesIterator)
+    }
+    /** Run `byUrl` on `dir` and `byIds` on a copy; both must commit the
+      * same snapshot and the same tombstone rows. */
+    def parity(label: String)(byUrl: String => SnapshotMeta)(
+        byIds: String => SnapshotMeta): Map[Int, Set[Long]] = {
+      val copy = copyIndex(dir)
+      val before = Snapshot.latest(dir).get
+      val a = byUrl(dir)
+      val b = byIds(copy)
+      assert(a === b, label)
+      val added = a.dataDirs.filterNot(before.dataDirs.contains)
+      val rows = tombstones(dir, added)
+      assert(rows === tombstones(copy, added), label)
+      assert(delDirsOnDisk(dir) === a.dataDirs.filter(_.startsWith("data/del-")).toSet, label)
+      // each written row is its segment's whole dead set: the newest prior
+      // row (a superset of every older one) was the one merged
+      val all = tombstones(dir, a.dataDirs)
+      rows.foreach { case (s, ids) => assert(ids === all(s), s"$label: segment $s") }
+      rows
+    }
+    def urlDelete(us: Seq[String]): Map[Int, Set[Long]] =
+      parity(s"delete ${us.size} urls")(d => Deletes.delete(spark, d, us))(
+        d => Deletes.deleteDocIds(spark, d, byResolver(d, us)))
+
+    // absent urls: nothing committed, no dir left behind
+    val before0 = Snapshot.latest(dir).get
+    assert(urlDelete(absent).isEmpty)
+    assert(Snapshot.latest(dir).get.id === before0.id)
+
+    // two waves: every touched segment ends with tombstones in two dirs
+    urlDelete(urls.slice(40, 100))
+    urlDelete(urls.slice(100, 160))
+    // a mix: already dead, live in two generations, new, absent. The
+    // two-generation urls route to slots 0-2 only, so the generation-1
+    // segments of slots 3-5 are candidates with no match
+    val twoGen = urls.take(20).filter(u => Hashing.segmentOf(u, P) < 3)
+    val mixed = urls.slice(50, 70) ++ twoGen ++ urls.slice(200, 230) ++ absent
+    val rows = urlDelete(mixed)
+    assert(twoGen.forall(u => rows.contains(Hashing.segmentOf(u, P) + P)))
+    val found = byResolver(dir, mixed).keySet
+    assert(rows.keySet === found)
+    val idle = mixed.map(u => Hashing.segmentOf(u, P)).distinct
+      .flatMap(s => Seq(s, s + P)).toSet -- found
+    assert((P + 3 until 2 * P).forall(idle.contains), s"idle candidates: $idle")
+
+    // only already-dead urls: nothing committed, no dir left behind
+    val before1 = Snapshot.latest(dir).get
+    assert(urlDelete(urls.slice(40, 70)).isEmpty)
+    assert(Snapshot.latest(dir).get.id === before1.id)
+
+    // upsert: dead, two-generation, live and fresh urls in one batch
+    val batch = (urls.slice(60, 65) ++ urls.slice(10, 20) ++ urls.slice(300, 320) ++
+      absent.take(5)).map(u => (u, "zzupserted page"))
+    val up = parity("upsert")(d => IndexBuilder.upsert(spark, batch.toDF("url", "text"), d)) { d =>
+      Deletes.deleteDocIds(spark, d, byResolver(d, batch.map(_._1)))
+      IndexBuilder.append(spark, batch.toDF("url", "text"), d)
+    }
+    assert(up.nonEmpty)
+  }
+
   test("refresh job budget: delete and warm open, no schema inference") {
     val dir = freshIndex()
     val victims = docs.map(_._1).take(25)
@@ -342,24 +445,18 @@ class DeleteSpec extends SparkSuite {
     info(s"delete ${del.count} jobs, warm open ${open.count} jobs")
     assert(del.schemaInference.isEmpty && open.schemaInference.isEmpty,
       s"schema-inference jobs:\n$del\n--\n$open")
-    assert(del.count <= 3, s"delete jobs:\n$del")
-    assert(open.count <= 5, s"warm open jobs:\n$open")
+    assert(del.count <= 2, s"delete jobs:\n$del")
+    assert(open.count <= 4, s"warm open jobs:\n$open")
   }
 
   test("dead-doc accounting: both tombstone writers count only newly dead docs") {
     // brute force from the fixture: deletedDocs must equal |dead urls|
     // after each call, and a call that kills nothing new commits nothing
     // and leaves no tombstone dir behind
-    def delDirs(dir: String): Set[String] = {
-      val ls = Files.list(java.nio.file.Paths.get(dir, "data"))
-      try ls.iterator().asScala.map(p => s"data/${p.getFileName}")
-        .filter(_.startsWith("data/del-")).toSet
-      finally ls.close()
-    }
     def checkCommitted(dir: String, dead: Set[String]): Unit = {
       val snap = Snapshot.latest(dir).get
       assert(snap.deletedDocs === dead.size.toLong)
-      assert(delDirs(dir) === snap.dataDirs.filter(_.startsWith("data/del-")).toSet)
+      assert(delDirsOnDisk(dir) === snap.dataDirs.filter(_.startsWith("data/del-")).toSet)
     }
     val urls = docs.map(_._1)
 

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.corpus.Corpus
 import graft.index.{Deletes, FieldDef, IndexBuilder, IndexConfig, Snapshot}
+import graft.search.OracleSearch
 
 /** Incremental commit-time artifact maintenance: an append-shaped commit
   * merges the prior termdict with a new-dirs-only aggregation
@@ -130,6 +133,49 @@ class TermdictDeltaSpec extends SparkSuite {
       toDf(fieldedRows(60, seed = 22, startId = 3000L)), dir)
     assert(IndexBuilder.lastTermdictPlan === "delta:1")
     assert(committed(dir) === fullRebuild(dir))
+  }
+
+  /** The committed termdict's part files, read in part order: each sorted
+    * by term, and each file's last term below the next file's first, so a
+    * pushed-down term probe can trust the file set's order. */
+  private def assertGloballySorted(indexDir: String): Unit = {
+    val rel = Snapshot.latest(indexDir).get.termdictDir.get
+    val ls = Files.list(java.nio.file.Paths.get(indexDir, rel))
+    val parts =
+      try ls.iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).toSeq.sorted
+      finally ls.close()
+    val files = parts.map(f => spark.read.parquet(f).select("term").as[String]
+      .collect().toSeq).filter(_.nonEmpty)
+    assert(files.size >= 2, s"order across files is untested: $parts")
+    def below(a: String, b: String) = OracleSearch.utf8Compare(a, b) < 0
+    files.foreach(ts => ts.sliding(2).foreach {
+      case Seq(a, b) => assert(below(a, b), s"$a !< $b within a file of $rel")
+      case _ =>
+    })
+    files.sliding(2).foreach { case Seq(a, b) =>
+      assert(below(a.last, b.head), s"${a.last} !< ${b.head} across files of $rel")
+    }
+  }
+
+  test("the termdict stays globally term-sorted after a full build and a delta commit") {
+    // no partition coalescing: the dictionary must land in several files
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val dir = Files.createTempDirectory("graft-td-order").toString
+      IndexBuilder.build(spark, toDf(fieldedRows(120, seed = 31)), dir, cfg)
+      assert(IndexBuilder.lastTermdictPlan === "full:1")
+      assertGloballySorted(dir)
+      IndexBuilder.append(spark,
+        toDf(fieldedRows(90, seed = 32, startId = 4000L)), dir)
+      assert(IndexBuilder.lastTermdictPlan === "delta:1")
+      assertGloballySorted(dir)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("mergeFieldStats sums by name and keeps fields unique to one side") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.analysis.Analyzer
-import graft.corpus.Corpus
+import graft.corpus.{Corpus, Html, Ingest}
 import graft.index.{Deletes, Hashing, IndexBuilder, IndexConfig, Snapshot}
 import graft.search.{BoolQuery, IndexHandle, Searcher}
 
@@ -240,17 +240,33 @@ class UpsertSpec extends SparkSuite {
 
   test("refresh job budget: upsert and warm open, no schema inference") {
     // deterministic counters behind the refresh wall-clock: every index
-    // read carries its known schema (no footer-inference job) and every
-    // commit count is observed during its write (no read-back job)
+    // read carries its known schema (no footer-inference job), every
+    // commit count is observed during its write (no read-back job), and
+    // the old versions are tombstoned by url in one execution
     val dir = freshIndex()
-    val batch = recrawl.toDF("url", "text")
-    val (_, up) = JobLog.of(spark)(IndexBuilder.upsert(spark, batch, dir))
+    // the batch has the benchmark's shape: read from files and persisted
+    // by Ingest.prepareScoped, then counted, so collecting its urls runs
+    // a job (a local relation's collect would run none)
+    val crawl = pages.collect().toSeq.zipWithIndex.collect { case (p, i) if i % 5 == 0 =>
+      val text = p.text + " zzrecrawled fresh tokens"
+      p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 86400000L),
+        html = Html.wrap(p.url, text), text = text)
+    }
+    val src = Files.createTempDirectory("graft-ups-crawl").toString + "/crawl"
+    crawl.toDS().write.parquet(src)
+    val batch = Ingest.prepareScoped(spark.read.parquet(src), Set.empty)
+    val (_, up) =
+      try {
+        assert(batch.count() === crawl.size)
+        JobLog.of(spark)(IndexBuilder.upsert(spark, batch, dir))
+      } finally batch.unpersist()
+    assert(Snapshot.latest(dir).get.deletedDocs === crawl.size)
     val (h, open) = JobLog.of(spark)(new IndexHandle(spark, dir, warm = true))
     h.close()
     info(s"upsert ${up.count} jobs, warm open ${open.count} jobs")
     assert(up.schemaInference.isEmpty && open.schemaInference.isEmpty,
       s"schema-inference jobs:\n$up\n--\n$open")
-    assert(up.count <= 12, s"upsert jobs:\n$up")
-    assert(open.count <= 5, s"warm open jobs:\n$open")
+    assert(up.count <= 9, s"upsert jobs:\n$up")
+    assert(open.count <= 4, s"warm open jobs:\n$open")
   }
 }
