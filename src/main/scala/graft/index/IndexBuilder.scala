@@ -248,6 +248,10 @@ object IndexBuilder {
   private val postingSchema: StructType = Encoders.product[PostingRow].schema
   private val termdictSchema: StructType =
     StructType.fromDDL("term STRING, df BIGINT, cf BIGINT, maxTf INT, minDl INT")
+  private val suggestSchema: StructType =
+    StructType.fromDDL("gram STRING, term STRING, cf BIGINT")
+  private val docSuggestSchema: StructType = StructType.fromDDL(
+    "gram STRING, url STRING, output STRING, payload MAP<STRING, STRING>, weight INT, gen INT")
 
   /** Posting rows of committed data dirs, read with their known schema:
     * a schema-less `spark.read.parquet` runs one footer-inference Spark
@@ -260,6 +264,16 @@ object IndexBuilder {
     * [[readPostings]]). */
   private[graft] def readTermdict(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(termdictSchema).parquet(path)
+
+  /** A committed suggest artifact ([[writeSuggest]]), read with its known
+    * schema (see [[readPostings]]). */
+  private[graft] def readSuggest(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(suggestSchema).parquet(path)
+
+  /** Committed doc-suggest artifacts ([[writeDocSuggest]]), read with their
+    * known schema (see [[readPostings]]). */
+  private[graft] def readDocSuggest(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(docSuggestSchema).parquet(paths: _*)
 
   /** Write `df` and return its row count, observed during the write
     * instead of re-read from the output by a second job. */
@@ -867,50 +881,30 @@ object IndexBuilder {
   private[index] def liveUrlsDF(
       spark: SparkSession, absDirs: Seq[String], numSegments: Int): DataFrame = {
     import spark.implicits._
-    // sort each partition (segId, tombstones-first, chunk): the dead
-    // bitset is complete before the first url chunk arrives, so the url
-    // chunks — the segment's dominant bytes — decode one at a time
-    // instead of being buffered whole-segment (the groupByKey/toSeq
-    // shape this replaces held ~8 GB in one task at a 10^8-doc segment)
-    readPostings(spark, absDirs).as[PostingRow]
-      .filter(col("term") === lit(TermUrls) || col("term") === lit(TermDels))
-      .repartition(col("segId"))
-      .sortWithinPartitions(col("segId"),
-        when(col("term") === lit(TermDels), lit(0)).otherwise(lit(1)),
-        col("chunk"))
-      .mapPartitions { it0 =>
-        val it = it0.buffered
-        def oneSeg(): Iterator[(String, Int)] = {
-          val segId = it.head.segId
-          val segB = segBase(segId)
-          val gen = segId / numSegments
-          val dead = new java.util.BitSet()
-          while (it.hasNext && it.head.segId == segId &&
-              it.head.term == TermDels)
-            docIdStream(it.next()).foreach(d => dead.set((d - segB - 1).toInt))
-          var rank = 0
-          var expectChunk = 0
-          new Iterator[Iterator[(String, Int)]] {
-            def hasNext: Boolean = it.hasNext && it.head.segId == segId
-            def next(): Iterator[(String, Int)] = {
-              val c = it.next()
-              // the rank walk needs contiguous ascending chunks — refuse
-              // loudly if the sort contract is ever broken
-              require(c.chunk == expectChunk,
-                s"liveUrls: segment $segId expected url chunk $expectChunk" +
-                  s", got ${c.chunk}")
-              expectChunk += 1
-              Varint.decodeStrings(c.tfBytes).iterator.filter { _ =>
-                val live = !dead.get(rank); rank += 1; live
-              }.map(u => (u, gen))
-            }
-          }.flatten
-        }
-        def all(): Iterator[(String, Int)] =
-          if (!it.hasNext) Iterator.empty else oneSeg() ++ all()
-        all()
+    // the reader hands each segment's tombstones over before its first url
+    // chunk, so the url chunks decode one at a time against a complete
+    // dead bitset instead of being buffered whole-segment
+    SegmentReader.perSegment(readPostings(spark, absDirs).as[PostingRow]
+        .filter(col("term") === lit(TermUrls) || col("term") === lit(TermDels)),
+        clustered = false, marker = Some(TermUrls), keepLens = false) { seg =>
+      val segB = segBase(seg.segId)
+      val gen = seg.segId / numSegments
+      val dead = new java.util.BitSet()
+      seg.dels.foreach(docIdStream(_).foreach(d => dead.set((d - segB - 1).toInt)))
+      var rank = 0
+      var expectChunk = 0
+      seg.markers.flatMap { c =>
+        // the rank walk needs contiguous ascending chunks — refuse
+        // loudly if the sort contract is ever broken
+        require(c.chunk == expectChunk,
+          s"liveUrls: segment ${seg.segId} expected url chunk $expectChunk" +
+            s", got ${c.chunk}")
+        expectChunk += 1
+        Varint.decodeStrings(c.tfBytes).iterator.filter { _ =>
+          val live = !dead.get(rank); rank += 1; live
+        }.map(u => (u, gen))
       }
-      .toDF("url", "gen")
+    }.toDF("url", "gen")
   }
 
   /** Observability for the commit-time dictionary plan (mirrors the dedup
@@ -1350,7 +1344,7 @@ object IndexBuilder {
       if (snap.docSuggestDirs == null || snap.docSuggestDirs.isEmpty) (Nil, 0L)
       else {
         val rel2 = f"docsuggest/merge-$newId%05d"
-        val rows = spark.read.parquet(snap.docSuggestDirs.map(d => s"$indexDir/$d"): _*)
+        val rows = readDocSuggest(spark, snap.docSuggestDirs.map(d => s"$indexDir/$d"))
         (Seq(rel2), writeCounted(rows
           .join(liveUrlsDF(spark, dirs, P), Seq("url", "gen"), "left_semi")
           .select(rows.columns.map(c => if (c == "gen") lit(0).as(c) else col(c)): _*)

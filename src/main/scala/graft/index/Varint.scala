@@ -48,7 +48,8 @@ object Varint {
 
   // primitive growable buffers: ArrayBuffer[Long] boxes every value, and
   // these run per CHUNK (up to 2^20 values) on query paths (fetchLens
-  // misses, cold evalRows, purge) — multi-MB of boxed garbage otherwise
+  // misses, the per-segment reader's doc-length tables, the merge) —
+  // multi-MB of boxed garbage otherwise
   def decodeLongs(bytes: Array[Byte]): Array[Long] = {
     val r = new Reader(bytes)
     var arr = new Array[Long](math.max(8, bytes.length))

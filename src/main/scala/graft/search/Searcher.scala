@@ -3,11 +3,12 @@ package graft.search
 import scala.collection.mutable.ArrayBuffer
 import scala.collection.parallel.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
-import graft.index.{Hashing, IndexBuilder, PostingRow, Snapshot, SnapshotMeta, Varint}
+import graft.index.{Hashing, IndexBuilder, PostingRow, SegLens, Segment, SegmentReader, Snapshot,
+  SnapshotMeta, Varint}
 
 final case class Hit(rank: Int, docId: Long, url: String, score: Double)
 
@@ -16,10 +17,13 @@ final case class Hit(rank: Int, docId: Long, url: String, score: Double)
   * Query plan: the term dictionary is probed for the query terms (Parquet
   * predicate pushdown on the sorted `term` column — the FST-analogue lookup),
   * idfs are broadcast, then only the matching posting rows + per-segment
-  * doc-length rows shuffle to a per-segment scorer
-  * (`groupByKey(segId).flatMapGroups`) — block-max WAND for pure-should
-  * queries, leapfrog conjunction for must/filter/ids queries — each segment
-  * emitting its local top-k. The global answer is the k-way merge
+  * doc-length rows reach the per-segment reader
+  * ([[graft.index.SegmentReader]]; a warm cache is already clustered by
+  * segment, a cold read repartitions by segId once), whose scoring body
+  * runs block-max WAND for pure-should queries and leapfrog conjunction
+  * for must/filter/ids queries — each segment emitting its local top-k.
+  * Count, scan and delete-by-query run the same reader with other bodies.
+  * The global answer is the k-way merge
   * `orderBy(score desc, docId asc).limit(k)` — Spark's
   * TakeOrderedAndProject. Urls are resolved for the k winners only, touching
   * just the winning segments' url rows. */
@@ -74,8 +78,8 @@ object Searcher {
 
   /** ES `_source includes` analogue (the reference projects every scan:
     * mrtarget/modules/Association.py:308, common/LookupTables.py:103):
-    * decorate hits with `includes` columns of the corpus table. The hit
-    * side is top-k-sized, so it broadcasts; the corpus scan reads exactly
+    * decorate hits with `includes` columns of the corpus table. The source
+    * side is pruned to the k hit urls, so it broadcasts; the corpus scan reads exactly
     * (url ++ includes) — Catalyst prunes the parquet ReadSchema to the
     * requested fields, the whole point of `_source` filtering. Output keeps
     * hit order (rank asc). */
@@ -106,7 +110,8 @@ object Searcher {
         .groupBy(col("url"))
         .agg(min(struct(incs.map(col): _*)).as("_src"))
         .select(col("url") +: incs.map(c => col(s"_src.$c").as(c)): _*)
-    broadcast(hitDf).join(src, Seq("url"), "left")
+    // a left outer join cannot build its preserved (hit) side
+    hitDf.join(broadcast(src), Seq("url"), "left")
       .orderBy(col("rank"))
       .select(Seq("rank", "docId", "url", "score").map(col) ++
         incs.map(col): _*)
@@ -192,11 +197,6 @@ private[search] final case class NormCtx(
       else (segLens.byField(f), fieldAvgdl(f))
     }
 }
-
-/** One segment's doc-length tables: the global analyzed-total table plus,
-  * for multi-field indexes, one rank-aligned table per analyzed field. */
-private[search] final case class SegLens(
-    global: Array[Int], byField: Map[String, Array[Int]])
 
 /** What scoring and match enumeration share for one segment: its posting
   * rows by term, the ids allowlist (null = no ids clause) and one
@@ -403,14 +403,19 @@ private[graft] object MatchEnum {
   }
 }
 
-/** A queryable snapshot. With `warm = true` the posting table is
-  * re-clustered by segment and persisted in executor memory, and the term
-  * dictionary is collected to a driver map (bounded by `DictLimit`), so a
-  * steady-state query is ONE shuffle-free Spark job: filter the cached
-  * postings (predicate pushdown / in-memory batch pruning on `term`) ->
-  * per-partition scoring over the colocated segments -> global
-  * TakeOrderedAndProject. The cold path (warm = false) reads parquet
-  * directly and probes the dictionary with a pushed-down filter instead.
+/** A queryable snapshot. Top-k search, count, scan and delete-by-query
+  * all run one per-segment reader ([[graft.index.SegmentReader]]) with a
+  * different body; only where its rows come from differs. With
+  * `warm = true` the posting table is re-clustered by segment and
+  * persisted in executor memory, and the term dictionary is collected to
+  * a driver map (bounded by `DictLimit`), so a steady-state top-k or count
+  * is ONE shuffle-free Spark job: filter the cached postings (predicate
+  * pushdown / in-memory batch pruning on `term`) -> local sort by segment
+  * -> the reader over the colocated segments -> global
+  * TakeOrderedAndProject (or the per-segment counts). The cold path
+  * (warm = false) reads parquet directly, probes the dictionary with a
+  * pushed-down filter, prunes to candidate segments and repartitions by
+  * segId once.
   *
   * Standard Spark cache-sharing caveat: two warm handles on the same index
   * and session produce the SAME logical plan, so the second reuses the
@@ -610,18 +615,8 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
           col("segId").isin(missing: _*))
         .collect().groupBy(_.segId)
         .map { case (s, rows) =>
-          // doc-length tables are block-chunked (format v2) — concat in
-          // chunk order; field tables keyed by (unprefixed) field name
-          val lens = IndexBuilder.concatLens(
-            rows.filter(_.term == IndexBuilder.TermLens).toSeq)
-          val byField = rows
-            .filter(r => r.term.nonEmpty &&
-              r.term.charAt(0) == IndexBuilder.FieldLensPrefix.charAt(0))
-            .groupBy(_.term).map { case (t, rs) =>
-              t.substring(1) -> IndexBuilder.concatLens(rs.toSeq)
-            }
-          s -> (SegLens(lens, byField),
-            rows.filter(_.term == IndexBuilder.TermDels).toSeq)
+          val (dels, lens) = rows.toSeq.partition(_.term == IndexBuilder.TermDels)
+          s -> (SegLens.of(lens), dels)
         }
     }
 
@@ -780,86 +775,20 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     * [[matchTombstoneRows]], which never collects). */
   private[graft] def searchRaw(q: BoolQuery, k: Int,
       after: Option[(Double, Long)] = None): Array[(Long, Double, Int)] = {
-    val c = compile(q) match {
-      case None => return Array.empty
-      case Some(x) => x
-    }
     val kk = k
     val bs = blockSize
     val aft: SegHit = SegHit.fromCursor(after)
     val nc = normCtx // local copy — the closure must not capture the handle
-    val wanted: Seq[String] =
-      (IndexBuilder.TermLens +: IndexBuilder.TermDels +: fieldLensTerms) ++
-        c.allTerms.toSeq
-
-    def evalRows(rowsIt: Iterator[PostingRow]): Iterator[(Long, Double, Int)] = {
-      val lensRows = scala.collection.mutable.HashMap
-        .empty[Int, ArrayBuffer[PostingRow]]
-      val fieldRows = scala.collection.mutable.HashMap
-        .empty[Int, ArrayBuffer[PostingRow]]
-      val delsFor = scala.collection.mutable.HashMap
-        .empty[Int, ArrayBuffer[PostingRow]]
-      val posting = scala.collection.mutable.LinkedHashMap
-        .empty[Int, ArrayBuffer[PostingRow]]
-      rowsIt.foreach { r =>
-        if (r.term == IndexBuilder.TermLens)
-          lensRows.getOrElseUpdate(r.segId, ArrayBuffer.empty) += r
-        else if (r.term.nonEmpty &&
-            r.term.charAt(0) == IndexBuilder.FieldLensPrefix.charAt(0))
-          fieldRows.getOrElseUpdate(r.segId, ArrayBuffer.empty) += r
-        else if (r.term == IndexBuilder.TermDels)
-          delsFor.getOrElseUpdate(r.segId, ArrayBuffer.empty) += r
-        else posting.getOrElseUpdate(r.segId, ArrayBuffer.empty) += r
-      }
-      // an ids query must evaluate its segments even when no clause term has
-      // a posting row there (e.g. pure-ids, or ids + mustNot-only); those
-      // segments are identified by their doc-length marker rows instead
-      val segIds: Iterator[Int] =
-        if (c.hasIds) lensRows.keysIterator.filter(c.idsBySeg.contains)
-        else posting.keysIterator
-      segIds.flatMap { segId =>
-        lensRows.get(segId) match {
-          case None => Iterator.empty
-          case Some(rows) =>
-            val byField = fieldRows.get(segId)
-              .map(_.groupBy(_.term).map { case (t, rs) =>
-                t.substring(1) -> IndexBuilder.concatLens(rs.toSeq)
-              })
-              .getOrElse(Map.empty[String, Array[Int]])
-            BoolEval.scoreSegment(segId,
-              posting.get(segId).map(_.toSeq).getOrElse(Nil),
-              SegLens(IndexBuilder.concatLens(rows.toSeq), byField),
-              delsFor.get(segId).map(_.toSeq).getOrElse(Nil), c, bs, nc, kk,
-              after = aft)
-        }
-      }
-    }
-
-    val byTerm = postings.filter(col("term").isin(wanted: _*))
-    // an ids clause pins the candidate segments — prune the scan to them.
-    // The COLD path prunes term queries to candidate segments too (the
-    // (term, segId) pre-scan countMatches/matchesDF already pay):
-    // groupByKey would otherwise shuffle EVERY segment's doc-length and
-    // field-lens marker rows — O(corpus) varint bytes — into groups that
-    // evalRows discards for segments holding no clause posting row. The
-    // warm path groups per cached partition with ZERO exchanges, so a
-    // pre-scan job there would only add per-query scheduling latency.
-    val filtered =
-      if (c.hasIds) byTerm.filter(col("segId").isin(c.idsBySeg.keys.toSeq: _*))
-      else if (!warm) {
-        val cand = candidateSegs(c)
-        if (cand.isEmpty) return Array.empty
-        byTerm.filter(col("segId").isin(cand: _*))
-      } else byTerm
-    // warm: the cache is explicitly clustered by segId, so per-partition
-    // local grouping is safe and the query runs with ZERO exchanges.
-    // cold: parquet splits can fragment a segment across tasks, so group
-    // by key (the shuffle moves only the filtered posting rows).
-    val scoredDs =
-      if (warm) filtered.mapPartitions(evalRows)
-      else filtered.groupByKey(_.segId)
-        .flatMapGroups((_: Int, it: Iterator[PostingRow]) => evalRows(it))
-    scoredDs
+    val scored = readSegments[(Long, Double, Int)](q, marker = None, keepLens = true) {
+      (c, seg) =>
+        // an ids query evaluates its segments even when no clause term has
+        // a posting row there (pure-ids, or ids + mustNot-only); any other
+        // segment without one cannot match and decodes no doc-length table
+        if (seg.terms.isEmpty && !c.hasIds) Iterator.empty
+        else BoolEval.scoreSegment(seg.segId, seg.terms, seg.lens, seg.dels, c, bs, nc,
+          kk, after = aft)
+    }.getOrElse(return Array.empty)
+    scored
       .toDF("docId", "score", "segId")
       .orderBy(desc("score"), asc("docId"))
       .limit(k)
@@ -867,89 +796,44 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
       .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
   }
 
-  /** Shared preamble of the three match-enumeration surfaces
-    * (matchTombstoneRows / countMatches / matchesDF): compile, candidate
-    * -segment prune, marker-aware shuffled-term list, and the
-    * per-segment split into (streamed marker rows, tombstone rows,
-    * positive term rows) handed to `body` with the compiled query and
-    * block size.
+  /** The one read behind search, count, scan and delete-by-query: compile
+    * `q`, choose its segments, and run `body` over each segment's rows in
+    * the per-segment reader ([[SegmentReader]], which holds the memory
+    * contract). None when `q` cannot match.
     *
-    * The marker invariant lives HERE, once: TermLens rides along ONLY
-    * for pure-ids queries with no other anchor (it guarantees rows
-    * per candidate segment when no clause term has a posting row there);
-    * for term queries every candidate segment has a positive posting row
-    * to anchor on, and including TermLens would shuffle every candidate
-    * segment's doc-length rows — O(corpus) bytes — into sinks that never
-    * read lengths. A surface that ships its own always-present marker
-    * (matchesDF's TermUrls) passes it as `extraMarker` and anchors on
-    * that instead. The candidate prune keeps non-matching segments' url
-    * tables and (post-mass-delete, corpus-sized) tombstone rows from
-    * moving at all. Returns None when the query cannot match.
+    * Distribution: a warm cache is clustered by segId, so it only sorts
+    * locally; a cold read repartitions by segId once. Segments: an ids
+    * query reads its resolved segments; the candidate pre-scan
+    * ([[candidateSegs]]) runs only where it saves bytes — on cold reads,
+    * where every row of a non-candidate segment would cross the exchange,
+    * and under the url walk (`marker`), whose url tables are a segment's
+    * dominant bytes. A warm read with no marker skips it: its rows stay
+    * in memory, and the pre-scan would cost a job per query.
     *
-    * Memory contract: tombstone and query-term posting rows are buffered
-    * per segment (the cursor machinery needs them up front; both are
-    * bounded — compressed tombstones and the QUERY's terms, not the
-    * segment). The extraMarker rows — the segment's DOMINANT bytes (one
-    * url per document) — are NEVER buffered: the partition sort puts
-    * them after the buffered classes in chunk order, and `body` receives
-    * them as a streaming iterator, one chunk row referenced at a time
-    * (the groupByKey/toSeq shape this replaces pinned a whole segment's
-    * url table per task — multi-GB at the documented 10^8-doc sizing). */
-  private def enumeratePerSegment[T](q: BoolQuery, extraMarker: Option[String])(
-      body: (CompiledQuery, Int, Int, Iterator[PostingRow], Seq[PostingRow],
-        Seq[PostingRow]) => Iterator[T])(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Option[Dataset[T]] = {
-    import spark.implicits._
+    * Rows read: TermDels, the clause terms, `marker` when given, and the
+    * doc-length tables when `keepLens`. An ids query with neither would
+    * have no row in a listed segment holding none of its clause terms,
+    * where it can still match; TermLens rides along to anchor those
+    * segments, and the reader drops its rows unread. */
+  private def readSegments[T: Encoder](q: BoolQuery, marker: Option[String],
+      keepLens: Boolean)(body: (CompiledQuery, Segment) => Iterator[T]): Option[Dataset[T]] = {
     val c = compile(q) match {
       case None => return None
       case Some(x) => x
     }
-    val cand = candidateSegs(c)
-    if (cand.isEmpty) return None
-    val wanted: Seq[String] = extraMarker.toSeq ++
-      (if (c.hasIds && extraMarker.isEmpty) Seq(IndexBuilder.TermLens)
-       else Nil) ++
-      (IndexBuilder.TermDels +: c.allTerms.toSeq)
-    val bs = blockSize
-    val marker = extraMarker
-    val filtered = postings.filter(col("term").isin(wanted: _*) &&
-      col("segId").isin(cand: _*))
-    // the class column exists only when a marker rides along (a bare
-    // lit(0) in ORDER BY would be read as ordinal position 0)
-    val sortCols = col("segId") +: (marker.map(m =>
-      when(col("term") === lit(m), lit(1)).otherwise(lit(0))).toSeq :+
-      col("chunk"))
-    val sorted = filtered
-      .repartition(col("segId"))
-      .sortWithinPartitions(sortCols: _*)
-    Some(sorted.mapPartitions { it0 =>
-      val it = it0.buffered
-      def oneSeg(): Iterator[T] = {
-        val segId = it.head.segId
-        val dels = Seq.newBuilder[PostingRow]
-        val terms = Seq.newBuilder[PostingRow]
-        while (it.hasNext && it.head.segId == segId &&
-            !marker.contains(it.head.term)) {
-          val r = it.next()
-          if (r.term == IndexBuilder.TermDels) dels += r
-          else if (r.term != IndexBuilder.TermLens) terms += r
-        }
-        val markers: Iterator[PostingRow] = new Iterator[PostingRow] {
-          def hasNext: Boolean = it.hasNext && it.head.segId == segId
-          def next(): PostingRow = it.next()
-        }
-        body(c, segId, bs, markers, dels.result(), terms.result()) ++ {
-          // body may finish before the last marker chunk (its match
-          // stream ended early) — drain to the segment boundary so the
-          // next group never starts mid-segment
-          while (markers.hasNext) markers.next()
-          Iterator.empty
-        }
-      }
-      def all(): Iterator[T] =
-        if (!it.hasNext) Iterator.empty else oneSeg() ++ all()
-      all()
-    })
+    val segs: Option[Seq[Int]] =
+      if (c.hasIds) Some(c.idsBySeg.keys.toSeq)
+      else if (warm && marker.isEmpty) None
+      else Some(candidateSegs(c))
+    if (segs.exists(_.isEmpty)) return None
+    val lensTerms =
+      if (keepLens) IndexBuilder.TermLens +: fieldLensTerms
+      else if (c.hasIds && marker.isEmpty) Seq(IndexBuilder.TermLens)
+      else Nil
+    val wanted = marker.toSeq ++ lensTerms ++ (IndexBuilder.TermDels +: c.allTerms.toSeq)
+    val byTerm = postings.filter(col("term").isin(wanted: _*))
+    val rows = segs.fold(byTerm)(s => byTerm.filter(col("segId").isin(s: _*)))
+    Some(SegmentReader.perSegment(rows, clustered = warm, marker, keepLens)(body(c, _)))
   }
 
   /** Distributed match-enumeration sink (ES delete-by-query at corpus
@@ -963,11 +847,11 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     * Segments with no new match emit nothing (their prior rows stay
     * referenced in the old data dirs). */
   private[graft] def matchTombstoneRows(q: BoolQuery): Dataset[(PostingRow, Long)] = {
-    import spark.implicits._
-    enumeratePerSegment[(PostingRow, Long)](q, extraMarker = None) {
-      (c, segId, bs, _, dels, terms) =>
+    val bs = blockSize
+    readSegments[(PostingRow, Long)](q, marker = None, keepLens = false) {
+      (c, seg) =>
         var fresh = 0L
-        val matches = MatchEnum.enumerate(segId, terms, dels, c, bs)
+        val matches = MatchEnum.enumerate(seg.segId, seg.terms, seg.dels, c, bs)
           .map { d => fresh += 1; d }.buffered
         if (!matches.hasNext) Iterator.empty
         else {
@@ -977,8 +861,8 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
           // risk right after a prior mass delete, exactly the workload
           // this sink exists for
           val merged = MatchEnum.mergeDistinct(
-            matches +: dels.map(IndexBuilder.docIdStream))
-          val row = IndexBuilder.encodeDocIdStream(segId, merged, bs)
+            matches +: seg.dels.map(IndexBuilder.docIdStream))
+          val row = IndexBuilder.encodeDocIdStream(seg.segId, merged, bs)
           Iterator.single((row, fresh))
         }
     }.getOrElse(spark.emptyDataset[(PostingRow, Long)])
@@ -987,47 +871,38 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
   /** Segments that can possibly hold a match for `c`: those with at least
     * one positive-clause (must/filter/should) posting row — a match needs
     * every required term, and a pure-should match needs one scoring term,
-    * so a segment with NO positive rows cannot contribute. Ids queries use
-    * the resolved id segments instead. Bounds every enumeration shuffle:
-    * url tables and (post-mass-delete, corpus-sized) tombstone rows of
-    * non-candidate segments never move. The pre-scan reads only the
-    * pushed-down (term, segId) columns and sends O(segments) ints to the
-    * driver. */
-  private def candidateSegs(c: CompiledQuery): Seq[Int] =
-    if (c.hasIds) c.idsBySeg.keys.toSeq
-    else {
-      import spark.implicits._
-      val pos = (c.must ++ c.filter ++ c.scoringTerms).distinct.toSeq
-      if (pos.isEmpty) Seq.empty
-      else if (snap.segments.size == 1)
-        // a pre-scan cannot prune a single-segment index, and compile()
-        // already proved every required term (and >= 1 scoring term for
-        // pure-should) has df > 0 index-wide == in THE segment; skipping
-        // the scan saves one Spark job per cold query (guide §1.2: remove
-        // passes that compute nothing)
-        snap.segments.map(_.segId)
-      else postings.filter(col("term").isin(pos: _*))
-        .select("segId").distinct().as[Int].collect().toSeq
-    }
+    * so a segment with NO positive rows cannot contribute. Bounds every
+    * exchange of [[readSegments]]: url tables and (post-mass-delete,
+    * corpus-sized) tombstone rows of non-candidate segments never move.
+    * The pre-scan reads only the pushed-down (term, segId) columns and
+    * dedups within each partition, so it needs no exchange of its own and
+    * sends O(segments) ints to the driver. */
+  private def candidateSegs(c: CompiledQuery): Seq[Int] = {
+    val pos = (c.must ++ c.filter ++ c.scoringTerms).distinct.toSeq
+    if (pos.isEmpty) Seq.empty
+    else if (snap.segments.size == 1)
+      // a pre-scan cannot prune a single-segment index, and compile()
+      // already proved every required term (and >= 1 scoring term for
+      // pure-should) has df > 0 index-wide == in THE segment; skipping
+      // the scan saves one Spark job per cold query (guide §1.2: remove
+      // passes that compute nothing)
+      snap.segments.map(_.segId)
+    else postings.filter(col("term").isin(pos: _*)).select("segId").as[Int]
+      .mapPartitions(_.toSet.iterator).collect().distinct.toSeq
+  }
 
   /** Exact live-match count for `q` (the ES `track_total_hits=true` /
     * `Search.count()` contract, mrtarget/modules/SearchObjects.py:289,334):
-    * each candidate segment enumerates its matches with the same cursor
+    * each segment read enumerates its matches with the same cursor
     * machinery the scorers use (deleted docs are exclusion cursors) and
     * emits ONE Long — no scoring, no k, and only O(segments) counts cross
     * to the driver. */
   def countMatches(q: BoolQuery): Long = {
-    import spark.implicits._
-    enumeratePerSegment[Long](q, extraMarker = None) {
-      (c, segId, bs, _, dels, terms) =>
-        var n = 0L
-        MatchEnum.enumerate(segId, terms, dels, c, bs).foreach(_ => n += 1)
-        Iterator.single(n)
-    } match {
-      case None => 0L
-      case Some(counts) =>
-        counts.select(coalesce(sum(col("value")), lit(0L))).as[Long].head()
-    }
+    val bs = blockSize
+    readSegments[Long](q, marker = None, keepLens = false) { (c, seg) =>
+      Iterator.single(MatchEnum.enumerate(seg.segId, seg.terms, seg.dels, c, bs)
+        .foldLeft(0L)((n, _) => n + 1))
+    }.fold(0L)(_.collect().sum)
   }
 
   /** ES scan-with-query (`Search().query(q).scan()` + scroll paging — the
@@ -1042,14 +917,15 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     * being a DataFrame is the point at scale: pageable, joinable,
     * writable — what the reference's scroll loops feed downstream. */
   def matchesDF(q: BoolQuery): DataFrame = {
-    import spark.implicits._
-    // TermUrls feeds the url walk AND anchors the group — every committed
+    // TermUrls feeds the url walk AND anchors the segment — every committed
     // segment carries one (even empty segments), so no TermLens rides
-    // along even for ids queries (enumeratePerSegment's anchor rule)
+    // along even for ids queries
     val chunkDocs = snap.markerChunkDocs
-    enumeratePerSegment[(Long, String, Int)](q,
-        extraMarker = Some(IndexBuilder.TermUrls)) {
-      (c, segId, bs, markers, dels, terms) =>
+    val bs = blockSize
+    readSegments[(Long, String, Int)](q, marker = Some(IndexBuilder.TermUrls),
+        keepLens = false) {
+      (c, seg) =>
+        val segId = seg.segId
         val segB = IndexBuilder.segBase(segId)
         // rank-lockstep walk over the STREAMED url chunks: matches ascend
         // and chunk rows arrive in ascending chunk order, so the walk
@@ -1062,12 +938,12 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
         var cur: PostingRow = null
         var rd: Varint.Reader = null
         var rank = 0L
-        MatchEnum.enumerate(segId, terms, dels, c, bs).map { d =>
+        MatchEnum.enumerate(segId, seg.terms, seg.dels, c, bs).map { d =>
           val want = d - segB - 1
           while (cur == null || want >= (cur.chunk + 1).toLong * chunkDocs) {
-            require(markers.hasNext,
+            require(seg.markers.hasNext,
               s"url table of segment $segId ended before rank $want")
-            cur = markers.next()
+            cur = seg.markers.next()
             rd = null
           }
           if (rd == null) {
@@ -1246,7 +1122,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
   private val suggestCacheCap = 10000
   private val suggestMemo =
     new SuggestMemo[(String, Long)](suggestCacheCap, suggestFetch, (key, n) =>
-      spark.read.parquet(s"$indexDir/${snap.suggestDir.get}")
+      IndexBuilder.readSuggest(spark, s"$indexDir/${snap.suggestDir.get}")
         .filter(col("gram") === key)
         .orderBy(col("cf").desc, col("term").asc)
         .limit(n)
@@ -1257,8 +1133,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
       (key, n) => {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("url")).orderBy(col("gen").desc)
-        spark.read
-          .parquet(snap.docSuggestDirs.map(d => s"$indexDir/$d"): _*)
+        IndexBuilder.readDocSuggest(spark, snap.docSuggestDirs.map(d => s"$indexDir/$d"))
           .filter(col("gram") === key)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1) // upserted docs: newest generation wins

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.corpus.Corpus
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{Deletes, IndexBuilder, IndexConfig}
 import graft.search.{BoolQuery, IndexHandle, OracleSearch, Searcher}
 
 /** The ES-style bool/term query surface (must / should / filter / mustNot /
@@ -121,14 +121,16 @@ class BoolQuerySpec extends SparkSuite {
     val rng = new scala.util.Random(4321)
     val vocab = Array("a", "b", "c", "d", "e", "f", "g", "h", "the", "of",
       "w1x", "w2x", "w3x", "rare1", "rare2")
+    def randomText(): String = {
+      val len = 1 + rng.nextInt(25)
+      Seq.fill(len)(vocab(
+        math.min(rng.nextInt(vocab.length), rng.nextInt(vocab.length))))
+        .mkString(" ")
+    }
     (1 to 4).foreach { round =>
       val nDocs = 40 + rng.nextInt(80)
       val fdocs = (0 until nDocs).map { i =>
-        val len = 1 + rng.nextInt(25)
-        val text = Seq.fill(len)(vocab(
-          math.min(rng.nextInt(vocab.length), rng.nextInt(vocab.length))))
-          .mkString(" ")
-        (f"https://bf$round%02d.org/p/$i%04d", text)
+        (f"https://bf$round%02d.org/p/$i%04d", randomText())
       }
       val fcfg = IndexConfig(numSegments = 3, blockSize = 4)
       val fdir = Files.createTempDirectory(s"graft-boolfuzz-$round").toString
@@ -136,7 +138,7 @@ class BoolQuerySpec extends SparkSuite {
       val h = new IndexHandle(spark, fdir, warm = false)
       def pick(n: Int): Seq[String] =
         Seq.fill(n)(vocab(rng.nextInt(vocab.length))).distinct
-      (1 to 12).foreach { qi =>
+      val queries = (1 to 12).map { qi =>
         val q = BoolQuery(
           must = pick(rng.nextInt(3)),
           should = pick(rng.nextInt(3)),
@@ -156,7 +158,45 @@ class BoolQuerySpec extends SparkSuite {
         assert(served.map(x => (x.docId, x.score)).toSeq ===
           oracle.map(x => (x.docId, x.score)).toSeq,
           s"served round=$round qi=$qi q=$q k=$k")
+        (q, k)
       }
+
+      // a second generation, then tombstones by url and by query: count
+      // and scan (warm and cold) match the oracle's live docs, and top-k
+      // and its next page agree on warm, cold and served paths
+      val extra = (0 until 20 + rng.nextInt(40)).map { i =>
+        (f"https://bf$round%02d.org/q/$i%04d", randomText())
+      }
+      IndexBuilder.append(spark, extra.toDF("url", "text"), fdir)
+      val all = fdocs ++ extra
+      val byUrl = all.map(_._1).filter(_ => rng.nextInt(8) == 0).toSet
+      Deletes.delete(spark, fdir, byUrl.toSeq)
+      val dq = BoolQuery(must = Seq("rare1"), mustNot = Seq("rare2"))
+      Deletes.deleteByQuery(spark, fdir, dq)
+      val dead = byUrl ++ OracleSearch.boolTopK(all, dq, all.size,
+        fcfg.numSegments, byUrl).map(_.url)
+      val cold = new IndexHandle(spark, fdir, warm = false)
+      val warm = new IndexHandle(spark, fdir, warm = true)
+      try queries.zipWithIndex.foreach { case ((q, k), qi) =>
+        val what = s"two generations round=$round qi=$qi q=$q k=$k"
+        // N, avgdl and df count deleted docs until a merge, as the oracle does
+        val live = OracleSearch.boolTopK(all, q, all.size, fcfg.numSegments, dead)
+          .map(x => (x.url, x.score)).toSet
+        val full = cold.search(q, all.size)
+        assert(full.map(x => (x.url, x.score)).toSet === live, what)
+        Seq(cold, warm).foreach { hh =>
+          assert(hh.countMatches(q) === live.size.toLong, what)
+          assert(hh.matchesDF(q).select("docId", "url").as[(Long, String)].collect().toSet ===
+            full.map(x => (x.docId, x.url)).toSet, what)
+        }
+        val page1 = cold.search(q, k)
+        assert(warm.search(q, k).toSeq === page1.toSeq, what)
+        assert(warm.servedSearch(q, k).toSeq === page1.toSeq, what)
+        val cursor = page1.lastOption.map(x => (x.score, x.docId))
+        val page2 = cold.searchAfter(q, k, cursor)
+        assert(warm.searchAfter(q, k, cursor).toSeq === page2.toSeq, what)
+        assert(warm.servedSearchAfter(q, k, cursor).toSeq === page2.toSeq, what)
+      } finally warm.close()
     }
   }
 

@@ -4,6 +4,11 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+
 import graft.corpus.Corpus
 import graft.index.{IndexBuilder, IndexConfig, Snapshot}
 import graft.search.{OracleSearch, Searcher}
@@ -143,6 +148,11 @@ class IndexSearchSpec extends SparkSuite {
     val byUrl = docs.toMap
     val rows = fetched.collect()
     assert(rows.map(_.getAs[String]("url")).toSeq === hits.map(_.url).toSeq)
+    // the broadcast hint lands on the side a left outer join can build
+    val joins = new AdaptiveSparkPlanHelper {}.collect(fetched.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec => (j.joinType, j.buildSide)
+    }
+    assert(joins === Seq((LeftOuter, BuildRight)), fetched.queryExecution.executedPlan)
     rows.foreach(r =>
       assert(r.getAs[String]("text") === byUrl(r.getAs[String]("url"))))
   }
