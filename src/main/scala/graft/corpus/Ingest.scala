@@ -107,13 +107,9 @@ object Ingest {
       indexDir: String,
       langs: Set[String] = Set.empty): SnapshotMeta = {
     val batch = prepareScoped(rawCrawl, langs)
-    try {
-      // a batch emptied by scoping/validation must not commit a generation
-      // of empty segments plus a full termdict rebuild
-      if (batch.isEmpty)
-        graft.index.Snapshot.latest(indexDir).getOrElse(
-          throw new IllegalStateException(s"no snapshot under $indexDir"))
-      else IndexBuilder.upsert(spark, batch, indexDir)
-    } finally batch.unpersist()
+    // a batch emptied by scoping/validation commits nothing: upsert
+    // returns the latest snapshot when its url collect comes back empty
+    try IndexBuilder.upsert(spark, batch, indexDir)
+    finally batch.unpersist()
   }
 }

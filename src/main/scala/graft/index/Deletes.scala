@@ -1,14 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.search.{BoolQuery, IndexHandle}
-
-/** One input row of the tombstone writer (`Deletes.writeTombstones`):
-  * docIds of segment `segId` to kill, or its prior TermDels row `prior`
-  * (null when the row carries ids). */
-private[index] case class TombIn(segId: Int, prior: PostingRow, ids: Array[Long])
 
 /** Document deletion with ES/Lucene semantics over the snapshot log.
   *
@@ -34,18 +29,20 @@ private[index] case class TombIn(segId: Int, prior: PostingRow, ids: Array[Long]
   *
   * Both steps are snapshot commits: readers holding the previous
   * SnapshotMeta are unaffected (snapshot isolation), and `vacuum`
-  * reclaims the pre-merge dirs.
+  * reclaims the pre-merge dirs. An upsert writes its tombstone dir the
+  * same way but commits it in its build's snapshot, so no snapshot holds
+  * a url's old version dead without its new one.
   *
   * Tombstone-volume guidance: every delete path is executor-side.
   * `delete` (by url; upsert tombstones its batch's old versions the same
   * way) and `deleteDocIds` (by id) are one Spark execution through one
   * writer: a scan of the affected segments' tombstone rows (and, by url,
-  * of their url chunks, searched in-task), one shuffle by segment that
-  * keeps each segment's newest tombstone row, and a write that
-  * consolidates it with the batch's ids, streaming over encoded bytes —
-  * per-call cost is bounded by the affected segments' tombstone BYTES
-  * per task plus the (batch-bounded) id sets (measured in DeleteSpec: 4
-  * segments x 10^6 prior ids re-consolidate in seconds).
+  * of their url chunks, searched in-task), one shuffle by segment whose
+  * built-in aggregates keep each segment's newest tombstone row and
+  * gather the ids, and a write that consolidates the two, streaming over
+  * encoded bytes — per-call cost is bounded by the affected segments'
+  * tombstone BYTES per task plus the (batch-bounded) id sets (measured in
+  * DeleteSpec: 4 segments x 10^6 prior ids re-consolidate in seconds).
   * `deleteByQuery` enumerates and encodes matches per-segment inside
   * executor tasks; newly-dead counts on every path are observed during
   * the tombstone write (no second query over what was just written),
@@ -57,12 +54,12 @@ object Deletes {
 
   /** Tombstone documents by url (ES delete-by-id). Unknown urls are ignored
     * (ES `delete` 404 semantics); re-deleting a dead doc is a no-op. One
-    * Spark execution, [[tombstoneUrls]]. */
+    * Spark execution, [[tombstoneUrls]], and its own snapshot commit. */
   def delete(spark: SparkSession, indexDir: String, urls: Seq[String]): SnapshotMeta = {
     val snap = Snapshot.latest(indexDir)
       .getOrElse(throw new IllegalStateException(s"no snapshot under $indexDir"))
     require(snap.isComplete, "delete requires a complete index")
-    tombstoneUrls(spark, indexDir, snap, urls)
+    commitTombstones(indexDir, snap, tombstoneUrls(spark, indexDir, snap, urls))
   }
 
   /** Tombstone every document of `urls` in every generation of `snap`, the
@@ -74,26 +71,22 @@ object Deletes {
     * docId) pair crosses to the driver. The probes travel as one broadcast
     * destroyed after the write. Cost beyond the resolver's scan: the
     * candidate segments' tombstone rows, reduced map-side to the newest
-    * per segment, which weigh less than the url chunks already scanned. */
+    * per segment, which weigh less than the url chunks already scanned.
+    * Returns the written, uncommitted dir and its newly-dead count (None
+    * when nothing new died): `delete` commits it alone, an upsert with its
+    * build. */
   private[graft] def tombstoneUrls(spark: SparkSession, indexDir: String,
-      snap: SnapshotMeta, urls: scala.collection.Seq[String]): SnapshotMeta = {
-    import spark.implicits._
+      snap: SnapshotMeta, urls: scala.collection.Seq[String]): Option[(String, Long)] = {
     val P = snap.numSegments
     val chunkDocs = snap.markerChunkDocs
     val (probes, segs) = IndexBuilder.routeUrls(urls, P, 0 until snap.generations)
-    if (segs.isEmpty) return snap
+    if (segs.isEmpty) return None
     val bc = spark.sparkContext.broadcast(probes)
-    try writeTombstones(spark, indexDir, snap,
-      IndexBuilder.snapshotPostings(spark, indexDir, snap)
-        .filter((col("term") === IndexBuilder.TermUrls ||
-          col("term") === IndexBuilder.TermDels) && col("segId").isin(segs: _*))
-        .flatMap { r =>
-          if (r.term == IndexBuilder.TermDels) Iterator.single(TombIn(r.segId, r, NoIds))
-          else {
-            val ids = IndexBuilder.findInChunk(r, bc.value, P, chunkDocs).map(_._2).toArray
-            if (ids.isEmpty) Iterator.empty else Iterator.single(TombIn(r.segId, null, ids))
-          }
-        })
+    val found = udf((segId: Int, chunk: Int, table: Array[Byte]) =>
+      IndexBuilder.findInChunk(segId, chunk, table, bc.value, P, chunkDocs)
+        .map(_._2).toArray)
+    try writeTombstones(spark, indexDir, snap, tombstoneInput(spark, indexDir, snap,
+      segs, Some(found(col("segId"), col("chunk"), col("tfBytes")))))
     finally bc.destroy()
   }
 
@@ -119,26 +112,31 @@ object Deletes {
       .observe(dead, coalesce(sum(col("_2")), lit(0L)).as("n"))
       .map(_._1)
       .write.mode("overwrite").parquet(s"$indexDir/$rel")
-    commitTombstones(indexDir, h.snap, rel, dead.get("n").asInstanceOf[Long])
+    commitTombstones(indexDir, h.snap,
+      kept(indexDir, rel, dead.get("n").asInstanceOf[Long]))
   }
 
-  /** Commit the tombstone dir `rel` holding `newlyDead` newly-dead docs,
-    * or drop it and keep `snap` when the write killed nothing new. */
-  private def commitTombstones(indexDir: String, snap: SnapshotMeta,
-      rel: String, newlyDead: Long): SnapshotMeta = {
-    if (newlyDead == 0) {
-      deleteDir(s"$indexDir/$rel")
-      return snap
+  /** The tombstone dir `rel` with its `newlyDead` count, or None, the dir
+    * dropped, when the write killed nothing new. */
+  private def kept(indexDir: String, rel: String, newlyDead: Long): Option[(String, Long)] =
+    if (newlyDead > 0) Some((rel, newlyDead))
+    else {
+      IndexBuilder.deleteTree(java.nio.file.Paths.get(s"$indexDir/$rel"))
+      None
     }
-    val neu = snap.copy(id = snap.id + 1, parent = snap.id,
-      dataDirs = snap.dataDirs :+ rel,
-      deletedDocs = snap.deletedDocs + newlyDead)
-    Snapshot.commit(indexDir, neu)
-    neu
-  }
 
-  private def deleteDir(abs: String): Unit =
-    IndexBuilder.deleteTree(java.nio.file.Paths.get(abs))
+  /** Commit the tombstone dir `written` (dir, newly-dead count) on top of
+    * `snap`; with none, `snap` stays latest. */
+  private def commitTombstones(indexDir: String, snap: SnapshotMeta,
+      written: Option[(String, Long)]): SnapshotMeta = written match {
+    case None => snap
+    case Some((rel, newlyDead)) =>
+      val neu = snap.copy(id = snap.id + 1, parent = snap.id,
+        dataDirs = snap.dataDirs :+ rel,
+        deletedDocs = snap.deletedDocs + newlyDead)
+      Snapshot.commit(indexDir, neu)
+      neu
+  }
 
   /** Commit tombstones for per-segment docId sets, through the writer
     * url deletes and upserts use ([[writeTombstones]]), in one Spark
@@ -160,59 +158,77 @@ object Deletes {
     if (requested.isEmpty) return snap
     val affected = requested.keys.toSeq
     val ids = spark.sparkContext.broadcast(requested)
-    try writeTombstones(spark, indexDir, snap,
-      affected.toDS().map(s => TombIn(s, null, ids.value(s)))
-        .union(IndexBuilder.snapshotPostings(spark, indexDir, snap)
-          .filter(col("term") === IndexBuilder.TermDels &&
-            col("segId").isin(affected: _*))
-          .map(r => TombIn(r.segId, r, NoIds))))
+    // a typed map, not a projection: the optimizer evaluates a projection
+    // of a local relation on the driver, which would inline the ids
+    val asked = affected.toDS().map(s => (s, ids.value(s))).toDF("segId", "ids")
+      .select(col("segId"), lit(null).cast(PriorType).as("prior"), col("ids"))
+    try commitTombstones(indexDir, snap, writeTombstones(spark, indexDir, snap,
+      asked.unionByName(tombstoneInput(spark, indexDir, snap, affected, None))))
     finally ids.destroy()
   }
 
-  private val NoIds = Array.emptyLongArray
+  /** The writer's input `(segId, prior, ids)` from a pushed-down scan of
+    * segments `segs` of `snap`: each TermDels row as `prior` (its `df` and
+    * `docBytes`) and, given `urlChunkIds`, each url chunk with the docIds
+    * that column yields for it as `ids`. */
+  private def tombstoneInput(spark: SparkSession, indexDir: String,
+      snap: SnapshotMeta, segs: Seq[Int], urlChunkIds: Option[Column]): DataFrame = {
+    val dels = col("term") === IndexBuilder.TermDels
+    val urls = col("term") === IndexBuilder.TermUrls
+    IndexBuilder.readPostings(spark, snap.dataDirs.map(d => s"$indexDir/$d"))
+      .filter((if (urlChunkIds.isDefined) dels || urls else dels) &&
+        col("segId").isin(segs: _*))
+      .select(col("segId"),
+        when(dels, struct(col("df"), col("docBytes"))).as("prior"),
+        urlChunkIds.fold(lit(null).cast("array<bigint>"))(when(urls, _)).as("ids"))
+  }
 
-  /** The one tombstone writer. `in` holds, for some segments of `snap`,
-    * docIds to kill and prior TermDels rows. One shuffle by segment keeps
-    * each segment's newest prior row (the superset chain makes the max-df
-    * row the segment's whole dead set, older rows redundant; map-side
-    * partial reduce) and gathers its ids; a segment with ids gets ONE
-    * consolidated TermDels row in the new data dir, its prior row
-    * stream-merged with the ids and re-encoded inside the task, so prior
-    * tombstones move varint-encoded and are never materialized as arrays.
-    * A segment with no ids writes no row. The newly-dead count is observed
-    * during the write: Σ written df − Σ df of the merged prior rows. When
-    * nothing new died the dir is dropped and `snap` stays latest. */
+  private val PriorType = "struct<df: bigint, docBytes: binary>"
+
+  /** The one tombstone writer. `in` holds rows `(segId, prior, ids)`: a
+    * prior TermDels row of a segment of `snap` as `prior` (df, docBytes),
+    * or docIds to kill as `ids`. One shuffle by segment keeps each
+    * segment's newest prior (the superset chain makes the max-df row the
+    * segment's whole dead set, older rows redundant) and gathers its ids,
+    * both built-in aggregates reduced map-side. A segment with ids gets
+    * ONE consolidated TermDels row in the new data dir: its ids, sorted in
+    * a primitive array, stream-merged with its prior's varint-encoded ids
+    * and re-encoded inside the task, so prior tombstones are never
+    * materialized as arrays. A segment with no ids writes no row. The
+    * newly-dead count is observed during the write: Σ written df − Σ df of
+    * the merged priors. Returns the dir and that count, uncommitted, or
+    * None, the dir dropped, when nothing new died. */
   private def writeTombstones(spark: SparkSession, indexDir: String,
-      snap: SnapshotMeta, in: Dataset[TombIn]): SnapshotMeta = {
+      snap: SnapshotMeta, in: DataFrame): Option[(String, Long)] = {
     import spark.implicits._
     IndexBuilder.ensureLargeCellWriterConf(spark)
     val bs = snap.blockSize
     val rel = f"data/del-${snap.id + 1}%05d"
     val dead = Observation()
-    in.groupByKey(_.segId)
-      .reduceGroups { (a, b) =>
-        val newer = if (b.prior == null || (a.prior != null && a.prior.df >= b.prior.df))
-          a.prior else b.prior
-        TombIn(a.segId, newer, a.ids ++ b.ids)
-      }
-      .flatMap { case (seg, t) =>
-        if (t.ids.isEmpty) None
+    in.groupBy("segId")
+      .agg(max_by(col("prior"), col("prior.df")).as("prior"),
+        flatten(collect_list(col("ids"))).as("ids"))
+      .select(col("segId"), coalesce(col("prior.df"), lit(0L)),
+        col("prior.docBytes"), col("ids"))
+      .as[(Int, Long, Array[Byte], Array[Long])]
+      .flatMap { case (seg, priorDf, priorBytes, ids) =>
+        if (ids.isEmpty) None
         else {
-          val p = Option(t.prior)
-          val oldIt = p.map(IndexBuilder.docIdStream).getOrElse(Iterator.empty)
-          Some((IndexBuilder.encodeDocIdStream(seg, graft.search.MatchEnum
-            .mergeDistinct(Seq(t.ids.distinct.sorted.iterator, oldIt)), bs),
-            p.map(_.df).getOrElse(0L)))
+          java.util.Arrays.sort(ids)
+          val old =
+            if (priorBytes == null) Iterator.empty
+            else IndexBuilder.docIdStream(seg, priorDf, priorBytes)
+          Some((IndexBuilder.encodeDocIdStream(seg,
+            graft.search.MatchEnum.mergeDistinct(Seq(ids.iterator, old)), bs), priorDf))
         }
       }
       .observe(dead, coalesce(sum(col("_1.df")), lit(0L)).as("written"),
         coalesce(sum(col("_2")), lit(0L)).as("prior"))
-      .map(_._1)
+      .select(col("_1.*"))
       .write.mode("overwrite").parquet(s"$indexDir/$rel")
     // zero when every id was already dead
-    val newlyDead = dead.get("written").asInstanceOf[Long] -
-      dead.get("prior").asInstanceOf[Long]
-    commitTombstones(indexDir, snap, rel, newlyDead)
+    kept(indexDir, rel, dead.get("written").asInstanceOf[Long] -
+      dead.get("prior").asInstanceOf[Long])
   }
 
   /** Expunge tombstoned docs: the merge, [[IndexBuilder.compact]]. After

@@ -292,11 +292,19 @@ object IndexBuilder {
     * the write dies with `ParquetEncodingException: writing empty page`.
     * Checking after every 2nd value makes big cells flush page-per-value
     * (the check is adaptive afterwards, so small-cell writes keep their
-    * batching). Set only if the user has not chosen a value. */
+    * batching). The blob columns `docBytes` and `tfBytes` are written
+    * without a dictionary: a url or doc-length chunk never repeats, so the
+    * dictionary attempt only hashes every cell (multi-MB binaries) before
+    * parquet falls back to plain encoding. Each key is set only if the
+    * user has not chosen a value. */
   private[index] def ensureLargeCellWriterConf(spark: SparkSession): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     if (hc.get("parquet.page.size.row.check.min") == null)
       hc.setInt("parquet.page.size.row.check.min", 2)
+    Seq("docBytes", "tfBytes").foreach { c =>
+      val key = s"parquet.enable.dictionary#$c"
+      if (hc.get(key) == null) hc.setBoolean(key, false)
+    }
   }
 
   /** keys(s) = smallest non-negative int x with pmod(murmur3(x, 42), P) == s,
@@ -401,10 +409,11 @@ object IndexBuilder {
   }
 
   /** [[append]] of a batch known to be non-empty onto `prior`, the latest
-    * snapshot. */
+    * snapshot, committing `tombstones` with it (see [[buildSegments]]). */
   private def appendTo(spark: SparkSession, newPages: DataFrame,
       indexDir: String, prior: SnapshotMeta, resume: Boolean,
-      simulateOnlySegments: Option[Set[Int]]): SnapshotMeta = {
+      simulateOnlySegments: Option[Set[Int]],
+      tombstones: Option[(String, Long)] = None): SnapshotMeta = {
     val P = prior.numSegments
     // fields are a pinned index property — re-derive from the snapshot so
     // appended generations tokenize identically to the original build
@@ -426,7 +435,7 @@ object IndexBuilder {
       .filter(s => simulateOnlySegments.forall(_.contains(s)))
     require(wanted.nonEmpty, "nothing to append")
     buildSegments(spark, newPages, indexDir, cfg, Some(prior),
-      segOffset = gen * P, wanted)
+      segOffset = gen * P, wanted, tombstones)
   }
 
   /** The url -> docId resolver, the engine's lookup by primary key (ES
@@ -458,7 +467,7 @@ object IndexBuilder {
         .filter(col("term") === lit(TermUrls) && col("segId").isin(segs: _*))
         .mapPartitions { it =>
           val probes = bc.value
-          it.flatMap(r => findInChunk(r, probes, P, chunkDocs)
+          it.flatMap(r => findInChunk(r.segId, r.chunk, r.tfBytes, probes, P, chunkDocs)
             .map { case (u, d) => (u, r.segId, d) })
         }.collect()
       finally bc.destroy()
@@ -475,12 +484,14 @@ object IndexBuilder {
     (probes, probes.keys.toSeq.sorted.flatMap(s0 => gens.map(_ * P + s0)))
   }
 
-  /** The (url, docId) of every probe routing to `r`'s slot that url-table
-    * chunk row `r` holds, dead slots included: the resolver's executor-side
+  /** The (url, docId) of every probe routing to `segId`'s slot that url
+    * table chunk `chunk` of that segment (encoded `urls`, a url row's
+    * `tfBytes`) holds, dead slots included: the resolver's executor-side
     * search, shared with the tombstone-by-url write. */
-  private[index] def findInChunk(r: PostingRow, probes: Map[Int, Array[String]],
-      P: Int, chunkDocs: Int): Iterator[(String, Long)] = {
-    val targets = probes.getOrElse(r.segId % P, Array.empty[String])
+  private[index] def findInChunk(segId: Int, chunk: Int, urls: Array[Byte],
+      probes: Map[Int, Array[String]], P: Int,
+      chunkDocs: Int): Iterator[(String, Long)] = {
+    val targets = probes.getOrElse(segId % P, Array.empty[String])
     // range precheck against the chunk's (first, last) urls — a prefix
     // walk, two String allocations — so only the ONE chunk per segment
     // that can bracket a probe pays the full decode (2^20 String
@@ -488,7 +499,7 @@ object IndexBuilder {
     // decodes ~100 chunks to run ~20 comparisons
     val inRange =
       if (targets.isEmpty) targets
-      else Varint.firstLastStrings(r.tfBytes) match {
+      else Varint.firstLastStrings(urls) match {
         case None => Array.empty[String]
         case Some((first, last)) => targets.filter(u =>
           OracleSearch.utf8Compare(u, first) >= 0 &&
@@ -496,8 +507,8 @@ object IndexBuilder {
       }
     if (inRange.isEmpty) Iterator.empty
     else {
-      val tab = Varint.decodeStrings(r.tfBytes)
-      val base = segBase(r.segId) + r.chunk.toLong * chunkDocs
+      val tab = Varint.decodeStrings(urls)
+      val base = segBase(segId) + chunk.toLong * chunkDocs
       inRange.iterator.flatMap { u =>
         val idx = binarySearchUtf8(tab, u)
         if (idx >= 0) Iterator.single((u, base + idx + 1)) else Iterator.empty
@@ -540,19 +551,22 @@ object IndexBuilder {
   }
 
   /** Recrawl/update (ES index-with-same-_id, Iceberg merge-on-read): every
-    * document already live for one of `newPages`' urls is tombstoned, then
-    * the batch is appended as a fresh generation — two snapshot commits,
-    * latest version wins for search and `ids` lookups. Contract: one row
-    * per url in the batch (a duplicated url would index twice). Existing
-    * postings are never rewritten (that is [[compact]]'s job, the merge)
-    * and — like ES between a delete and a merge — N/avgdl/df keep counting
-    * the replaced versions until a merge. The old versions are tombstoned
-    * by url in one Spark execution, the one `Deletes.delete` runs: it
-    * scans only the url chunks and tombstone rows of the segments the
-    * batch's urls route to, in every generation, so per-batch cost follows
-    * the batch and the generation count, not the index size. Memory
-    * budget: the batch's distinct urls are held on the driver once, the
-    * same bound `Deletes.delete` has for its url list. */
+    * document already live for one of `newPages`' urls is tombstoned and
+    * the batch is appended as a fresh generation, in ONE snapshot commit,
+    * so no reader ever sees a url's old version dead and its new one not
+    * yet there; latest version wins for search and `ids` lookups.
+    * Contract: one row per url in the batch (a duplicated url would index
+    * twice). Existing postings are never rewritten (that is [[compact]]'s
+    * job, the merge) and — like ES between a delete and a merge —
+    * N/avgdl/df keep counting the replaced versions until a merge. The old
+    * versions are tombstoned by url in one Spark execution, the one
+    * `Deletes.delete` runs: it scans only the url chunks and tombstone
+    * rows of the segments the batch's urls route to, in every generation,
+    * so per-batch cost follows the batch and the generation count, not the
+    * index size. Its dir is written first and committed with the build's.
+    * Memory budget: the batch's distinct urls are held on the driver once,
+    * the same bound `Deletes.delete` has for its url list. An empty batch
+    * commits nothing and returns the latest snapshot, complete or not. */
   def upsert(
       spark: SparkSession,
       newPages: DataFrame,
@@ -560,18 +574,19 @@ object IndexBuilder {
     import spark.implicits._
     val snap = Snapshot.latest(indexDir)
       .getOrElse(throw new IllegalStateException(s"no snapshot under $indexDir"))
-    require(snap.isComplete, "upsert requires a complete index")
     val urls = newPages.select("url").as[String].collect()
-    // an empty batch commits nothing, like append's own emptiness check,
-    // which the collected urls make redundant here
     if (urls.isEmpty) return snap
-    // already-tombstoned old versions no-op; a batch of only never-seen
-    // urls commits no tombstone snapshot at all
-    val tombstoned = Deletes.tombstoneUrls(spark, indexDir, snap, urls)
-    appendTo(spark, newPages, indexDir, tombstoned, resume = false,
-      simulateOnlySegments = None)
+    require(snap.isComplete, "upsert requires a complete index")
+    // None when no old version was live (never-seen or already-dead urls)
+    val tombstones = Deletes.tombstoneUrls(spark, indexDir, snap, urls)
+    appendTo(spark, newPages, indexDir, snap, resume = false,
+      simulateOnlySegments = None, tombstones)
   }
 
+  /** Encode and write the `wanted` segments of `pages` into a fresh data
+    * dir and commit it on top of `prior`. `tombstones`, a tombstone dir
+    * already written over `prior` and its newly-dead count (an upsert's),
+    * joins the same commit. */
   private def buildSegments(
       spark: SparkSession,
       pages: DataFrame,
@@ -579,7 +594,8 @@ object IndexBuilder {
       cfg: IndexConfig,
       prior: Option[SnapshotMeta],
       segOffset: Int,
-      wanted: Seq[Int]): SnapshotMeta = {
+      wanted: Seq[Int],
+      tombstones: Option[(String, Long)] = None): SnapshotMeta = {
     import spark.implicits._
     ensureLargeCellWriterConf(spark)
     val P = cfg.numSegments
@@ -709,11 +725,12 @@ object IndexBuilder {
     val allSegments = (prior.map(_.segments).getOrElse(Nil) ++ metas.value.asScala)
       .sortBy(_.segId)
     val priorDirs = prior.map(_.dataDirs).getOrElse(Nil)
-    val allDataDirs = (priorDirs :+ buildDirRel).distinct
+    val allDataDirs = (priorDirs ++ tombstones.map(_._1) :+ buildDirRel).distinct
     // this commit is append-shaped by construction (old dirs are immutable,
-    // one fresh dir added), so incremental artifact maintenance below may
-    // aggregate over newDirs alone and merge with the prior's exact state
-    val newDirs = allDataDirs.filterNot(priorDirs.toSet)
+    // one fresh dir of segments added; a tombstone dir holds no term or
+    // field row), so incremental artifact maintenance below may aggregate
+    // over newDirs alone and merge with the prior's exact state
+    val newDirs = Seq(buildDirRel).filterNot(priorDirs.toSet)
     val generations = allSegments.map(_.segId).max / P + 1
     val complete = allSegments.map(_.segId).distinct.size == P * generations
 
@@ -728,9 +745,15 @@ object IndexBuilder {
     val termdictRows = termdictRel.map { rel =>
       val prevDict = prior.flatMap(_.termdictDir).filter(_ => newDirs.nonEmpty)
       val dirs = if (prevDict.isDefined) newDirs else allDataDirs
+      // the dictionary's input rows: the prior's one per term plus one
+      // per (segment, term) of the aggregated dirs
+      val inputRows =
+        if (prevDict.isDefined)
+          math.max(prior.get.termdictRows, 0L) + metas.value.asScala.map(_.terms).sum
+        else allSegments.map(_.terms).sum
       lastTermdictPlan = (if (prevDict.isDefined) "delta:" else "full:") + dirs.size
       timed("termdict")(writeTermdict(spark, prevDict.map(d => s"$indexDir/$d"),
-        dirs.map(d => s"$indexDir/$d"), s"$indexDir/$rel"))
+        dirs.map(d => s"$indexDir/$d"), inputRows, s"$indexDir/$rel"))
     }.getOrElse(-1L)
 
     // suggest artifact: sticky across append/resume — once an index was
@@ -795,7 +818,8 @@ object IndexBuilder {
       dataDirs = allDataDirs, termdictDir = termdictRel, segments = allSegments,
       // tombstones committed before this build/append stay live (their
       // TermDels rows ride along in dataDirs) — the counter must too
-      deletedDocs = prior.map(_.deletedDocs).getOrElse(0L),
+      deletedDocs = prior.map(_.deletedDocs).getOrElse(0L) +
+        tombstones.map(_._2).getOrElse(0L),
       suggestDir = suggestRel, suggestRows = suggestRows,
       // persist the REQUEST too: a partial commit carries suggestDir =
       // None, and a resume must not lose the original build's intent
@@ -914,19 +938,24 @@ object IndexBuilder {
     * a streaming index can see per-commit dictionary cost stays flat. */
   @volatile private[graft] var lastTermdictPlan: String = ""
 
-  /** Salt buckets of the termdict's two-phase aggregation. A constant, not
-    * a setting: a delta commit merges its partials with the prior
-    * dictionary, so every commit of an index must salt alike, and the
-    * value changes no output row, only how head-term partials spread. */
-  private val SaltBuckets = 8
+  /** Input rows of the term dictionary per output file. A constant, not a
+    * setting: it changes no row, only how many files (and range tasks)
+    * the dictionary is split into. */
+  private val TermdictRowsPerFile = 1 << 18
 
   /** Write the global term dictionary of `dirsAbs`, merged with the
     * committed dictionary `priorAbs` when given; returns the distinct-term
     * count, persisted in SnapshotMeta so the warm handle's driver-dict
-    * admission gate needs no per-open count() job. Explicit two-phase
-    * salted aggregation: head terms (Zipf skew) are first combined per
-    * (term, salt) bucket, then reduced per term — the salted merge step
-    * the north rule requires for posting consolidation at scale.
+    * admission gate needs no per-open count() job.
+    *
+    * One exchange: the input, one row per (segment, term) of the dirs plus
+    * one per term of the prior, is range-partitioned on term into
+    * ceil(`inputRows` / `rowsPerFile`) partitions (at most
+    * `spark.sql.shuffle.partitions`), reduced per term over that exchange
+    * and sorted within each partition, so the file set is globally
+    * term-sorted. At one partition no sampling job runs. No salting: a
+    * term has at most one row per segment plus one prior row, so its rows
+    * are bounded by the segment count, not by its df.
     *
     * With a prior the result is value-identical to a full rebuild over all
     * dirs (spec-pinned) by algebra: every termdict measure (sum df, sum
@@ -936,28 +965,19 @@ object IndexBuilder {
     * O(segments x vocab). Tombstone rows (term <= TermDels) contribute
     * nothing, matching the df-includes-deleted semantics the termdict
     * keeps until a merge; the merge writes one fresh dir and passes no
-    * prior. The prior's rows ride one reserved salt bucket (-1): they are
-    * already one-row-per-term, so the Zipf head-term skew the salting
-    * defends against cannot come from them, only from the (bounded, <= P
-    * segments) new-dir partials. */
+    * prior. */
   private[graft] def writeTermdict(spark: SparkSession, priorAbs: Option[String],
-      dirsAbs: Seq[String], outAbs: String): Long = {
-    val parts = readPostings(spark, dirsAbs)
-      .filter(col("term") > TermDels)
-      .select(col("term"), pmod(col("segId"), lit(SaltBuckets)).as("salt"),
-        col("df"), col("cf"), col("maxTf"), col("minDl"))
-    val all = priorAbs.fold(parts)(p => readTermdict(spark, p)
-      .select(col("term"), lit(-1).as("salt"),
-        col("df"), col("cf"), col("maxTf"), col("minDl"))
-      .unionByName(parts))
-    // the second phase reduces over the range exchange that orders the
-    // output (range partitioning on term clusters by term), so the file
-    // set is globally term-sorted with no exchange of its own
+      dirsAbs: Seq[String], inputRows: Long, outAbs: String,
+      rowsPerFile: Int = TermdictRowsPerFile): Long = {
+    val measures = Seq(col("term"), col("df"), col("cf"), col("maxTf"), col("minDl"))
+    val rows = readPostings(spark, dirsAbs).filter(col("term") > TermDels)
+      .select(measures: _*)
+    val all = priorAbs.fold(rows)(p => readTermdict(spark, p).select(measures: _*)
+      .unionByName(rows))
+    val n = math.min((inputRows + rowsPerFile - 1) / rowsPerFile,
+      spark.sessionState.conf.numShufflePartitions.toLong).max(1L).toInt
     writeCounted(all
-      .groupBy(col("term"), col("salt"))
-      .agg(sum("df").as("df"), sum("cf").as("cf"),
-        max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-      .repartitionByRange(col("term"))
+      .repartitionByRange(n, col("term"))
       .groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"),
         max("maxTf").as("maxTf"), min("minDl").as("minDl"))
@@ -1203,14 +1223,19 @@ object IndexBuilder {
     * [[decodePostings]] would allocate 8 bytes per covered doc in-task,
     * an executor-OOM risk right after a prior mass delete. */
   private[graft] def docIdStream(r: PostingRow): Iterator[Long] =
+    docIdStream(r.segId, r.df, r.docBytes)
+
+  /** [[docIdStream]] over the `n` delta-encoded docIds `docBytes` of
+    * segment `segId`. */
+  private[index] def docIdStream(segId: Int, n: Long,
+      docBytes: Array[Byte]): Iterator[Long] =
     new Iterator[Long] {
       // Long counter: a segment holds up to 2^40 docs and these are
       // explicitly the corpus-scale rows (a consolidated tombstone can
       // cover ~all of one) — an Int cast would wrap negative past 2^31
       // and silently DROP the row from merges (deleted docs resurrect)
-      private val n = r.df
-      private val dr = new Varint.Reader(r.docBytes, 0)
-      private var prev = segBase(r.segId)
+      private val dr = new Varint.Reader(docBytes, 0)
+      private var prev = segBase(segId)
       private var i = 0L
       def hasNext: Boolean = i < n
       def next(): Long = { prev += dr.readLong(); i += 1; prev }
@@ -1330,7 +1355,7 @@ object IndexBuilder {
     val segments = metas.value.asScala.toSeq.sortBy(_.segId)
     val dictRel = f"termdict/snap-$newId%05d"
     val dictRows = writeTermdict(spark, None, Seq(s"$indexDir/$rel"),
-      s"$indexDir/$dictRel")
+      segments.map(_.terms).sum, s"$indexDir/$dictRel")
     val (sugRel, sugRows) = snap.suggestDir match {
       case None => (None, 0L)
       case Some(_) =>

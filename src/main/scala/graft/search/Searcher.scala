@@ -514,9 +514,11 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
         try {
           val c = ds.repartition(parts, col("segId"))
             .sortWithinPartitions("term", "segId").cache()
-          // fill the cache with an action that runs no aggregate: a
-          // count() adds a single-partition exchange, one more job
-          c.write.format("noop").mode("overwrite").save()
+          // fill the cache with an action that only reads it: a count()
+          // adds a single-partition exchange, one more job, and a `noop`
+          // write plans and commits a write. Computing a partition of the
+          // cached relation stores it whole, so the iterator is not drained
+          c.queryExecution.toRdd.foreachPartition(_ => ())
           c
         } finally prev match {
           case Some(v) => spark.conf.set(key, v)

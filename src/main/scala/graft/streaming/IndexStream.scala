@@ -181,7 +181,7 @@ object IndexStream {
     * `IndexBuilder.rollback` remediation.
     *
     * Crash windows (at-least-once application, exactly-once ids/search
-    * MEMBERSHIP): a crash between the upsert's commits and the ledger
+    * MEMBERSHIP): a crash between the upsert's commit and the ledger
     * write re-applies the batch — the re-upsert tombstones the generation
     * it just wrote and appends an identical one. Search results keep
     * serving exactly the latest edition of every url; like every

@@ -326,4 +326,49 @@ class ChunkedMarkerSpec extends SparkSuite {
     assert(urls.length === 8)
     assert(urls.forall(_.chunk === 0))
   }
+
+  test("blob columns are written without a dictionary; rows unchanged") {
+    // a url chunk never repeats, so a dictionary only hashes every cell
+    val hc = spark.sparkContext.hadoopConfiguration
+    val blobs = Set("docBytes", "tfBytes")
+    val keys = blobs.toSeq.map(c => s"parquet.enable.dictionary#$c")
+    // the same index with the dictionary turned on, as a user may choose
+    val withDict = {
+      keys.foreach(hc.setBoolean(_, true))
+      try build(cfgChunked) finally keys.foreach(hc.unset)
+    }
+    val plain = build(cfgChunked)
+    /** Columns of the data dir files under `dir` with a dictionary page. */
+    def dictColumns(dir: String): Set[String] = {
+      val walk = Files.walk(Paths.get(dir, "data"))
+      val files =
+        try walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+        finally walk.close()
+      assert(files.nonEmpty, s"no data files under $dir")
+      files.flatMap { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString), hc))
+        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .filter(c => c.hasDictionaryPage ||
+            c.getEncodings.asScala.exists(_.usesDictionary))
+          .map(_.getPath.toDotString).toSeq
+        finally r.close()
+      }.toSet
+    }
+    assert(dictColumns(withDict).intersect(blobs).nonEmpty,
+      "the forced dictionary left no trace: the check went blind")
+    assert(dictColumns(plain).intersect(blobs).isEmpty, dictColumns(plain))
+    def rows(dir: String): Seq[Seq[Any]] = {
+      val snap = Snapshot.latest(dir).get
+      spark.read.parquet(snap.dataDirs.map(d => s"$dir/$d"): _*).as[PostingRow]
+        .collect().toSeq.map(_.productIterator.map {
+          case a: Array[_] => a.toSeq
+          case x => x
+        }.toSeq)
+        .sortBy(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[String],
+          r(13).asInstanceOf[Int]))
+    }
+    assert(rows(plain) === rows(withDict))
+  }
 }

@@ -117,6 +117,34 @@ class IngestSpec extends SparkSuite {
     assert(hits.length === 1)
   }
 
+  test("refreshIndex runs no job of its own; an empty batch commits nothing") {
+    // an empty batch returns LATEST, even when the index is incomplete
+    val partialDir = Files.createTempDirectory("graft-ingest-partial").toString
+    IndexBuilder.build(spark, crawl0.toDF().select("url", "text"), partialDir,
+      cfg, simulateOnlySegments = Some(Set(0, 1)))
+    val partial = Snapshot.latest(partialDir).get
+    assert(!partial.isComplete)
+    val same = Ingest.refreshIndex(spark, crawl1.toDF(), partialDir, langs = Set("xx"))
+    assert(same.id === partial.id)
+    assert(Snapshot.latest(partialDir).get.id === partial.id)
+    // a non-empty batch runs the jobs of preparing and upserting it, no more
+    def base(): String = {
+      val d = Files.createTempDirectory("graft-ingest-jobs").toString
+      IndexBuilder.build(spark, crawl0.toDF().select("url", "text"), d, cfg)
+      d
+    }
+    val (d1, d2) = (base(), base())
+    val (viaRefresh, refreshJobs) =
+      JobLog.of(spark)(Ingest.refreshIndex(spark, crawl1.toDF(), d1))
+    val (direct, directJobs) = JobLog.of(spark) {
+      val batch = Ingest.prepareScoped(crawl1.toDF(), Set.empty)
+      try IndexBuilder.upsert(spark, batch, d2) finally batch.unpersist()
+    }
+    assert(viaRefresh.id === direct.id && viaRefresh.deletedDocs === direct.deletedDocs)
+    assert(refreshJobs.count === directJobs.count,
+      s"refreshIndex:\n$refreshJobs\n--\nprepare + upsert:\n$directJobs")
+  }
+
   test("lang scoping: refreshIndex indexes only the requested languages") {
     val dir = Files.createTempDirectory("graft-ingest-lang").toString
     val en = crawl0.filter(_.lang == "en")

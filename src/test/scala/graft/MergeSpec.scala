@@ -172,7 +172,7 @@ class MergeSpec extends SparkSuite {
     val (merged, jobs) = JobLog.of(spark)(IndexBuilder.compact(spark, dir))
     info(s"merge: ${jobs.count} jobs")
     assert(jobs.schemaInference.isEmpty, s"schema-inference jobs:\n$jobs")
-    assert(jobs.count <= 6, s"merge jobs:\n$jobs")
+    assert(jobs.count <= 4, s"merge jobs:\n$jobs")
     assert(merged.segments.size === P)
     val (again, none) = JobLog.of(spark)(Deletes.purge(spark, dir))
     assert(again.id === merged.id)

@@ -94,6 +94,6 @@ class SegmentMetricsSpec extends SparkSuite {
       IndexConfig(numSegments = 4, blockSize = 16)))
     info(s"build ${jobs.count} jobs")
     assert(jobs.schemaInference.isEmpty, s"schema-inference jobs:\n$jobs")
-    assert(jobs.count <= 6, s"build jobs:\n$jobs")
+    assert(jobs.count <= 4, s"build jobs:\n$jobs")
   }
 }

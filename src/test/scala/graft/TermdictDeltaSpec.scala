@@ -16,7 +16,8 @@ import graft.search.OracleSearch
   *   1. EXACTNESS — the delta-merged termdict is value-identical to a
   *      full `writeTermdict` rebuild (no prior) over all dirs, across
   *      appends, tombstones (df keeps dead docs until purge) and post-purge
-  *      appends;
+  *      appends, and to an earlier salted two-phase plan over the same
+  *      commit's inputs, kept here as a reference;
   *   2. PLAN — the commit actually took the delta path (the structural
   *      guard; timing lives in the perfbench `update` workload), falling back to
   *      the full scan exactly where it must (first build, resume from a
@@ -55,13 +56,57 @@ class TermdictDeltaSpec extends SparkSuite {
     val snap = Snapshot.latest(indexDir).get
     val out = Files.createTempDirectory("graft-td-full").toString + "/dict"
     IndexBuilder.writeTermdict(spark, None,
-      snap.dataDirs.map(d => s"$indexDir/$d"), out)
+      snap.dataDirs.map(d => s"$indexDir/$d"), snap.segments.map(_.terms).sum, out)
     readDict(out)
   }
 
   private def committed(indexDir: String): Seq[DictRow] = {
     val snap = Snapshot.latest(indexDir).get
     readDict(s"$indexDir/${snap.termdictDir.get}")
+  }
+
+  /** The latest commit's dictionary inputs: its parent's termdict and the
+    * dirs it added (a delta commit), or no prior and every dir (full). */
+  private def commitInputs(indexDir: String): (Option[String], Seq[String]) = {
+    val snap = Snapshot.latest(indexDir).get
+    Snapshot.at(indexDir, snap.parent).flatMap(p => p.termdictDir.map(p -> _)) match {
+      case Some((p, dict)) => (Some(s"$indexDir/$dict"),
+        snap.dataDirs.filterNot(p.dataDirs.toSet).map(d => s"$indexDir/$d"))
+      case None => (None, snap.dataDirs.map(d => s"$indexDir/$d"))
+    }
+  }
+
+  /** An earlier writer's plan over the same inputs, kept as a reference:
+    * a two-phase aggregation salted by segId mod 8 (the prior's rows in
+    * their own bucket), then reduced per term. */
+  private def saltedPlan(prior: Option[String], dirs: Seq[String]): Seq[DictRow] = {
+    import org.apache.spark.sql.functions._
+    val parts = spark.read.parquet(dirs: _*)
+      .filter(col("term") > IndexBuilder.TermDels)
+      .select(col("term"), pmod(col("segId"), lit(8)).as("salt"),
+        col("df"), col("cf"), col("maxTf"), col("minDl"))
+    val all = prior.fold(parts)(p => spark.read.parquet(p)
+      .select(col("term"), lit(-1).as("salt"),
+        col("df"), col("cf"), col("maxTf"), col("minDl"))
+      .unionByName(parts))
+    all.groupBy(col("term"), col("salt"))
+      .agg(sum("df").as("df"), sum("cf").as("cf"),
+        max("maxTf").as("maxTf"), min("minDl").as("minDl"))
+      .groupBy("term")
+      .agg(sum("df").as("df"), sum("cf").as("cf"),
+        max("maxTf").as("maxTf"), min("minDl").as("minDl"))
+      .select("term", "df", "cf", "maxTf", "minDl")
+      .as[DictRow].collect().toSeq.sortBy(_._1)
+  }
+
+  /** The committed dictionary equals the salted reference plan over the
+    * same commit's inputs (`full`: a merge's, every dir and no prior). */
+  private def assertSaltedParity(indexDir: String, full: Boolean = false): Unit = {
+    val (prior, dirs) =
+      if (full) (None, Snapshot.latest(indexDir).get.dataDirs.map(d => s"$indexDir/$d"))
+      else commitInputs(indexDir)
+    assert(committed(indexDir) === saltedPlan(prior, dirs),
+      s"termdict differs from the salted plan (prior $prior, dirs $dirs)")
   }
 
   private def fullFieldStats(indexDir: String) = {
@@ -84,6 +129,7 @@ class TermdictDeltaSpec extends SparkSuite {
         s"append $g must merge the prior dict with the one new dir")
       assert(committed(dir) === fullRebuild(dir),
         s"delta-merged dict after append $g must equal a full rebuild")
+      assertSaltedParity(dir)
       assert(Snapshot.latest(dir).get.fieldStats === fullFieldStats(dir),
         s"delta-merged field stats after append $g must equal a full scan")
     }
@@ -104,11 +150,13 @@ class TermdictDeltaSpec extends SparkSuite {
       toDf(fieldedRows(80, seed = 10, startId = 5000L)), dir)
     assert(IndexBuilder.lastTermdictPlan === "delta:1")
     assert(committed(dir) === fullRebuild(dir))
+    assertSaltedParity(dir)
 
     // purge rewrites postings to one dir and full-rebuilds its dict; an
     // append on top of the purged snapshot must delta-merge exactly again
     Deletes.purge(spark, dir)
     assert(committed(dir) === fullRebuild(dir))
+    assertSaltedParity(dir, full = true)
     IndexBuilder.append(spark,
       toDf(fieldedRows(70, seed = 11, startId = 9000L)), dir)
     assert(IndexBuilder.lastTermdictPlan === "delta:1")
@@ -135,12 +183,11 @@ class TermdictDeltaSpec extends SparkSuite {
     assert(committed(dir) === fullRebuild(dir))
   }
 
-  /** The committed termdict's part files, read in part order: each sorted
-    * by term, and each file's last term below the next file's first, so a
-    * pushed-down term probe can trust the file set's order. */
-  private def assertGloballySorted(indexDir: String): Unit = {
-    val rel = Snapshot.latest(indexDir).get.termdictDir.get
-    val ls = Files.list(java.nio.file.Paths.get(indexDir, rel))
+  /** The part files of the dictionary at `abs`, read in part order: each
+    * sorted by term, and each file's last term below the next file's
+    * first, so a pushed-down term probe can trust the file set's order. */
+  private def assertGloballySorted(abs: String): Unit = {
+    val ls = Files.list(java.nio.file.Paths.get(abs))
     val parts =
       try ls.iterator().asScala.map(_.toString)
         .filter(_.endsWith(".parquet")).toSeq.sorted
@@ -150,32 +197,39 @@ class TermdictDeltaSpec extends SparkSuite {
     assert(files.size >= 2, s"order across files is untested: $parts")
     def below(a: String, b: String) = OracleSearch.utf8Compare(a, b) < 0
     files.foreach(ts => ts.sliding(2).foreach {
-      case Seq(a, b) => assert(below(a, b), s"$a !< $b within a file of $rel")
+      case Seq(a, b) => assert(below(a, b), s"$a !< $b within a file of $abs")
       case _ =>
     })
     files.sliding(2).foreach { case Seq(a, b) =>
-      assert(below(a.last, b.head), s"${a.last} !< ${b.head} across files of $rel")
+      assert(below(a.last, b.head), s"${a.last} !< ${b.head} across files of $abs")
     }
   }
 
   test("the termdict stays globally term-sorted after a full build and a delta commit") {
-    // no partition coalescing: the dictionary must land in several files
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val dir = Files.createTempDirectory("graft-td-order").toString
-      IndexBuilder.build(spark, toDf(fieldedRows(120, seed = 31)), dir, cfg)
-      assert(IndexBuilder.lastTermdictPlan === "full:1")
-      assertGloballySorted(dir)
-      IndexBuilder.append(spark,
-        toDf(fieldedRows(90, seed = 32, startId = 4000L)), dir)
-      assert(IndexBuilder.lastTermdictPlan === "delta:1")
-      assertGloballySorted(dir)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val dir = Files.createTempDirectory("graft-td-order").toString
+    // a dictionary rewritten from the latest commit's inputs at 50 input
+    // rows per file, so it lands in several range-partitioned files
+    def rewriteSmall(): Unit = {
+      val (prior, dirs) = commitInputs(dir)
+      val snap = Snapshot.latest(dir).get
+      val rows = prior.fold(snap.segments.map(_.terms).sum)(_ =>
+        Snapshot.at(dir, snap.parent).get.termdictRows +
+          snap.segments.filter(s => dirs.exists(_.endsWith(s.dataDir))).map(_.terms).sum)
+      val out = Files.createTempDirectory("graft-td-small").toString + "/dict"
+      val n = IndexBuilder.writeTermdict(spark, prior, dirs, rows, out, rowsPerFile = 50)
+      assertGloballySorted(out)
+      assert(readDict(out) === saltedPlan(prior, dirs))
+      assert(n === committed(dir).size.toLong)
     }
+    IndexBuilder.build(spark, toDf(fieldedRows(120, seed = 31)), dir, cfg)
+    assert(IndexBuilder.lastTermdictPlan === "full:1")
+    assertSaltedParity(dir)
+    rewriteSmall()
+    IndexBuilder.append(spark,
+      toDf(fieldedRows(90, seed = 32, startId = 4000L)), dir)
+    assert(IndexBuilder.lastTermdictPlan === "delta:1")
+    assertSaltedParity(dir)
+    rewriteSmall()
   }
 
   test("mergeFieldStats sums by name and keeps fields unique to one side") {
