@@ -247,7 +247,7 @@ object IndexBuilder {
 
   private val postingSchema: StructType = Encoders.product[PostingRow].schema
   private val termdictSchema: StructType =
-    StructType.fromDDL("term STRING, df BIGINT, cf BIGINT, maxTf INT, minDl INT")
+    StructType.fromDDL("term STRING, df BIGINT, cf BIGINT, maxTf INT, minDl INT, segs ARRAY<INT>")
   private val suggestSchema: StructType =
     StructType.fromDDL("gram STRING, term STRING, cf BIGINT")
   private val docSuggestSchema: StructType = StructType.fromDDL(
@@ -256,7 +256,8 @@ object IndexBuilder {
   /** Posting rows of committed data dirs, read with their known schema:
     * a schema-less `spark.read.parquet` runs one footer-inference Spark
     * job per call, a fixed cost every refresh paid a dozen times.
-    * `Snapshot.at` refuses every format but v2, so the schema is exact. */
+    * `Snapshot.at` refuses every format but the current one, so the schema
+    * is exact. */
   private[graft] def readPostings(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.schema(postingSchema).parquet(paths: _*)
 
@@ -419,8 +420,7 @@ object IndexBuilder {
     // appended generations tokenize identically to the original build
     val cfg = IndexConfig(P, prior.blockSize, fields = prior.fieldDefs,
       markerChunkDocs = prior.markerChunkDocs,
-      docSuggestFields =
-        if (prior.docSuggestFields == null) Nil else prior.docSuggestFields)
+      docSuggestFields = prior.docSuggestFields)
     val done = prior.completedSegIds
     val topGen = prior.generations - 1
     val topGenDone = (topGen * P until (topGen + 1) * P).forall(done.contains)
@@ -690,37 +690,27 @@ object IndexBuilder {
         when(col("term") === TermLens, col("url")).as("url"))
       .as[TokRow]
 
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("GRAFT_BUILD_TIMING"))
-        System.err.println(f"[build-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
     val wantedSet = wanted.toSet
     val metas = spark.sparkContext.collectionAccumulator[SegmentMeta]("segment metrics")
-    timed("encode+write+metrics") {
-      tokRows
-        // partition == segment (bijection), so segId is constant here and
-        // must NOT lead the sort key: Spark derives the radix/sort prefix
-        // from the FIRST key only, and a constant prefix forces every
-        // comparison through full row deserialization. Leading with term
-        // resolves most comparisons in the 8-byte binary prefix.
-        .sortWithinPartitions("term", "docId")
-        .mapPartitions { it =>
-          // partition p holds exactly segment segOffset+p (bijection above).
-          // A document-less wanted segment must still commit marker rows, or
-          // the snapshot stays permanently incomplete (a corpus with fewer
-          // docs than P would brick the index with no remediation).
-          val segId = segOffset + org.apache.spark.TaskContext.getPartitionId()
-          observeSegments(
-            if (it.hasNext) encodePartition(it, blockSize, chunkDocs)
-            else if (wantedSet.contains(segId)) emptySegmentRows(segId)
-            else Iterator.empty, metas, buildDirRel)
-        }
-        .write.mode("overwrite").parquet(buildDir)
-    }
+    tokRows
+      // partition == segment (bijection), so segId is constant here and
+      // must NOT lead the sort key: Spark derives the radix/sort prefix
+      // from the FIRST key only, and a constant prefix forces every
+      // comparison through full row deserialization. Leading with term
+      // resolves most comparisons in the 8-byte binary prefix.
+      .sortWithinPartitions("term", "docId")
+      .mapPartitions { it =>
+        // partition p holds exactly segment segOffset+p (bijection above).
+        // A document-less wanted segment must still commit marker rows, or
+        // the snapshot stays permanently incomplete (a corpus with fewer
+        // docs than P would brick the index with no remediation).
+        val segId = segOffset + org.apache.spark.TaskContext.getPartitionId()
+        observeSegments(
+          if (it.hasNext) encodePartition(it, blockSize, chunkDocs)
+          else if (wantedSet.contains(segId)) emptySegmentRows(segId)
+          else Iterator.empty, metas, buildDirRel)
+      }
+      .write.mode("overwrite").parquet(buildDir)
 
     val allSegments = (prior.map(_.segments).getOrElse(Nil) ++ metas.value.asScala)
       .sortBy(_.segId)
@@ -749,11 +739,11 @@ object IndexBuilder {
       // per (segment, term) of the aggregated dirs
       val inputRows =
         if (prevDict.isDefined)
-          math.max(prior.get.termdictRows, 0L) + metas.value.asScala.map(_.terms).sum
+          prior.get.termdictRows + metas.value.asScala.map(_.terms).sum
         else allSegments.map(_.terms).sum
       lastTermdictPlan = (if (prevDict.isDefined) "delta:" else "full:") + dirs.size
-      timed("termdict")(writeTermdict(spark, prevDict.map(d => s"$indexDir/$d"),
-        dirs.map(d => s"$indexDir/$d"), inputRows, s"$indexDir/$rel"))
+      writeTermdict(spark, prevDict.map(d => s"$indexDir/$d"),
+        dirs.map(d => s"$indexDir/$d"), inputRows, s"$indexDir/$rel")
     }.getOrElse(-1L)
 
     // suggest artifact: sticky across append/resume — once an index was
@@ -770,23 +760,19 @@ object IndexBuilder {
         Snapshot.list(indexDir).exists(_.suggestDir.isDefined))
     val suggestRel =
       if (complete && wantSuggest) Some(f"suggest/snap-$snapId%05d") else None
-    val suggestRows = suggestRel.map { rel => timed("suggest")(
-      writeSuggest(spark, s"$indexDir/${termdictRel.get}", s"$indexDir/$rel"))
+    val suggestRows = suggestRel.map { rel =>
+      writeSuggest(spark, s"$indexDir/${termdictRel.get}", s"$indexDir/$rel")
     }.getOrElse(0L)
 
     // per-field stats are maintained the same incremental way: every commit
     // (complete or partial) stores the EXACT per-field aggregate over its
     // dirs, so an append only scans the new dir and sums driver-side.
-    // Null prior.fieldStats (pre-fields snapshot JSON) falls back to full.
     val fstats =
       if (cfg.fields.isEmpty) Nil
       else prior match {
-        case Some(p) if p.fieldStats != null && newDirs.nonEmpty =>
-          timed("fieldstats-delta")(mergeFieldStats(p.fieldStats,
-            fieldStats(spark, newDirs.map(d => s"$indexDir/$d"))))
-        case _ =>
-          timed("fieldstats")(
-            fieldStats(spark, allDataDirs.map(d => s"$indexDir/$d")))
+        case Some(p) if newDirs.nonEmpty =>
+          mergeFieldStats(p.fieldStats, fieldStats(spark, newDirs.map(d => s"$indexDir/$d")))
+        case _ => fieldStats(spark, allDataDirs.map(d => s"$indexDir/$d"))
       }
 
     // doc-suggest rows for THIS generation (the whole batch — a resumed
@@ -794,15 +780,12 @@ object IndexBuilder {
     // which the resume content-evidence pins to the original). Only
     // complete commits write one, like the termdict.
     val gen = segOffset / P
-    val priorDocSugDirs = prior.map(p =>
-      if (p.docSuggestDirs == null) Nil else p.docSuggestDirs).getOrElse(Nil)
+    val priorDocSugDirs = prior.map(_.docSuggestDirs).getOrElse(Nil)
     val docSugNew =
       if (complete && cfg.docSuggestFields.nonEmpty) {
         val rel = f"docsuggest/gen-$gen%05d-snap-$snapId%05d"
-        val n = timed("docsuggest")(
-          writeDocSuggest(spark, pages, s"$indexDir/$rel",
-            cfg.docSuggestFields, gen))
-        Some(rel -> n)
+        Some(rel -> writeDocSuggest(spark, pages, s"$indexDir/$rel",
+          cfg.docSuggestFields, gen))
       } else None
     val allDocSugDirs = priorDocSugDirs ++ docSugNew.map(_._1).toSeq
     // cumulative — recounting every generation's dir per commit would make
@@ -945,8 +928,11 @@ object IndexBuilder {
 
   /** Write the global term dictionary of `dirsAbs`, merged with the
     * committed dictionary `priorAbs` when given; returns the distinct-term
-    * count, persisted in SnapshotMeta so the warm handle's driver-dict
-    * admission gate needs no per-open count() job.
+    * count, persisted in SnapshotMeta as the next delta commit's input
+    * size. Each row carries its term's segment set `segs`, ascending: the
+    * segments holding a posting row for the term, which is where a query
+    * needing the term can match (the one candidate-segment rule,
+    * `IndexHandle.compile`).
     *
     * One exchange: the input, one row per (segment, term) of the dirs plus
     * one per term of the prior, is range-partitioned on term into
@@ -959,8 +945,10 @@ object IndexBuilder {
     *
     * With a prior the result is value-identical to a full rebuild over all
     * dirs (spec-pinned) by algebra: every termdict measure (sum df, sum
-    * cf, max maxTf, min minDl) is associative and commutative, and a
-    * committed termdict IS the exact reduction of its snapshot's dirs.
+    * cf, max maxTf, min minDl, the sorted concatenation of segs) is
+    * associative and commutative, and a committed termdict IS the exact
+    * reduction of its snapshot's dirs. A segment's (segment, term) row
+    * lives in exactly one dir, so the concatenated sets stay disjoint.
     * Cost: O(vocab + new-dir metadata rows) per commit instead of
     * O(segments x vocab). Tombstone rows (term <= TermDels) contribute
     * nothing, matching the df-includes-deleted semantics the termdict
@@ -969,18 +957,18 @@ object IndexBuilder {
   private[graft] def writeTermdict(spark: SparkSession, priorAbs: Option[String],
       dirsAbs: Seq[String], inputRows: Long, outAbs: String,
       rowsPerFile: Int = TermdictRowsPerFile): Long = {
-    val measures = Seq(col("term"), col("df"), col("cf"), col("maxTf"), col("minDl"))
     val rows = readPostings(spark, dirsAbs).filter(col("term") > TermDels)
-      .select(measures: _*)
-    val all = priorAbs.fold(rows)(p => readTermdict(spark, p).select(measures: _*)
-      .unionByName(rows))
+      .select(col("term"), col("df"), col("cf"), col("maxTf"), col("minDl"),
+        array(col("segId")).as("segs"))
+    val all = priorAbs.fold(rows)(p => readTermdict(spark, p).unionByName(rows))
     val n = math.min((inputRows + rowsPerFile - 1) / rowsPerFile,
       spark.sessionState.conf.numShufflePartitions.toLong).max(1L).toInt
     writeCounted(all
       .repartitionByRange(n, col("term"))
       .groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"),
-        max("maxTf").as("maxTf"), min("minDl").as("minDl"))
+        max("maxTf").as("maxTf"), min("minDl").as("minDl"),
+        array_sort(flatten(collect_list("segs"))).as("segs"))
       .sortWithinPartitions("term"), outAbs)
   }
 
@@ -1366,7 +1354,7 @@ object IndexBuilder {
     // until a merge, superseded and tombstoned docs' grams keep serving,
     // like ES's completion suggester between a delete and a merge
     val (docSugDirs, docSugRows) =
-      if (snap.docSuggestDirs == null || snap.docSuggestDirs.isEmpty) (Nil, 0L)
+      if (snap.docSuggestDirs.isEmpty) (Nil, 0L)
       else {
         val rel2 = f"docsuggest/merge-$newId%05d"
         val rows = readDocSuggest(spark, snap.docSuggestDirs.map(d => s"$indexDir/$d"))
@@ -1496,8 +1484,7 @@ object IndexBuilder {
     // dirs — every subsequent query would throw. Verify referenced dirs
     // still exist before re-pointing.
     val missing = (target.dataDirs ++ target.termdictDir.toSeq ++
-      target.suggestDir.toSeq ++
-      (if (target.docSuggestDirs == null) Nil else target.docSuggestDirs))
+      target.suggestDir.toSeq ++ target.docSuggestDirs)
       .filterNot(rel =>
         java.nio.file.Files.isDirectory(java.nio.file.Paths.get(indexDir, rel)))
     require(missing.isEmpty,
@@ -1525,7 +1512,7 @@ object IndexBuilder {
       else snap +: Snapshot.list(indexDir).filter(_.isComplete).lastOption.toSeq
     val referenced = refSnaps
       .flatMap(s => s.dataDirs ++ s.termdictDir.toSeq ++ s.suggestDir.toSeq ++
-        (if (s.docSuggestDirs == null) Nil else s.docSuggestDirs)).toSet
+        s.docSuggestDirs).toSet
     def orphansIn(sub: String, prefix: String): Seq[String] = {
       val dir = java.nio.file.Paths.get(indexDir, sub)
       if (!java.nio.file.Files.isDirectory(dir)) Nil

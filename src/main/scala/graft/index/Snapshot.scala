@@ -44,8 +44,7 @@ case class SnapshotMeta(
     segments: Seq[SegmentMeta],
     // tombstoned-but-not-purged docs (exact — re-deleting a dead doc does
     // not count). ES/Lucene semantics: numDocs/sumDocLen/df still include
-    // them until Deletes.purge rewrites the postings. Primitive Long, so
-    // pre-deletes snapshot files deserialize as 0.
+    // them until Deletes.purge rewrites the postings.
     deletedDocs: Long = 0L,
     // precomputed autocomplete artifact (ngram -> term, cf), built from the
     // termdict at commit when IndexConfig.suggest is on — the reference's
@@ -53,22 +52,18 @@ case class SnapshotMeta(
     // + the edgeNGram analyzer, resources/es/sea_settings.json:11-21).
     // suggestRows is its lineage metric (row count). Like ES suggest
     // fields, the table tracks the termdict: tombstones don't touch it,
-    // purge/append rebuild it with the termdict. Optional/0 so pre-suggest
-    // snapshot files deserialize cleanly.
+    // purge/append rebuild it with the termdict.
     suggestDir: Option[String] = None,
     suggestRows: Long = 0L,
     // the suggest REQUEST, persisted on every commit (incl. partials,
     // which carry suggestDir = None): a build(suggest = true) that
     // crashes before its first complete commit leaves intent nowhere
     // else, and a resume with a cfg omitting suggest would otherwise
-    // silently drop the artifact the original build asked for. Primitive
-    // Boolean — pre-flag snapshot files deserialize as false and the
-    // suggestDir-based stickiness still covers them.
+    // silently drop the artifact the original build asked for.
     suggestWanted: Boolean = false,
     // multi-field schema ("t:name" analyzed / "k:name" keyword), pinned at
     // build time like numSegments — appends re-derive tokenization from
-    // it. Empty/null (pre-fields snapshot files) = the classic
-    // single-`text`-column contract.
+    // it. Empty = the classic single-`text`-column contract.
     fields: Seq[String] = Nil,
     // rank slots per url/doc-length marker CHUNK (format v2 block-chunked
     // tables, see PostingRow docs). Pinned like blockSize: readers derive
@@ -85,9 +80,9 @@ case class SnapshotMeta(
     // per-analyzed-field (docCount, sum field length) — the per-field
     // BM25 norm inputs; empty for classic single-field indexes
     fieldStats: Seq[FieldStat] = Nil,
-    // distinct-term count of termdictDir, recorded at write time so a warm
-    // IndexHandle's driver-dict admission gate needs no per-open count()
-    // job. -1 = unknown (incomplete snapshots carry no termdict).
+    // distinct-term count of termdictDir, recorded at write time: the
+    // next delta commit's input-size estimate. -1 = no termdict
+    // (incomplete snapshots carry none).
     termdictRows: Long = -1L,
     // on-disk layout version. Deliberately NO default: jackson-module-scala
     // applies case-class defaults to missing JSON fields, so a default of
@@ -97,15 +92,11 @@ case class SnapshotMeta(
     // v1 files deserialize the primitive zero and are refused loudly.
     formatVersion: Int) {
   def avgdl: Double = graft.search.Bm25.avgdl(numDocs, sumDocLen)
-  /** Per-field average doc length (ES per-field similarity); robust to
-    * pre-fieldStats snapshot JSON (null). */
+  /** Per-field average doc length (ES per-field similarity). */
   def fieldAvgdl: Map[String, Double] =
-    if (fieldStats == null) Map.empty
-    else fieldStats.map(f =>
-      f.name -> graft.search.Bm25.avgdl(f.docs, f.sumDl)).toMap
-  /** Parsed field schema; robust to pre-fields snapshot JSON (null). */
-  def fieldDefs: Seq[FieldDef] =
-    if (fields == null || fields.isEmpty) Nil else IndexBuilder.parseFields(fields)
+    fieldStats.map(f => f.name -> graft.search.Bm25.avgdl(f.docs, f.sumDl)).toMap
+  /** Parsed field schema. */
+  def fieldDefs: Seq[FieldDef] = IndexBuilder.parseFields(fields)
   /** Appends create new generations of segments: generation g occupies
     * segIds [g*numSegments, (g+1)*numSegments). */
   def generations: Int =
@@ -123,10 +114,12 @@ case class SnapshotMeta(
   * a killed build is invisible until its commit; restart resumes from the
   * last committed snapshot (SURVEY.md §7 "Snapshot atomicity"). */
 object Snapshot {
-  /** v2: block-chunked url/doc-length marker tables (+ markerChunkDocs,
-    * termdictRows in the snapshot JSON). v1 (unversioned files, field
-    * deserializes as 0): monolithic one-cell-per-segment marker tables. */
-  val CurrentFormat = 2
+  /** v3: every termdict row carries its term's sorted segment set
+    * (`segs`). v2: block-chunked url/doc-length marker tables (+
+    * markerChunkDocs, termdictRows in the snapshot JSON). v1 (unversioned
+    * files, field deserializes as 0): monolithic one-cell-per-segment
+    * marker tables. Only the current version is read. */
+  val CurrentFormat = 3
 
   private val mapper: ObjectMapper = {
     val m = new ObjectMapper()
@@ -279,7 +272,7 @@ object Snapshot {
         throw new IllegalStateException(
           s"snapshot $id under $indexDir has format v${m.formatVersion}, " +
             s"this reader speaks v$CurrentFormat - rebuild the index " +
-            "(marker-table layouts are not cross-readable)")
+            "(marker-table and termdict layouts are not cross-readable)")
       Some(m)
     }
   }

@@ -15,11 +15,12 @@ final case class Hit(rank: Int, docId: Long, url: String, score: Double)
 /** Distributed BM25 top-k over a committed index snapshot.
   *
   * Query plan: the term dictionary is probed for the query terms (Parquet
-  * predicate pushdown on the sorted `term` column — the FST-analogue lookup),
-  * idfs are broadcast, then only the matching posting rows + per-segment
-  * doc-length rows reach the per-segment reader
-  * ([[graft.index.SegmentReader]]; a warm cache is already clustered by
-  * segment, a cold read repartitions by segId once), whose scoring body
+  * predicate pushdown on the sorted `term` column — the FST-analogue lookup).
+  * Its rows give each term's df, for the idfs, and its segment set, from
+  * which the compiled query names the segments that can match. Only those
+  * segments' matching posting rows + doc-length rows reach the per-segment
+  * reader ([[graft.index.SegmentReader]]; a warm cache is already clustered
+  * by segment, a cold read repartitions by segId once), whose scoring body
   * runs block-max WAND for pure-should queries and leapfrog conjunction
   * for must/filter/ids queries — each segment emitting its local top-k.
   * Count, scan and delete-by-query run the same reader with other bodies.
@@ -119,9 +120,11 @@ object Searcher {
 }
 
 /** Compiled form of a [[BoolQuery]] against one snapshot: clause term
-  * arrays, idfs for the scoring terms, and ids resolved to per-segment
-  * sorted docId allowlists. Plain data — serializable into executor
-  * closures without dragging the session-holding handle along. */
+  * arrays, idfs for the scoring terms, ids resolved to per-segment sorted
+  * docId allowlists, and `segs`, the segments that can hold a match
+  * (ascending, never empty), which every read evaluates. Plain data —
+  * serializable into executor closures without dragging the
+  * session-holding handle along. */
 private[search] final case class CompiledQuery(
     must: Array[String],
     filter: Array[String],
@@ -129,7 +132,8 @@ private[search] final case class CompiledQuery(
     scoringTerms: Array[String], // must ∪ should, sorted asc
     idf: Map[String, Double],
     hasIds: Boolean,
-    idsBySeg: Map[Int, Array[Long]]) {
+    idsBySeg: Map[Int, Array[Long]],
+    segs: Array[Int]) {
   def hasRequired: Boolean = must.nonEmpty || filter.nonEmpty || hasIds
   def allTerms: Array[String] =
     (must ++ filter ++ mustNot ++ scoringTerms).distinct
@@ -173,6 +177,11 @@ private[search] object BytesLru {
 
   def urlBytes(us: Array[String]): Long =
     us.foldLeft(16L)((a, u) => a + 2L * u.length + 48L)
+
+  /** Approximate retained bytes of one dictionary entry: the term, its df
+    * and its segment set. */
+  def dictBytes(term: String, segs: Array[Int]): Long =
+    64L + 2L * term.length + 4L * segs.length
 }
 
 /** Per-snapshot norm routing (plain data — serializable into executor
@@ -405,17 +414,19 @@ private[graft] object MatchEnum {
 
 /** A queryable snapshot. Top-k search, count, scan and delete-by-query
   * all run one per-segment reader ([[graft.index.SegmentReader]]) with a
-  * different body; only where its rows come from differs. With
+  * different body; only where its rows come from differs. Which segments
+  * a query reads is decided once, by `compile` from the dictionary's
+  * segment sets, and the served path scores the same segments. With
   * `warm = true` the posting table is re-clustered by segment and
   * persisted in executor memory, and the term dictionary is collected to
   * a driver map (bounded by `DictLimit`), so a steady-state top-k or count
-  * is ONE shuffle-free Spark job: filter the cached postings (predicate
-  * pushdown / in-memory batch pruning on `term`) -> local sort by segment
-  * -> the reader over the colocated segments -> global
-  * TakeOrderedAndProject (or the per-segment counts). The cold path
-  * (warm = false) reads parquet directly, probes the dictionary with a
-  * pushed-down filter, prunes to candidate segments and repartitions by
-  * segId once.
+  * is ONE shuffle-free Spark job: filter the cached postings to the
+  * query's terms and segments (in-memory batch pruning on `term`) ->
+  * local sort by segment -> the reader over the colocated segments ->
+  * global TakeOrderedAndProject (or the per-segment counts). The cold
+  * path (warm = false) reads parquet directly, probes the dictionary with
+  * a pushed-down filter, reads only the query's segments and repartitions
+  * by segId once.
   *
   * Standard Spark cache-sharing caveat: two warm handles on the same index
   * and session produce the SAME logical plan, so the second reuses the
@@ -450,30 +461,22 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
 
   private val termdict: DataFrame =
     IndexBuilder.readTermdict(spark, s"$indexDir/${snap.termdictDir.get}")
-  // driver-side dictionary for warm handles on sane vocabularies: at most
-  // this many distinct terms are collected to the driver
-  private val DictLimit = 2000000L
-  // The admission gate must bound the quantity actually collected (DISTINCT
-  // terms) BEFORE the collect — gating on the per-segment term-count sum
-  // admits up to DictLimit x P rows when the vocabulary is mostly
-  // segment-local (Zipf tail), a driver OOM. The distinct-term count is
-  // persisted in the snapshot at termdict-write time, so a warm open
-  // issues no count() job (it was metadata-cheap but still one Spark job
-  // per handle); the count() fallback only covers snapshots that somehow
-  // carry a termdict without the recorded count.
-  // test hook: true iff the admission gate had to fall back to a count()
-  // job (should never happen for complete v2 snapshots — the count is
-  // persisted at termdict-write time; ChunkedMarkerSpec asserts this)
-  private[graft] var usedTermdictCountFallback = false
-  private val driverDict: Option[Map[String, Long]] = {
-    def termCount =
-      if (snap.termdictRows >= 0) snap.termdictRows
-      else { usedTermdictCountFallback = true; termdict.count() }
-    if (warm && termCount <= DictLimit) {
-      Some(termdict.select("term", "df").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    } else None
-  }
+  // driver-side dictionary for warm handles: term -> (df, segs), collected
+  // when it fits DictLimit bytes. The gate bounds what the collect holds,
+  // its (segment, term) pairs — one segs entry each, and at worst a term
+  // of its own per pair, so each is charged DictPairBytes. The snapshot
+  // records their number (Σ segments.terms), so the gate runs no job.
+  private val DictLimit = 256L << 20
+  private val DictPairBytes = 128L
+  private val driverDict: Option[Map[String, (Long, Array[Int])]] =
+    if (warm && snap.segments.map(_.terms).sum * DictPairBytes <= DictLimit)
+      Some(dictRows(termdict))
+    else None
+
+  /** (term, df, segs) rows of a dictionary probe, collected. */
+  private def dictRows(df: DataFrame): Map[String, (Long, Array[Int])] =
+    df.select("term", "df", "segs").collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getSeq[Int](2).toArray)).toMap
 
   private val postings: Dataset[PostingRow] = {
     val ds = IndexBuilder.readPostings(spark, dataPaths).as[PostingRow]
@@ -553,13 +556,13 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
   // driver (bounded LRU), so repeated-term queries never touch the cluster
   // — the role the reference's LRU-cached ES lookups play
   // (mrtarget/common/LookupTables.py:54-142). Cold terms cost one filtered
-  // Spark fetch; everything after is local WAND over all segments.
+  // Spark fetch; everything after is local WAND over the query's segments.
   private val postingCache =
     new BytesLru[String, Array[PostingRow]](1024L << 20,
       (t, rs) => rs.foldLeft(16L + 2L * t.length)((a, r) =>
         a + BytesLru.rowBytes(r)))
-  // per-segment doc-length tables + tombstone rows are fetched per candidate
-  // segment and LRU-bounded: an all-segments eager collect would hold
+  // per-segment doc-length tables + tombstone rows are fetched per query
+  // segment (`CompiledQuery.segs`) and LRU-bounded: an all-segments eager collect would hold
   // O(numDocs) ints on the driver forever — GBs at 10⁹ docs. The
   // distributed path never touches this.
   private val segCache =
@@ -679,26 +682,28 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     }
   }
 
-  // per-term df memo for handles WITHOUT the full driver dictionary: df
-  // against the pinned snapshot is immutable, so a repeated term (paging
-  // cursors re-compile the same query per page; a served handle re-probes
-  // its hot terms) never re-runs the termdict probe job. Absent terms
-  // negative-cache as None — the snapshot cannot grow one later.
+  // per-term (df, segs) memo for handles WITHOUT the full driver
+  // dictionary: both are immutable against the pinned snapshot, so a
+  // repeated term (paging cursors re-compile the same query per page; a
+  // served handle re-probes its hot terms) never re-runs the termdict
+  // probe job. Absent terms negative-cache as None — the snapshot cannot
+  // grow one later.
   private val dictCache =
-    new BytesLru[String, Option[Long]](8L << 20, (t, _) => 48L + 2L * t.length)
+    new BytesLru[String, Option[(Long, Array[Int])]](8L << 20,
+      (t, e) => BytesLru.dictBytes(t, e.fold(Array.emptyIntArray)(_._2)))
   private val dictLock = new Object
 
-  private def dictDf(terms: Seq[String]): Map[String, Long] = driverDict match {
-    case Some(m) => terms.iterator.flatMap(t => m.get(t).map(t -> _)).toMap
-    case None =>
-      if (terms.isEmpty) Map.empty
-      else cachedFetch(dictCache, dictLock, terms)(
-        missing => termdict.filter(col("term").isin(missing: _*))
-          .select("term", "df").collect()
-          .map(r => r.getString(0) -> Option(r.getLong(1))).toMap,
-        absent = Some(_ => None))
-        .collect { case (t, Some(df)) => t -> df }
-  }
+  private def dictLookup(terms: Seq[String]): Map[String, (Long, Array[Int])] =
+    driverDict match {
+      case Some(m) => terms.iterator.flatMap(t => m.get(t).map(t -> _)).toMap
+      case None =>
+        if (terms.isEmpty) Map.empty
+        else cachedFetch(dictCache, dictLock, terms)(
+          missing => dictRows(termdict.filter(col("term").isin(missing: _*)))
+            .map { case (t, e) => t -> Option(e) },
+          absent = Some(_ => None))
+          .collect { case (t, Some(e)) => t -> e }
+    }
 
   /** ids (urls) -> per-segment sorted docIds of every generation,
     * tombstoned docs included (they are vetoed at scoring time): the LRU
@@ -723,22 +728,33 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
       should = qn.should.map(IndexBuilder.safeTerm),
       filter = qn.filter.map(IndexBuilder.safeTerm),
       mustNot = qn.mustNot.map(IndexBuilder.safeTerm))
-    val df = dictDf((q.must ++ q.should ++ q.filter ++ q.mustNot).distinct)
-    if (q.must.exists(!df.contains(_)) || q.filter.exists(!df.contains(_)))
+    val dict = dictLookup((q.must ++ q.should ++ q.filter ++ q.mustNot).distinct)
+    if (q.must.exists(!dict.contains(_)) || q.filter.exists(!dict.contains(_)))
       return None // conjunction over an absent term
-    val scoring = (q.must ++ q.should.filter(df.contains)).distinct.sorted.toArray
+    val scoring = (q.must ++ q.should.filter(dict.contains)).distinct.sorted.toArray
     if (!q.hasRequired && scoring.isEmpty) return None
-    val idsBySeg = q.ids match {
-      case None => Map.empty[Int, Array[Long]]
-      case Some(urls) =>
-        val m = resolveDocIds(urls)
-        if (m.isEmpty) return None // no listed id exists in the index
-        m
-    }
+    // The one candidate-segment rule. A match needs every required term,
+    // so only segments holding all of them qualify; a pure-should match
+    // needs one scoring term; an ids query with neither may match in any
+    // segment of its ids. An ids clause then narrows to its ids' segments.
+    // The sets are exact, so no segment holding a match is dropped.
+    val required = (q.must ++ q.filter).distinct
+    val termSegs: Option[Set[Int]] =
+      if (required.nonEmpty) {
+        // intersect FROM the rarest required term's segments: the working
+        // set is bounded by the rarest term
+        val sets = required.map(t => dict(t)._2).sortBy(_.length)
+        Some(sets.tail.foldLeft(sets.head.toSet)((cur, s) => s.iterator.filter(cur).toSet))
+      } else if (q.ids.isDefined) None
+      else Some(scoring.iterator.flatMap(t => dict(t)._2).toSet)
+    if (termSegs.exists(_.isEmpty)) return None
+    val idsBySeg = q.ids.fold(Map.empty[Int, Array[Long]])(resolveDocIds)
+    val segs = (termSegs ++ q.ids.map(_ => idsBySeg.keySet)).reduce(_ intersect _)
+    if (segs.isEmpty) return None
     Some(CompiledQuery(q.must.toArray, q.filter.toArray,
-      q.mustNot.filter(df.contains).toArray, scoring,
-      scoring.map(t => t -> Bm25.idf(snap.numDocs, df(t))).toMap,
-      q.ids.isDefined, idsBySeg))
+      q.mustNot.filter(dict.contains).toArray, scoring,
+      scoring.map(t => t -> Bm25.idf(snap.numDocs, dict(t)._1)).toMap,
+      q.ids.isDefined, idsBySeg, segs.toArray.sorted))
   }
 
   /** Free-text top-k (ES `match`): pure-should over the analyzed terms. */
@@ -783,11 +799,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     val nc = normCtx // local copy — the closure must not capture the handle
     val scored = readSegments[(Long, Double, Int)](q, marker = None, keepLens = true) {
       (c, seg) =>
-        // an ids query evaluates its segments even when no clause term has
-        // a posting row there (pure-ids, or ids + mustNot-only); any other
-        // segment without one cannot match and decodes no doc-length table
-        if (seg.terms.isEmpty && !c.hasIds) Iterator.empty
-        else BoolEval.scoreSegment(seg.segId, seg.terms, seg.lens, seg.dels, c, bs, nc,
+        BoolEval.scoreSegment(seg.segId, seg.terms, seg.lens, seg.dels, c, bs, nc,
           kk, after = aft)
     }.getOrElse(return Array.empty)
     scored
@@ -799,18 +811,11 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
   }
 
   /** The one read behind search, count, scan and delete-by-query: compile
-    * `q`, choose its segments, and run `body` over each segment's rows in
-    * the per-segment reader ([[SegmentReader]], which holds the memory
-    * contract). None when `q` cannot match.
-    *
-    * Distribution: a warm cache is clustered by segId, so it only sorts
-    * locally; a cold read repartitions by segId once. Segments: an ids
-    * query reads its resolved segments; the candidate pre-scan
-    * ([[candidateSegs]]) runs only where it saves bytes — on cold reads,
-    * where every row of a non-candidate segment would cross the exchange,
-    * and under the url walk (`marker`), whose url tables are a segment's
-    * dominant bytes. A warm read with no marker skips it: its rows stay
-    * in memory, and the pre-scan would cost a job per query.
+    * `q` and run `body` over each of its segments (`c.segs`) in the
+    * per-segment reader ([[SegmentReader]], which holds the memory
+    * contract). None when `q` cannot match. A warm cache is clustered by
+    * segId, so it only sorts locally; a cold read repartitions by segId
+    * once. Rows of other segments never cross the exchange.
     *
     * Rows read: TermDels, the clause terms, `marker` when given, and the
     * doc-length tables when `keepLens`. An ids query with neither would
@@ -818,25 +823,16 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     * where it can still match; TermLens rides along to anchor those
     * segments, and the reader drops its rows unread. */
   private def readSegments[T: Encoder](q: BoolQuery, marker: Option[String],
-      keepLens: Boolean)(body: (CompiledQuery, Segment) => Iterator[T]): Option[Dataset[T]] = {
-    val c = compile(q) match {
-      case None => return None
-      case Some(x) => x
+      keepLens: Boolean)(body: (CompiledQuery, Segment) => Iterator[T]): Option[Dataset[T]] =
+    compile(q).map { c =>
+      val lensTerms =
+        if (keepLens) IndexBuilder.TermLens +: fieldLensTerms
+        else if (c.hasIds && marker.isEmpty) Seq(IndexBuilder.TermLens)
+        else Nil
+      val wanted = marker.toSeq ++ lensTerms ++ (IndexBuilder.TermDels +: c.allTerms.toSeq)
+      val rows = postings.filter(col("term").isin(wanted: _*) && col("segId").isin(c.segs: _*))
+      SegmentReader.perSegment(rows, clustered = warm, marker, keepLens)(body(c, _))
     }
-    val segs: Option[Seq[Int]] =
-      if (c.hasIds) Some(c.idsBySeg.keys.toSeq)
-      else if (warm && marker.isEmpty) None
-      else Some(candidateSegs(c))
-    if (segs.exists(_.isEmpty)) return None
-    val lensTerms =
-      if (keepLens) IndexBuilder.TermLens +: fieldLensTerms
-      else if (c.hasIds && marker.isEmpty) Seq(IndexBuilder.TermLens)
-      else Nil
-    val wanted = marker.toSeq ++ lensTerms ++ (IndexBuilder.TermDels +: c.allTerms.toSeq)
-    val byTerm = postings.filter(col("term").isin(wanted: _*))
-    val rows = segs.fold(byTerm)(s => byTerm.filter(col("segId").isin(s: _*)))
-    Some(SegmentReader.perSegment(rows, clustered = warm, marker, keepLens)(body(c, _)))
-  }
 
   /** Distributed match-enumeration sink (ES delete-by-query at corpus
     * scale): one CONSOLIDATED TermDels row per segment with >= 1 NEW match
@@ -870,29 +866,6 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     }.getOrElse(spark.emptyDataset[(PostingRow, Long)])
   }
 
-  /** Segments that can possibly hold a match for `c`: those with at least
-    * one positive-clause (must/filter/should) posting row — a match needs
-    * every required term, and a pure-should match needs one scoring term,
-    * so a segment with NO positive rows cannot contribute. Bounds every
-    * exchange of [[readSegments]]: url tables and (post-mass-delete,
-    * corpus-sized) tombstone rows of non-candidate segments never move.
-    * The pre-scan reads only the pushed-down (term, segId) columns and
-    * dedups within each partition, so it needs no exchange of its own and
-    * sends O(segments) ints to the driver. */
-  private def candidateSegs(c: CompiledQuery): Seq[Int] = {
-    val pos = (c.must ++ c.filter ++ c.scoringTerms).distinct.toSeq
-    if (pos.isEmpty) Seq.empty
-    else if (snap.segments.size == 1)
-      // a pre-scan cannot prune a single-segment index, and compile()
-      // already proved every required term (and >= 1 scoring term for
-      // pure-should) has df > 0 index-wide == in THE segment; skipping
-      // the scan saves one Spark job per cold query (guide §1.2: remove
-      // passes that compute nothing)
-      snap.segments.map(_.segId)
-    else postings.filter(col("term").isin(pos: _*)).select("segId").as[Int]
-      .mapPartitions(_.toSet.iterator).collect().distinct.toSeq
-  }
-
   /** Exact live-match count for `q` (the ES `track_total_hits=true` /
     * `Search.count()` contract, mrtarget/modules/SearchObjects.py:289,334):
     * each segment read enumerates its matches with the same cursor
@@ -911,7 +884,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     * reference walks query-filtered result sets for hours this way,
     * mrtarget/modules/Association.py:309-311): enumerate EVERY live match
     * of `q` as a DataFrame of (docId, url, segId) — no scoring, no k.
-    * Each candidate segment enumerates its matches with the scorers'
+    * Each of the query's segments enumerates its matches with the scorers'
     * cursor machinery (tombstones are exclusion cursors) and walks its
     * length-prefixed url table in rank lockstep — matches arrive in
     * ascending docId = ascending rank order, so the walk is a streaming
@@ -981,27 +954,9 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     val aft: SegHit = SegHit.fromCursor(after)
     val wantedTerms = c.allTerms.toSeq
     val rowsByTerm = fetchPostings(wantedTerms)
-
-    val candSegs: Seq[Int] = {
-      val base: Set[Int] =
-        if (c.must.nonEmpty || c.filter.nonEmpty) {
-          // intersect FROM the rarest required term's segments: the
-          // working set is then bounded by the rarest term, and a hot
-          // stopword-scale required term (rows in every segment)
-          // contributes one iteration, never its own segments-sized Set
-          // allocation per served query
-          val req = (c.must ++ c.filter).distinct
-            .map(t => rowsByTerm(t)).sortBy(_.length)
-          req.tail.foldLeft(req.head.iterator.map(_.segId).toSet) {
-            (cur, rows) => rows.iterator.map(_.segId).filter(cur).toSet
-          }
-        }
-        else if (c.hasIds) c.idsBySeg.keySet
-        else c.scoringTerms.iterator.flatMap(t => rowsByTerm(t).map(_.segId)).toSet
-      (if (c.hasIds) base.intersect(c.idsBySeg.keySet) else base).toSeq.sorted
-    }
-    // only the candidate segments' doc-length/tombstone tables are pulled
+    // only the query's segments' doc-length/tombstone tables are pulled
     // (LRU-kept)
+    val candSegs = c.segs.toSeq
     val lens = fetchLens(candSegs)
     // one pass groups each term's rows by segment (term order preserved
     // within a segment — the scorer's float-accumulation order contract);
@@ -1086,7 +1041,7 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     * cut runs distributed, so only k rows reach the driver. Memoized per
     * fragment like [[suggest]]. */
   def suggestDocs(fragment: String, k: Int): Array[(String, String, Int)] = {
-    require(snap.docSuggestDirs != null && snap.docSuggestDirs.nonEmpty,
+    require(snap.docSuggestDirs.nonEmpty,
       "this snapshot has no doc-suggest artifact - build with " +
         "IndexConfig(docSuggestFields = ...)")
     val key = fragment.toLowerCase(java.util.Locale.ROOT)

@@ -194,84 +194,30 @@ class ChunkedMarkerSpec extends SparkSuite {
       IndexConfig(numSegments = 1, blockSize = 16))
     val snapFile = Paths.get(dir, "snapshots", "snap-00001.json")
     val json = Files.readString(snapFile)
-    assert(json.contains("\"formatVersion\" : 2"))
-    // simulate a pre-chunking (v1) snapshot file: no formatVersion field
-    val v1 = json.replaceAll(",?\\s*\"formatVersion\"\\s*:\\s*2", "")
-    Files.writeString(snapFile, v1)
-    val e = intercept[IllegalStateException](Snapshot.latest(dir))
-    assert(e.getMessage.contains("format"))
+    assert(json.contains("\"formatVersion\" : 3"))
+    // a pre-chunking (v1) snapshot file has no formatVersion field; a v2
+    // file's termdict rows carry no segment sets
+    val v1 = json.replaceAll(",?\\s*\"formatVersion\"\\s*:\\s*3", "")
+    val v2 = json.replace("\"formatVersion\" : 3", "\"formatVersion\" : 2")
+    Seq("v1" -> v1, "v2" -> v2).foreach { case (v, older) =>
+      Files.writeString(snapFile, older)
+      val e = intercept[IllegalStateException](Snapshot.latest(dir))
+      assert(e.getMessage.contains("format"), v)
+    }
   }
 
   test("warm handle open issues no termdict-count job") {
-    // differential, not a fixed ceiling: two byte-identical fresh copies
-    // of the index, one with the persisted distinct-term count stripped
-    // from its snapshot (termdictRows -> -1). The stripped copy's
-    // admission gate must FALL BACK to a termdict.count() job — exactly
-    // one job more than the warm open that reads the persisted count.
-    // Asserting warmJobs < fallbackJobs self-calibrates against
-    // AQE/listing job-count noise AND catches the regression a loose
-    // absolute ceiling lets through: a gate reverted to count() directly
-    // (without the fallback flag flipping) runs the count on BOTH sides
-    // and the strict inequality fails.
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    def copyTree(src: String): String = {
-      val dstRoot = Files.createTempDirectory("graft-chunk-copy")
-      val s = Paths.get(src)
-      Files.walk(s).forEach { p =>
-        val t = dstRoot.resolve(s.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else Files.copy(p, t)
-      }
-      dstRoot.toString
-    }
-    // listener events are async — poll the counter to quiescence
-    def jobsDuring(open: => IndexHandle): (Int, IndexHandle) = {
-      Thread.sleep(300) // drain lingering events before arming
-      val before = counter.get()
-      val h = open
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val c = counter.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      (counter.get() - before, h)
-    }
-    val dirA = copyTree(monoDir) // fresh paths: symmetric listing costs
-    val dirB = copyTree(monoDir)
-    val snapFile = Files.list(Paths.get(dirB, "snapshots")).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("snap-"))
-      .maxBy(_.getFileName.toString)
-    val json = Files.readString(snapFile)
-    assert(json.matches("(?s).*\"termdictRows\"\\s*:\\s*\\d+.*"),
-      "expected a persisted termdictRows in the v2 snapshot")
-    Files.writeString(snapFile,
-      json.replaceAll("(\"termdictRows\"\\s*:\\s*)\\d+", "$1-1"))
-    spark.sparkContext.addSparkListener(listener)
+    // a warm open collects the dictionary (one job) and fills the posting
+    // cache (three under adaptive execution: the exchange's map stage and
+    // the fill); its admission gate reads the snapshot's (segment, term)
+    // count, so no count() job runs
+    val (h, jobs) = JobLog.of(spark)(new IndexHandle(spark, monoDir, warm = true))
     try {
-      val (warmJobs, hA) = jobsDuring(new IndexHandle(spark, dirA, warm = true))
-      try {
-        assert(!hA.usedTermdictCountFallback,
-          "warm open fell back to a termdict.count() job - the persisted " +
-            "snapshot count was not used")
-        val (fbJobs, hB) = jobsDuring(new IndexHandle(spark, dirB, warm = true))
-        try {
-          assert(hB.usedTermdictCountFallback,
-            "stripped snapshot must force the count() fallback")
-          assert(warmJobs < fbJobs,
-            s"warm open ran $warmJobs jobs vs $fbJobs on the count-less " +
-              "copy - the persisted count saved no job")
-        } finally hB.close()
-      } finally hA.close()
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.count <= 4, s"warm open jobs:\n$jobs")
+      assert(!jobs.jobs.exists(_._1.exists(_.startsWith("count at "))),
+        s"warm open ran a count() job:\n$jobs")
+      assert(h.search(BoolQuery.text("the data"), 10).nonEmpty)
+    } finally h.close()
   }
 
   test("repeated ids lookups are job-free on a warm handle (per-url LRU)") {

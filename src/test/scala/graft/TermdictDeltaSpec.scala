@@ -44,11 +44,11 @@ class TermdictDeltaSpec extends SparkSuite {
   private def toDf(rows: Seq[(String, String, String, String)]) =
     rows.toDF("url", "title", "body", "lang")
 
-  private type DictRow = (String, Long, Long, Int, Int)
+  private type DictRow = (String, Long, Long, Int, Int, Seq[Int])
 
   private def readDict(abs: String): Seq[DictRow] =
     spark.read.parquet(abs)
-      .select("term", "df", "cf", "maxTf", "minDl")
+      .select("term", "df", "cf", "maxTf", "minDl", "segs")
       .as[DictRow].collect().toSeq.sortBy(_._1)
 
   /** Ground truth: a full rebuild over ALL committed dirs into a temp dir. */
@@ -78,25 +78,41 @@ class TermdictDeltaSpec extends SparkSuite {
 
   /** An earlier writer's plan over the same inputs, kept as a reference:
     * a two-phase aggregation salted by segId mod 8 (the prior's rows in
-    * their own bucket), then reduced per term. */
+    * their own bucket), then reduced per term; the segment sets are the
+    * distinct segIds of the dirs' rows plus the prior's sets. */
   private def saltedPlan(prior: Option[String], dirs: Seq[String]): Seq[DictRow] = {
     import org.apache.spark.sql.functions._
     val parts = spark.read.parquet(dirs: _*)
       .filter(col("term") > IndexBuilder.TermDels)
       .select(col("term"), pmod(col("segId"), lit(8)).as("salt"),
-        col("df"), col("cf"), col("maxTf"), col("minDl"))
+        col("df"), col("cf"), col("maxTf"), col("minDl"), array(col("segId")).as("segs"))
     val all = prior.fold(parts)(p => spark.read.parquet(p)
       .select(col("term"), lit(-1).as("salt"),
-        col("df"), col("cf"), col("maxTf"), col("minDl"))
+        col("df"), col("cf"), col("maxTf"), col("minDl"), col("segs"))
       .unionByName(parts))
     all.groupBy(col("term"), col("salt"))
       .agg(sum("df").as("df"), sum("cf").as("cf"),
-        max("maxTf").as("maxTf"), min("minDl").as("minDl"))
+        max("maxTf").as("maxTf"), min("minDl").as("minDl"),
+        array_distinct(flatten(collect_list("segs"))).as("segs"))
       .groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"),
-        max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-      .select("term", "df", "cf", "maxTf", "minDl")
+        max("maxTf").as("maxTf"), min("minDl").as("minDl"),
+        sort_array(array_distinct(flatten(collect_list("segs")))).as("segs"))
+      .select("term", "df", "cf", "maxTf", "minDl", "segs")
       .as[DictRow].collect().toSeq.sortBy(_._1)
+  }
+
+  /** Every committed dictionary row's `segs` is exactly the ascending
+    * distinct segIds of its term's posting rows. */
+  private def assertExactSegs(indexDir: String, what: String): Unit = {
+    import org.apache.spark.sql.functions._
+    val snap = Snapshot.latest(indexDir).get
+    val truth = IndexBuilder.readPostings(spark, snap.dataDirs.map(d => s"$indexDir/$d"))
+      .filter(col("term") > IndexBuilder.TermDels)
+      .groupBy("term").agg(sort_array(collect_set("segId")).as("segs"))
+      .as[(String, Seq[Int])].collect().toMap
+    val dict = committed(indexDir).map(r => r._1 -> r._6).toMap
+    assert(dict === truth, s"segment sets after $what")
   }
 
   /** The committed dictionary equals the salted reference plan over the
@@ -230,6 +246,29 @@ class TermdictDeltaSpec extends SparkSuite {
     assert(IndexBuilder.lastTermdictPlan === "delta:1")
     assertSaltedParity(dir)
     rewriteSmall()
+  }
+
+  test("segment sets stay exact through build, append, upsert, deletes and the merge") {
+    val dir = Files.createTempDirectory("graft-td-segs").toString
+    val rows = fieldedRows(120, seed = 41)
+    IndexBuilder.build(spark, toDf(rows), dir, cfg)
+    assertExactSegs(dir, "build")
+    IndexBuilder.append(spark, toDf(fieldedRows(60, seed = 42, startId = 6000L)), dir)
+    assertExactSegs(dir, "append")
+    // an upsert of recrawled and new urls: one generation more
+    val recrawl = fieldedRows(30, seed = 43).zip(rows.take(30)).map {
+      case (fresh, old) => fresh.copy(_1 = old._1) } ++
+      fieldedRows(20, seed = 44, startId = 7000L)
+    IndexBuilder.upsert(spark, toDf(recrawl), dir)
+    assertExactSegs(dir, "upsert")
+    Deletes.delete(spark, dir, rows.slice(40, 60).map(_._1))
+    assertExactSegs(dir, "delete by url")
+    val title = rows(70)._2.split(" ").head
+    Deletes.deleteByQuery(spark, dir,
+      graft.search.BoolQuery(must = graft.search.BoolQuery.fieldText("title", title)))
+    assertExactSegs(dir, "delete by query")
+    IndexBuilder.compact(spark, dir)
+    assertExactSegs(dir, "the merge")
   }
 
   test("mergeFieldStats sums by name and keeps fields unique to one side") {
