@@ -748,16 +748,10 @@ object IndexBuilder {
 
     // suggest artifact: sticky across append/resume — once an index was
     // built with suggest on, every later complete commit rebuilds it
-    // alongside the termdict it derives from. A crashed append's PARTIAL
-    // commit has suggestDir = None (only complete commits carry one), so
-    // resuming from one must consult the chain — but ONLY then: a
-    // complete prior is unambiguous, and walking the whole snapshot log
-    // on every commit would make a long-lived streaming index's commit
-    // cost O(total snapshots).
-    val wantSuggest = cfg.suggest ||
-      prior.exists(p => p.suggestDir.isDefined || p.suggestWanted) ||
-      (prior.exists(!_.isComplete) &&
-        Snapshot.list(indexDir).exists(_.suggestDir.isDefined))
+    // alongside the termdict it derives from. Every snapshot records the
+    // request (`suggestWanted`), partial commits included, so the prior
+    // alone answers it.
+    val wantSuggest = cfg.suggest || prior.exists(_.suggestWanted)
     val suggestRel =
       if (complete && wantSuggest) Some(f"suggest/snap-$snapId%05d") else None
     val suggestRows = suggestRel.map { rel =>

@@ -21,9 +21,10 @@ final case class Hit(rank: Int, docId: Long, url: String, score: Double)
   * segments' matching posting rows + doc-length rows reach the per-segment
   * reader ([[graft.index.SegmentReader]]; a warm cache is already clustered
   * by segment, a cold read repartitions by segId once), whose scoring body
-  * runs block-max WAND for pure-should queries and leapfrog conjunction
-  * for must/filter/ids queries — each segment emitting its local top-k.
-  * Count, scan and delete-by-query run the same reader with other bodies.
+  * runs block-max WAND for pure-should queries and the leapfrog
+  * [[Conjunction]] for must/filter/ids queries — each segment emitting its
+  * local top-k. Count, scan and delete-by-query run the same reader with
+  * other bodies, which walk the same conjunction ([[MatchEnum]]).
   * The global answer is the k-way merge
   * `orderBy(score desc, docId asc).limit(k)` — Spark's
   * TakeOrderedAndProject. Urls are resolved for the k winners only, touching
@@ -182,6 +183,15 @@ private[search] object BytesLru {
     * and its segment set. */
   def dictBytes(term: String, segs: Array[Int]): Long =
     64L + 2L * term.length + 4L * segs.length
+
+  /** Approximate retained bytes of one autocomplete memo entry: the gram,
+    * and per row its strings (UTF-16) plus object overhead. */
+  def suggestBytes(gram: String, rows: Array[_ <: Product]): Long =
+    rows.foldLeft(48L + 2L * gram.length)((a, r) =>
+      r.productIterator.foldLeft(a + 32L) {
+        case (b, v: String) => b + 40L + 2L * v.length
+        case (b, _) => b + 16L
+      })
 }
 
 /** Per-snapshot norm routing (plain data — serializable into executor
@@ -208,29 +218,62 @@ private[search] final case class NormCtx(
 }
 
 /** What scoring and match enumeration share for one segment: its posting
-  * rows by term, the ids allowlist (null = no ids clause) and one
-  * exclusion cursor per tombstone row. */
+  * rows by term, the ids allowlist (null = no ids clause), one exclusion
+  * cursor per tombstone row, and ONE cursor per term, shared across the
+  * required, scoring and excluded roles: a must term otherwise
+  * decompresses its posting list twice per segment per query. Sharing is
+  * sound because every per-candidate access seeks the SAME target and
+  * PostingIterator.seek is a no-op when curDoc >= target (forward-only) —
+  * the roles only ever converge a shared cursor, never need it in two
+  * places. Without `segLens` (count, scan, delete-by-query) the cursors
+  * only navigate: idf, avgdl and lens are irrelevant without scoring. */
 private[search] final class SegmentScope(
-    val byTerm: scala.collection.Map[String, PostingRow],
+    segId: Int,
+    byTerm: scala.collection.Map[String, PostingRow],
     val ids: Array[Long],
-    val tombstones: Seq[PostingIterator])
+    tombstones: Seq[PostingIterator],
+    c: CompiledQuery,
+    blockSize: Int,
+    segLens: SegLens,
+    norms: NormCtx) {
+
+  private val memo = new scala.collection.mutable.HashMap[String, PostingIterator]
+  private def cursor(t: String): PostingIterator = memo.getOrElseUpdate(t,
+    if (segLens == null) SegmentScope.cursor(byTerm(t), blockSize)
+    else {
+      val (lensArr, avg) = norms.select(t, segLens)
+      val it = new PostingIterator(byTerm(t), c.idf.getOrElse(t, 0.0),
+        blockSize, avg, lensArr)
+      it.start()
+      it
+    })
+
+  def segBase: Long = IndexBuilder.segBase(segId)
+  def required: Array[PostingIterator] = (c.must ++ c.filter).map(cursor)
+  /** must∪should cursors present here, ascending by term. */
+  def scoring: Array[PostingIterator] = c.scoringTerms.filter(byTerm.contains).map(cursor)
+  def excluded: Array[PostingIterator] =
+    c.mustNot.filter(byTerm.contains).map(cursor) ++ tombstones
+}
 
 private[search] object SegmentScope {
 
   /** The scope of segment `segId` under `c`, or None when the segment
     * cannot match: a required term is missing, or the ids clause lists no
-    * document of this segment. */
+    * document of this segment. Scoring passes the segment's doc-length
+    * tables and norm routing; enumeration passes neither. */
   def of(segId: Int, rows: Seq[PostingRow], dels: Seq[PostingRow],
-      c: CompiledQuery, blockSize: Int): Option[SegmentScope] = {
+      c: CompiledQuery, blockSize: Int, segLens: SegLens = null,
+      norms: NormCtx = null): Option[SegmentScope] = {
     val byTerm = new scala.collection.mutable.HashMap[String, PostingRow]
     rows.foreach(r => byTerm.update(r.term, r))
     if (!c.must.forall(byTerm.contains) || !c.filter.forall(byTerm.contains) ||
         (c.hasIds && !c.idsBySeg.contains(segId))) None
-    else Some(new SegmentScope(byTerm,
+    else Some(new SegmentScope(segId, byTerm,
       if (c.hasIds) c.idsBySeg(segId) else null,
       // tombstoned docs (Deletes) are zero-idf exclusion cursors — the same
       // veto machinery as mustNot, so WAND/conjunction pruning stays exact
-      dels.map(cursor(_, blockSize))))
+      dels.map(cursor(_, blockSize)), c, blockSize, segLens, norms))
   }
 
   /** A started zero-idf cursor: navigation only, no scoring. */
@@ -253,45 +296,29 @@ private[search] object BoolEval {
       blockSize: Int,
       norms: NormCtx,
       k: Int,
-      // external lower bound on the global kth-best score (Wand.topK docs)
+      // external lower bound on the global kth-best score (SegTopK docs)
       floor: Double = Double.NegativeInfinity,
-      // search_after paging cursor (Wand.topK docs)
+      // search_after paging cursor (SegTopK docs)
       after: SegHit = null): Iterator[(Long, Double, Int)] = {
-    val scope = SegmentScope.of(segId, rows, dels, c, blockSize)
+    val scope = SegmentScope.of(segId, rows, dels, c, blockSize, segLens, norms)
       .getOrElse(return Iterator.empty)
-    val byTerm = scope.byTerm
-    // ONE cursor per term, shared across the required/scoring/excluded
-    // roles: a must term otherwise decompresses its posting list twice per
-    // segment per query. Sharing is sound because every per-candidate
-    // access seeks the SAME target and PostingIterator.seek is a no-op
-    // when curDoc >= target (forward-only) — the role arrays only ever
-    // converge a shared cursor, never need it in two places.
-    val iterMemo = new scala.collection.mutable.HashMap[String, PostingIterator]
-    def iter(t: String): PostingIterator = iterMemo.getOrElseUpdate(t, {
-      val (lensArr, avg) = norms.select(t, segLens)
-      val it = new PostingIterator(byTerm(t), c.idf.getOrElse(t, 0.0),
-        blockSize, avg, lensArr)
-      it.start()
-      it
-    })
-    val scoring = c.scoringTerms.filter(byTerm.contains).map(iter)
-    val excluded = c.mustNot.filter(byTerm.contains).map(iter) ++ scope.tombstones
+    val scoring = scope.scoring
     val hits =
       if (c.hasRequired)
-        BooleanScorer.conjunctiveTopK((c.must ++ c.filter).map(iter), scoring,
-          excluded, scope.ids, IndexBuilder.segBase(segId), k, floor,
-          after)
+        BooleanScorer.conjunctiveTopK(scope.required, scoring, scope.excluded,
+          scope.ids, scope.segBase, k, floor, after)
       else if (scoring.isEmpty) Array.empty[SegHit]
-      else Wand.topK(scoring, k, excluded, floor, after)
+      else Wand.topK(scoring, k, scope.excluded, floor, after)
     hits.iterator.map(h => (h.docId, h.score, segId))
   }
 }
 
-/** Match ENUMERATION (no scoring, no top-k) for delete-by-query: every
-  * live docId of one segment matching a compiled query, ascending. The
-  * cursors walk exactly like the scorers' (leapfrog conjunction for
-  * required clauses, k-way union for pure-should, ids allowlist) but emit
-  * ALL matches lazily — nothing is ranked, heaped, or collected, so the
+/** Match ENUMERATION (no scoring, no top-k) for count, scan and
+  * delete-by-query: every live docId of one segment matching a compiled
+  * query, ascending. A query with a required clause (must, filter or ids)
+  * walks the scorers' own [[Conjunction]]; a pure-should query walks the
+  * union of its term cursors through the same exclusion check. Matches
+  * are emitted lazily — nothing is ranked, heaped, or collected, so the
   * tombstone sink can stream corpus-sized match sets segment-parallel. */
 private[graft] object MatchEnum {
 
@@ -303,62 +330,12 @@ private[graft] object MatchEnum {
       blockSize: Int): Iterator[Long] = {
     val scope = SegmentScope.of(segId, rows, dels, c, blockSize)
       .getOrElse(return Iterator.empty)
-    val ids = scope.ids
-    // idf/avgdl/lens are irrelevant without scoring — cursors only navigate
-    def iter(t: String): PostingIterator = SegmentScope.cursor(scope.byTerm(t), blockSize)
-    val excluded = c.mustNot.filter(scope.byTerm.contains).map(iter) ++
-      scope.tombstones
-    def notExcluded(doc: Long): Boolean = {
-      var e = 0
-      var veto = false
-      while (e < excluded.length) {
-        excluded(e).seek(doc) // candidates ascend — forward-only seeks
-        if (excluded(e).curDoc == doc) veto = true
-        e += 1
-      }
-      !veto
-    }
-
-    val required = (c.must ++ c.filter).map(iter)
-    if (required.nonEmpty) {
-      // leapfrog conjunction emitting every aligned candidate
-      new Iterator[Long] {
-        // idsPos MUST be declared before nextDoc: the nextDoc initializer
-        // runs advanceFrom, which advances idsPos — declaring idsPos after
-        // would zero it back out and force a redundant O(|ids|) re-scan
-        private var idsPos = 0
-        private var nextDoc = advanceFrom(IndexBuilder.segBase(segId) + 1)
-        private def advanceFrom(start: Long): Long = {
-          var candidate = start
-          while (true) {
-            if (ids != null) {
-              while (idsPos < ids.length && ids(idsPos) < candidate) idsPos += 1
-              if (idsPos == ids.length) return -1L
-              candidate = ids(idsPos)
-            }
-            var maxReq = candidate
-            var i = 0
-            while (i < required.length) {
-              val r = required(i)
-              r.seek(candidate)
-              if (r.exhausted) return -1L
-              if (r.curDoc > maxReq) maxReq = r.curDoc
-              i += 1
-            }
-            if (maxReq > candidate) candidate = maxReq // realign
-            else if (notExcluded(candidate)) return candidate
-            else candidate += 1
-          }
-          -1L
-        }
-        def hasNext: Boolean = nextDoc >= 0
-        def next(): Long = { val d = nextDoc; nextDoc = advanceFrom(d + 1); d }
-      }
-    } else if (ids != null) {
-      ids.iterator.filter(notExcluded)
-    } else {
+    val excluded = scope.excluded
+    if (c.hasRequired)
+      new Conjunction(scope.required, excluded, scope.ids, scope.segBase).matches
+    else {
       // pure-should: union of the scoring cursors' docs
-      val cursors = c.scoringTerms.filter(scope.byTerm.contains).map(iter)
+      val cursors = scope.scoring
       if (cursors.isEmpty) return Iterator.empty
       new Iterator[Long] {
         private var nextDoc = advance()
@@ -371,12 +348,15 @@ private[graft] object MatchEnum {
               i += 1
             }
             if (min == Long.MaxValue) return -1L
+            // veto before advancing: a should term that is also excluded
+            // shares its cursor with the exclusion list
+            val live = !Conjunction.vetoed(excluded, min)
             i = 0
             while (i < cursors.length) {
               if (cursors(i).curDoc == min) cursors(i).next()
               i += 1
             }
-            if (notExcluded(min)) return min
+            if (live) return min
           }
           -1L
         }
@@ -573,6 +553,18 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
           dels.iterator.map(BytesLru.rowBytes).sum + 64L
       })
 
+  // per-fragment autocomplete memos (both surfaces): the top
+  // `suggestFetch` rows per gram, read through cachedFetch like the other
+  // driver caches and bounded by bytes like them — doc-suggest rows carry
+  // `output` field values of any length, so an entry count bounds
+  // nothing. Asks for more rows than are memoized bypass the memo.
+  private val suggestFetch = 100
+  private[graft] val suggestMemoBytes = 32L << 20
+  private val suggestCache = new BytesLru[String, Array[(String, Long)]](
+    suggestMemoBytes, BytesLru.suggestBytes)
+  private val docSuggestCache = new BytesLru[String, Array[(String, String, Int)]](
+    suggestMemoBytes, BytesLru.suggestBytes)
+
   // Each cache has its own lock, and NEITHER lock is held across a Spark
   // fetch: a cold term/segment must not serialize the concurrent hot
   // queries that the served path exists for (a racing double-fetch of the
@@ -581,14 +573,15 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
   private val segLock = new Object
   private val postingLock = new Object
 
-  /** One home for the served path's LRU-fetch discipline (all three
-    * driver caches): collect hits under the lock, fetch ONLY the missing
+  /** One home for the LRU-fetch discipline of every driver cache
+    * (postings, doc lengths, url chunks, ids, dictionary probes and the
+    * autocomplete memos): collect hits under the lock, fetch ONLY the missing
     * keys from Spark with NO lock held, install under the lock, return
     * hits ++ filled. `absent` fills keys the fetch did not return;
     * `cacheAbsent` decides whether those fills are negative-cached
     * (terms: yes — the pinned snapshot cannot grow one later; url
     * tables: no). Keeping the pattern in one place pins the
-    * no-lock-across-Spark-fetch rule once instead of three times. */
+    * no-lock-across-Spark-fetch rule once. */
   private def cachedFetch[K, V](cache: BytesLru[K, V], lock: AnyRef,
       keys: Seq[K])(fetchMissing: Seq[K] => Map[K, V],
       absent: Option[K => V] = None,
@@ -1022,7 +1015,13 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
     // differently (tr_TR dotless-i) and miss grams the artifact holds
     val key = fragment.toLowerCase(java.util.Locale.ROOT)
     if (key.length < 4 || key.length > 10) return Array.empty
-    suggestMemo(key, k)
+    memoized(suggestCache, key, k)(n =>
+      IndexBuilder.readSuggest(spark, s"$indexDir/${snap.suggestDir.get}")
+        .filter(col("gram") === key)
+        .orderBy(col("cf").desc, col("term").asc)
+        .limit(n)
+        .select("term", "cf").collect()
+        .map(r => (r.getString(0), r.getLong(1))))
   }
 
   /** DOC-level autocomplete over the snapshot's doc-suggest artifact
@@ -1046,59 +1045,29 @@ final class IndexHandle(spark: SparkSession, indexDir: String, warm: Boolean = t
         "IndexConfig(docSuggestFields = ...)")
     val key = fragment.toLowerCase(java.util.Locale.ROOT)
     if (key.length < 4 || key.length > 10) return Array.empty
-    suggestDocsMemo(key, k)
-  }
-
-  /** Per-fragment suggest memo (both autocomplete surfaces): caches the
-    * top-`fetchN` rows per gram in an access-order LRU capped at `cap`
-    * entries, so a long-lived serving handle holds O(cap x fetchN) rows,
-    * never the artifact; oversize asks bypass the memo. One class for
-    * both surfaces — the lazy-initialization-order trap the two
-    * hand-rolled copies had (a strict val reading the cap as 0 during
-    * construction) cannot recur. */
-  private final class SuggestMemo[V](cap: Int, fetchN: Int,
-      fetch: (String, Int) => Array[V]) {
-    private val cache =
-      new java.util.LinkedHashMap[String, Array[V]](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Array[V]]): Boolean = size() > cap
-      }
-    def apply(key: String, k: Int): Array[V] = {
-      if (k > fetchN) return fetch(key, k) // oversize asks bypass the memo
-      val cached = cache.synchronized(Option(cache.get(key)))
-      val all = cached.getOrElse {
-        val rows = fetch(key, fetchN)
-        cache.synchronized(cache.put(key, rows))
-        rows
-      }
-      all.take(k)
+    memoized(docSuggestCache, key, k) { n =>
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("url")).orderBy(col("gen").desc)
+      IndexBuilder.readDocSuggest(spark, snap.docSuggestDirs.map(d => s"$indexDir/$d"))
+        .filter(col("gram") === key)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1) // upserted docs: newest generation wins
+        .orderBy(col("weight").desc, col("url").asc)
+        .limit(n)
+        .select("url", "output", "weight").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
     }
   }
 
-  private val suggestFetch = 100
-  private val suggestCacheCap = 10000
-  private val suggestMemo =
-    new SuggestMemo[(String, Long)](suggestCacheCap, suggestFetch, (key, n) =>
-      IndexBuilder.readSuggest(spark, s"$indexDir/${snap.suggestDir.get}")
-        .filter(col("gram") === key)
-        .orderBy(col("cf").desc, col("term").asc)
-        .limit(n)
-        .select("term", "cf").collect()
-        .map(r => (r.getString(0), r.getLong(1))))
-  private val suggestDocsMemo =
-    new SuggestMemo[(String, String, Int)](suggestCacheCap, suggestFetch,
-      (key, n) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("url")).orderBy(col("gen").desc)
-        IndexBuilder.readDocSuggest(spark, snap.docSuggestDirs.map(d => s"$indexDir/$d"))
-          .filter(col("gram") === key)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1) // upserted docs: newest generation wins
-          .orderBy(col("weight").desc, col("url").asc)
-          .limit(n)
-          .select("url", "output", "weight").collect()
-          .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-      })
+  private def memoized[V](cache: BytesLru[String, Array[V]], key: String,
+      k: Int)(fetch: Int => Array[V]): Array[V] =
+    if (k > suggestFetch) fetch(k)
+    else cachedFetch(cache, cache, Seq(key))(_ =>
+      Map(key -> fetch(suggestFetch)))(key).take(k)
+
+  /** Test hook: approximate bytes the doc-suggest memo holds. */
+  private[graft] def docSuggestMemoHeldBytes: Long =
+    docSuggestCache.synchronized(docSuggestCache.heldBytes)
 
   def close(): Unit = if (warm) postings.unpersist()
 }

@@ -29,55 +29,16 @@ object Demo {
     println(s"[demo] corpus: $nDocs pages, building index under $dir")
     val t0 = System.nanoTime()
     val cfg = IndexConfig(numSegments = 8, blockSize = 64)
-    // lifecycle mode's oracle corpus, captured where it is first collected
-    // so the union is never regenerated/re-collected a second time
-    var lifecycleUnionDocs: Seq[(String, String)] = null
-    val snap = if (sys.env.contains("GRAFT_DEMO_RESUME_COMPACT")) {
-      // exercise the interrupted-build -> resume -> forcemerge lifecycle
-      val partial = IndexBuilder.build(spark, pages.toDF(), dir, cfg,
-        simulateOnlySegments = Some(Set(0, 1, 2)))
-      println(s"[demo] partial snapshot ${partial.id}: segments=${partial.completedSegIds.toSeq.sorted.mkString(",")}")
-      val resumed = IndexBuilder.build(spark, pages.toDF(), dir, cfg, resume = true)
-      println(s"[demo] resumed snapshot ${resumed.id}: dataDirs=${resumed.dataDirs.size}")
-      val qc = Snapshot.metricsDiff(partial, resumed)
-      println(s"[demo] QC diff partial->resumed: ${qc.size} deltas, e.g. ${qc.take(2).mkString("; ")}")
-      val merged = IndexBuilder.compact(spark, dir)
-      println(s"[demo] merged snapshot ${merged.id}: dataDirs=${merged.dataDirs.size} " +
-        s"segments=${merged.segments.size} generations=${merged.generations} " +
-        s"deletedDocs=${merged.deletedDocs}")
-      val vacuumed = IndexBuilder.vacuum(dir)
-      println(s"[demo] vacuumed ${vacuumed.size} superseded dirs")
-      // append a url-disjoint batch as a new generation
-      val extra = Corpus.pages(spark, nDocs / 4, seed = 99, startId = nDocs)
-      val appended = IndexBuilder.append(spark, extra.toDF(), dir)
-      println(s"[demo] appended snapshot ${appended.id}: generations=" +
-        s"${appended.generations}, docs=${appended.numDocs}")
-      // (url, score) parity with the exhaustive oracle over the union
-      val unionDocs = (pages.collect() ++ extra.collect())
-        .map(p => p.url -> p.text).toSeq
-      lifecycleUnionDocs = unionDocs
-      val hits = Searcher.topK(spark, dir, "the data", 5)
-      val oracle = OracleSearch.topK(unionDocs, "the data", 5, cfg.numSegments)
-      val ok = hits.map(h => (h.url, h.score)).toSeq ==
-        oracle.map(h => (h.url, h.score)).toSeq
-      println(s"[demo] post-append oracle (url,score) identical: $ok")
-      if (!ok) sys.exit(1)
-      appended
-    } else IndexBuilder.build(spark, pages.toDF(), dir, cfg)
+    val snap = IndexBuilder.build(spark, pages.toDF(), dir, cfg)
     val buildSec = (System.nanoTime() - t0) / 1e9
     println(f"[demo] built snapshot ${snap.id}: ${snap.numDocs} docs, " +
       f"${snap.segments.map(_.postings).sum} postings, $buildSec%.2f s " +
       f"(${snap.numDocs / buildSec}%.0f docs/s)")
     println(s"[demo] snapshot log: ${Snapshot.latest(dir).map(_.status)}")
 
-    // oracle over every document the index now holds (lifecycle mode
-    // appends a second generation); compare on (url, score) — urls are
-    // unique and the pair is independent of segment layout
-    val docs =
-      if (sys.env.contains("GRAFT_DEMO_RESUME_COMPACT"))
-        // the lifecycle branch above already collected exactly this union
-        lifecycleUnionDocs
-      else pages.select("url", "text").as[(String, String)].collect().toSeq
+    // compare on (url, score): urls are unique and the pair is
+    // independent of segment layout
+    val docs = pages.select("url", "text").as[(String, String)].collect().toSeq
     queries.foreach { q =>
       val hits = Searcher.topK(spark, dir, q, 5)
       val oracle = OracleSearch.topK(docs, q, 5, snap.numSegments)

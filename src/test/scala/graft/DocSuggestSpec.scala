@@ -172,4 +172,33 @@ class DocSuggestSpec extends SparkSuite {
     intercept[IllegalArgumentException](IndexBuilder.build(spark, df, d,
       cfg.copy(docSuggestFields = Seq("nope"))))
   }
+
+  test("the doc-suggest memo holds long outputs within its byte budget") {
+    // every title is ~30k chars, so one memoized gram (60 rows) weighs
+    // ~3.6 MB and the 12 grams together outgrow the budget: an entry-count
+    // cap would keep them all, the byte budget must evict
+    val grams = "abcdefghijkl".map(c => s"q$c$c$c")
+    val pad = Seq.fill(6000)("padd").mkString(" ")
+    val docs = (0 until 60).map(i =>
+      (f"https://long.example/$i%03d", s"${grams.mkString(" ")} $pad", "b"))
+    val dir = Files.createTempDirectory("graft-ds-long").toString
+    IndexBuilder.build(spark, docs.toDF("url", "title", "body"), dir,
+      IndexConfig(numSegments = 2, blockSize = 16,
+        fields = Seq(FieldDef("title"), FieldDef("body")),
+        docSuggestFields = Seq("title")))
+    val h = new IndexHandle(spark, dir, warm = false)
+    val top = docs.take(10).map { case (u, t, _) => (u, t, 1) }
+    grams.foreach { g =>
+      assert(h.suggestDocs(g, 10).toSeq === top, s"gram $g")
+      assert(h.docSuggestMemoHeldBytes <= h.suggestMemoBytes, s"after gram $g")
+    }
+    // the newest entry survives and is weighed by its outputs' chars
+    val outputChars = docs.map(_._2.length.toLong).sum
+    assert(h.docSuggestMemoHeldBytes >= 2L * outputChars)
+    assert(h.suggestDocs(grams.last, 10).toSeq === top)
+    // asks beyond the memoized 100 rows bypass the memo
+    val held = h.docSuggestMemoHeldBytes
+    assert(h.suggestDocs("padd", 101).length === 60)
+    assert(h.docSuggestMemoHeldBytes === held)
+  }
 }

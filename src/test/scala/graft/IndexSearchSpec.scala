@@ -450,9 +450,9 @@ class IndexSearchSpec extends SparkSuite {
   }
 
   test("suggest request survives a crash before the first complete commit") {
-    // the sticky chain walk can only see suggestDir on COMPLETE commits;
-    // a first build that crashes partial must persist the REQUEST so a
-    // resume with a cfg omitting suggest still builds the artifact
+    // only COMPLETE commits carry a suggestDir; a first build that
+    // crashes partial must persist the REQUEST (suggestWanted) so a resume
+    // with a cfg omitting suggest still builds the artifact
     val dir = Files.createTempDirectory("graft-suggest-crash").toString
     val corpus = pages.limit(40).toDF().select("url", "text")
     IndexBuilder.build(spark, corpus, dir,

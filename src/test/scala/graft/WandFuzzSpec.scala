@@ -102,6 +102,124 @@ class WandFuzzSpec extends SparkSuite {
     }
   }
 
+  /** A started cursor over segment 1's postings (docId, tf, dl). */
+  private def segCursor(term: String, ps: Seq[(Long, Int, Int)], blockSize: Int,
+      idf: Double = 0.0, avgdl: Double = 1.0,
+      lens: Array[Int] = null): PostingIterator = {
+    val row = IndexBuilder.encodeForTest(
+      IndexBuilder.TokRowsForTest(1, term, ps.map(_._1).toArray,
+        ps.map(_._2).toArray, ps.map(_._3).toArray), blockSize)
+    val it = new PostingIterator(row, idf, blockSize, avgdl, lens)
+    it.start()
+    it
+  }
+
+  test("conjunction driver: matches == (required ∩ ids) − excluded (set algebra)") {
+    val rng = new scala.util.Random(4567)
+    val segBase = IndexBuilder.segBase(1)
+    (1 to 60).foreach { round =>
+      val n = 10 + rng.nextInt(90)
+      val blockSize = 1 + rng.nextInt(6)
+      def subset(density: Int): Seq[Long] =
+        (1 to n).filter(_ => rng.nextInt(density) == 0).map(segBase + _)
+      val lastDoc = segBase + n
+      // round % 3: 0 = ids with no required term; 1 = a required list that
+      // ends early, so the ids (which always list the last doc) run past
+      // its end; 2 = a required list holding the last doc
+      val req: Option[Seq[Long]] =
+        if (round % 3 == 0) None
+        else Some {
+          val r = subset(2)
+          if (round % 3 == 1) r.take(r.size / 2).padTo(1, segBase + 1)
+          else (r :+ lastDoc).distinct
+        }
+      val ids: Option[Seq[Long]] =
+        if (req.nonEmpty && rng.nextInt(3) == 0) None
+        else Some((subset(3) :+ lastDoc).distinct)
+      // even rounds exclude the last doc
+      val excl: Seq[Seq[Long]] =
+        Seq.fill(if (round % 2 == 0) 1 + rng.nextInt(2) else rng.nextInt(3))(subset(4))
+          .map(e => if (round % 2 == 0) (e :+ lastDoc).distinct else e)
+          .filter(_.nonEmpty)
+      val universe = (1 to n).map(segBase + _)
+      val expected = universe
+        .filter(d => req.forall(_.contains(d)) && ids.forall(_.contains(d)))
+        .filterNot(d => excl.exists(_.contains(d)))
+
+      def walk() = new graft.search.Conjunction(
+        req.toArray.map(r => segCursor("aa", r.map(d => (d, 1, 1)), blockSize)),
+        excl.zipWithIndex.map { case (e, i) =>
+          segCursor(s"ex$i", e.map(d => (d, 1, 1)), blockSize) }.toArray,
+        ids.map(_.toArray).orNull, segBase)
+      val ctx = s"round=$round bs=$blockSize req=${req.map(_.size)} " +
+        s"ids=${ids.map(_.size)} excl=${excl.map(_.size)}"
+      assert(walk().matches.toSeq === expected, ctx)
+      // nextFrom at random ascending targets == the first match at or after
+      val w = walk()
+      var target = segBase + 1
+      while (target <= lastDoc + 1) {
+        val want = expected.find(_ >= target).getOrElse(-1L)
+        assert(w.nextFrom(target) === want, s"$ctx target=$target")
+        target += 1 + rng.nextInt(8)
+      }
+    }
+  }
+
+  test("conjunctiveTopK: floor and search_after cursor == brute force") {
+    val rng = new scala.util.Random(5678)
+    val segBase = IndexBuilder.segBase(1)
+    (1 to 30).foreach { round =>
+      val n = 20 + rng.nextInt(80)
+      val blockSize = 1 + rng.nextInt(6)
+      // coarse lengths and tfs => exact score ties cross page boundaries
+      val lens = Array.fill(n)(5 + 5 * rng.nextInt(4))
+      val avgdl = lens.sum.toDouble / n
+      def postings(density: Int): Seq[(Long, Int, Int)] =
+        (1 to n).filter(_ => rng.nextInt(density) == 0)
+          .map(r => (segBase + r, 1 + rng.nextInt(3), lens(r - 1)))
+      val must = postings(2) match { case Seq() => postings(1); case p => p }
+      val should = Seq("bb" -> postings(2), "cc" -> postings(3)).filter(_._2.nonEmpty)
+      val scoringTerms = (("aa" -> must) +: should).sortBy(_._1)
+      val idf = scoringTerms.map { case (t, ps) =>
+        t -> Bm25.idf(n.toLong, ps.size.toLong) }.toMap
+      val ids: Option[Seq[Long]] =
+        if (rng.nextBoolean()) None
+        else Some((1 to n).filter(_ => rng.nextInt(3) > 0).map(segBase + _))
+      val excl = Seq.fill(rng.nextInt(3))(postings(5)).filter(_.nonEmpty)
+      val excluded = excl.flatten.map(_._1).toSet
+      // brute force, ascending term order (the scorer's float order)
+      val full = must.map(_._1)
+        .filter(d => ids.forall(_.contains(d)) && !excluded.contains(d))
+        .map { d =>
+          var s = 0.0
+          scoringTerms.foreach { case (t, ps) =>
+            ps.find(_._1 == d).foreach { case (_, tf, dl) =>
+              s += idf(t) * Bm25.tfNorm(tf, dl, avgdl) }
+          }
+          (d, s)
+        }.sortBy { case (d, s) => (-s, d) }
+      val afters = None +: full.take(8).map(Some(_))
+      val floors = Seq(Double.NegativeInfinity) ++ full.take(4).map(_._2) ++
+        full.take(2).map(_._2 - 1e-9)
+      for (after <- afters; f <- floors) {
+        val k = 1 + rng.nextInt(10)
+        val expected = full.filter { case (d, s) => after.forall { case (ad, as) =>
+          s < as || (s == as && d > ad) } }.take(k).filter(_._2 >= f)
+        // cursors are single-use — rebuild per case
+        val scoring = scoringTerms.map { case (t, ps) =>
+          segCursor(t, ps, blockSize, idf(t), avgdl, lens) }.toArray
+        val got = graft.search.BooleanScorer.conjunctiveTopK(
+          Array(scoring(scoringTerms.indexWhere(_._1 == "aa"))), scoring,
+          excl.zipWithIndex.map { case (e, i) =>
+            segCursor(s"ex$i", e, blockSize) }.toArray,
+          ids.map(_.toArray).orNull, segBase, k, floor = f,
+          after = after.map { case (d, s) => graft.search.SegHit(d, s) }.orNull)
+        assert(got.map(h => (h.docId, h.score)).toSeq === expected,
+          s"round=$round bs=$blockSize k=$k floor=$f after=$after")
+      }
+    }
+  }
+
   test("search_after paging: stitched pages == one-shot top-k (fuzz)") {
     val rng = new scala.util.Random(3456)
     import graft.search.{BoolQuery, IndexHandle}
