@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.corpus.Corpus
 import graft.index.{Deletes, IndexBuilder, IndexConfig}
@@ -18,8 +19,35 @@ import graft.search.{BoolQuery, Searcher}
   * sides because the driver hash-compares values per sorted column name. */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The driver tables' schemas, in file column order. A schema-less
+    * `spark.read.parquet` runs one footer-inference Spark job per read (51
+    * of the 205 jobs of a perfbench `etl` sweep at sf0.01). EntrySpec checks
+    * each against the files' own schema, so a renamed or missing column
+    * fails there instead of reading as nulls. */
+  private[graft] val tableSchemas: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (k, ddl) => k -> StructType.fromDDL(ddl) }
+
+  private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    require(tableSchemas.contains(name), s"no declared schema for table '$name'")
+    spark.read.schema(tableSchemas(name)).parquet(s"$dir/$name.parquet")
+  }
 
   /** Flagship on sf0.001: synthesize a seeded web corpus, build the
     * inverted index, answer a BM25 top-10 query (driver checks rows>0). */
@@ -547,7 +575,7 @@ object SparkEntry {
       val grams = Seq("data", "spar", "merg", "tabl", "wind")
       val idx = documentsIndex(s, d)
       val snap = graft.index.Snapshot.latest(idx).get
-      val sug = s.read.parquet(s"$idx/${snap.suggestDir.get}")
+      val sug = IndexBuilder.readSuggest(s, s"$idx/${snap.suggestDir.get}")
       val matched = sug.filter(col("gram").isin(grams: _*))
       val w = Window.partitionBy(col("gram")).orderBy(col("cf").desc, col("term").asc)
       matched.withColumn("rn", row_number().over(w))

@@ -72,32 +72,47 @@ object Ontology {
   final case class PinnedResult(df: DataFrame, release: () => Unit)
 
   /** Shared pointer-jumping core of [[ancestorChain]]/[[ancestorPaths]]:
-    * state rows (id, anc) where anc is a root-ward path [top, ...,
-    * parent]; each round every unfinished path prepends, per state path of
-    * its TOP node, that full path — doubling covered depth per round, so a
-    * depth-D graph closes in O(log D) self-joins. On a forest each row has
-    * exactly one extension (a chain); on a DAG the left join fans out once
-    * per distinct path of the top node, which enumerates every (id,
-    * root-path) exactly once: unfinished paths all have length exactly 2^r
-    * (so distinct rows compose to distinct rows), and a finished path's
-    * top is parentless while an unfinished one's is not (so the two pools
-    * can never collide). Fixpoint when the path-length sum stops growing =
-    * every row missed the join = all tops are roots. `localCheckpoint`
-    * cuts the exponentially-growing self-join lineage each round;
-    * superseded rounds' blocks are freed as rounds advance, the final
-    * round's through the returned handle. Only this closure's own
-    * checkpoint RDDs are ever freed, read off each checkpointed Dataset's
-    * plan: a `localCheckpoint` block cannot be recomputed, so freeing a
-    * concurrent query's checkpoint would fail that query. */
+    * state rows (id, anc, fin) where anc is a root-ward path [top, ...,
+    * parent] and fin says that the path's top is a root; each round every
+    * unfinished path prepends, per state path of its TOP node, that full
+    * path — doubling covered depth per round, so a depth-D graph closes in
+    * O(log D) self-joins. On a forest each row has exactly one extension
+    * (a chain); on a DAG the left join fans out once per distinct path of
+    * the top node, which enumerates every (id, root-path) exactly once:
+    * unfinished paths all have length exactly 2^r (so distinct rows
+    * compose to distinct rows), and a finished path's top is parentless
+    * while an unfinished one's is not (so the two pools can never collide).
+    *
+    * Stop rule: a row that misses the join has a root on top and is
+    * finished; a row that joins takes the joined path's `fin`. The loop
+    * stops on the first round after which every row is finished, so it
+    * never runs a no-op round that only confirms the fixpoint (no path
+    * grows in a round only when every row missed the join). A cycle
+    * never finishes a row and trips the `maxRounds` guard.
+    *
+    * Cost under AQE, measured on the q46/q47 shapes (ids 1..120, parents
+    * id/2, and id/2 plus id/3; 4 cores): the init aggregation is 3 Spark
+    * jobs (4 with the forest statistic), and a round 3 to 5 — the
+    * checkpointed join's shuffle stages run as jobs of their own when its
+    * plan is finalized, then the stats aggregation (row count and
+    * min(fin)) materializes the checkpoint. Both shapes are 6
+    * levels deep and close in 3 rounds: 15 jobs for the chain and 16 for
+    * the paths, where confirming the fixpoint with a fourth round cost
+    * 4 to 5 more.
+    *
+    * `localCheckpoint` cuts the exponentially-growing self-join lineage
+    * each round; superseded rounds' blocks are freed as rounds advance,
+    * the final round's through the returned handle. Only this closure's
+    * own checkpoint RDDs are ever freed, read off each checkpointed
+    * Dataset's plan: a `localCheckpoint` block cannot be recomputed, so
+    * freeing a concurrent query's checkpoint would fail that query. */
   private def closure(edges: DataFrame, maxRounds: Int, op: String,
       maxPaths: Long = DefaultMaxPaths, requireForest: Boolean = false): PinnedResult = {
     val spark = edges.sparkSession
-    // LAZY localCheckpoint: the round's fixpoint-statistics aggregation is
-    // the action that materializes (and pins) the blocks, so each round
-    // costs ONE Spark job instead of two (eager checkpoint job + stats
-    // job) — guide §1.2, remove whole passes. Lineage truncation and the
-    // pinned-block bookkeeping are unchanged: persist() registers the RDD
-    // at mark time, the stats job computes every partition.
+    // LAZY localCheckpoint: the round's stats aggregation is the action
+    // that materializes (and pins) the blocks, so no round pays a separate
+    // eager checkpoint job. persist() registers the RDD at mark time, the
+    // stats job computes every partition.
     def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
       val out = df.localCheckpoint(false)
       // the checkpointed RDD is the one the returned Dataset's LogicalRDD
@@ -107,48 +122,48 @@ object Ontology {
     def free(ids: Set[Int]): Unit =
       spark.sparkContext.getPersistentRDDs.view
         .filterKeys(ids.contains).values.foreach(_.unpersist(blocking = false))
+    def result(df: DataFrame, ids: Set[Int]) = PinnedResult(df.drop("fin"), () => free(ids))
 
     var (anc, held) = checkpointTracked(
       edges.select(col("id").cast("long").as("id"),
-        array(col("parent").cast("long")).as("anc")))
+        array(col("parent").cast("long")).as("anc"), lit(false).as("fin")))
     // any failure inside the loop (cycle guard, task error) must free the
     // round currently pinned — these blocks live OUTSIDE the cache
     // manager and would otherwise leak for the session's lifetime
     try {
       // one aggregation doubles as the materializing action, the
-      // emptiness probe (sum is null over zero rows) AND — for
-      // ancestorChain — the forest precondition (edges arrive deduped on
-      // (id, parent), so a repeated id IS a multi-parent node); folding
-      // the check here saves the separate parse+distinct job it used to
-      // run, and the diagnostic query naming an offender only runs on the
-      // (fatal) violation path
-      val init = anc.agg(sum(size(col("anc"))), count(lit(1)),
-        countDistinct(col("id"))).head()
-      if (init.getLong(1) == 0L) return PinnedResult(anc, () => free(held))
-      if (requireForest && init.getLong(2) != init.getLong(1)) {
+      // emptiness probe AND — for ancestorChain only — the forest
+      // precondition (edges arrive deduped on (id, parent), so a repeated
+      // id IS a multi-parent node); the diagnostic query naming an
+      // offender only runs on the (fatal) violation path
+      val forest = if (requireForest) Seq(countDistinct(col("id"))) else Nil
+      val init = anc.agg(count(lit(1)), forest: _*).head()
+      if (init.getLong(0) == 0L) return result(anc, held)
+      if (requireForest && init.getLong(1) != init.getLong(0)) {
         val dup = anc.groupBy(col("id")).count()
           .filter(col("count") > 1).select(col("id")).limit(1).collect()
         throw new IllegalArgumentException(
           s"ancestorChain: node ${if (dup.nonEmpty) dup(0).get(0) else "?"} has " +
             "multiple parents — a forest is required (ancestorPaths handles DAGs)")
       }
-      var total = init.getLong(0)
       var round = 0
       var done = false
       while (!done) {
         require(round < maxRounds,
           s"$op: no fixpoint after $maxRounds doubling rounds — cycle in edges?")
-        val m = anc.select(col("id").as("_jid"), col("anc").as("_janc"))
+        val m = anc.select(col("id").as("_jid"), col("anc").as("_janc"),
+          col("fin").as("_jfin"))
         val (next, nextHeld) = checkpointTracked(
           anc.withColumn("_top", element_at(col("anc"), 1))
             .join(m, col("_top") === col("_jid"), "left")
             .select(col("id"),
               when(col("_janc").isNotNull, concat(col("_janc"), col("anc")))
-                .otherwise(col("anc")).as("anc")))
-        val (t2, rows2) =
+                .otherwise(col("anc")).as("anc"),
+              coalesce(col("_jfin"), lit(true)).as("fin")))
+        val (rows2, allFin) =
           try {
-            val r = next.agg(sum(size(col("anc"))), count(lit(1))).head()
-            (r.getLong(0), r.getLong(1))
+            val r = next.agg(count(lit(1)), min(col("fin"))).head()
+            (r.getLong(0), r.getBoolean(1))
           }
           catch { case e: Throwable => free(nextHeld); throw e }
         // density guard: path enumeration is inherently output-exponential
@@ -163,15 +178,13 @@ object Ontology {
               "path enumeration; raise maxPaths only if the output is " +
               "genuinely wanted at that cardinality")
         }
-        done = t2 == total
-        total = t2
+        done = allFin
         free(held)
         held = nextHeld
         anc = next
         round += 1
       }
-      val finalHeld = held
-      PinnedResult(anc, () => free(finalHeld))
+      result(anc, held)
     } catch {
       case e: Throwable =>
         free(held)

@@ -1,7 +1,8 @@
 package graft
 
 /** Driver-contract smoke: entry() yields rows; every query runs at
-  * sf0.001; every oracleSql key exists in queries. */
+  * sf0.001 without a schema-inference job; every oracleSql key exists in
+  * queries; the declared table schemas match the test data's files. */
 class EntrySpec extends SparkSuite {
 
   test("entry returns BM25 hits") {
@@ -31,9 +32,31 @@ class EntrySpec extends SparkSuite {
       "q20_unpivot_part", "q21_bm25_topk", "q23_rollup_qty", "q25_pivot_events",
       "q27_score_transform", "q36_nfkd_cast", "q38_datasource_score",
       "q56_doc_suggest", "q57_scan_midsize")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, dir).count()
+    // and none reads a file through a Parquet footer-inference job: the
+    // driver tables and every index artifact have declared schemas
+    val inferring = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val (n, jobs) = JobLog.of(spark)(fn(spark, dir).count())
       if (nonEmpty.contains(name)) assert(n > 0, s"$name returned 0 rows")
+      jobs.schemaInference.map(stage => s"$name: $stage")
     }
+    assert(inferring.isEmpty, inferring.mkString("\n"))
+  }
+
+  test("declared table schemas equal every test-data dir's parquet schemas") {
+    // the test-data root that holds sf0.001 (perfbench's default, ~/testdata)
+    val root = new java.io.File(sys.props("user.home"), "testdata")
+    val dirs = Option(root.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("sf")).sortBy(_.getName)
+    assert(dirs.nonEmpty, "no sf* test-data dir")
+    assert(SparkEntry.tableSchemas.size === 10)
+    for (dir <- dirs; (table, declared) <- SparkEntry.tableSchemas) {
+      // a column missing from the declaration reads as nulls, silently
+      val onDisk = spark.read.parquet(s"$dir/$table.parquet").schema
+      assert(declared.map(f => (f.name, f.dataType)) === onDisk.map(f => (f.name, f.dataType)),
+        s"${dir.getName}/$table")
+    }
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.t(spark, dirs.head.toString, "no_such_table"))
+    assert(e.getMessage.contains("no_such_table"))
   }
 }

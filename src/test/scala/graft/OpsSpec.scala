@@ -347,6 +347,52 @@ class OpsSpec extends SparkSuite {
       failedRounds.flatten.map(_.getMessage.take(120)).mkString(" | "))
   }
 
+  test("closure job counts on the q46/q47 shapes; results equal brute force") {
+    import graft.ops.Ontology
+    // ids 1..120: q46's forest (parent id/2) and q47's DAG (id/2 and id/3);
+    // both are 6 levels deep, so the closure stops after 3 doubling rounds
+    val forest = (2 to 120).map(i => (i.toLong, (i / 2).toLong))
+    val dag = forest ++ (3 to 120).map(i => (i.toLong, (i / 3).toLong))
+    def parents(es: Seq[(Long, Long)]) = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct }
+    def brute(ps: Map[Long, Seq[Long]])(i: Long): Seq[List[Long]] = ps.get(i) match {
+      case None => Seq(Nil)
+      case Some(up) => up.flatMap(p => brute(ps)(p).map(_ :+ p))
+    }
+    def expect(es: Seq[(Long, Long)]) = {
+      val ps = parents(es)
+      ps.keys.toSeq.flatMap(i => brute(ps)(i).map(p => (i, p))).toSet
+    }
+    def check(name: String, es: Seq[(Long, Long)], budget: Int)(
+        run: org.apache.spark.sql.DataFrame => Ontology.PinnedResult): Unit = {
+      val (pr, jobs) = JobLog.of(spark)(run(es.toDF("id", "parent")))
+      try {
+        info(s"$name: ${jobs.count} jobs")
+        // the init aggregation and 3 rounds: no fourth round only to see a fixpoint
+        assert(jobs.count === budget, s"$name jobs:\n$jobs")
+        assert(pr.df.columns.toSeq === Seq("id", "anc"))
+        val got = pr.df.as[(Long, Seq[Long])].collect().map { case (i, p) => (i, p.toList) }
+        assert(got.length === got.toSet.size, s"$name: duplicate paths")
+        assert(got.toSet === expect(es), name)
+      } finally pr.release()
+    }
+    check("ancestorChainManaged", forest, 15)(Ontology.ancestorChainManaged(_))
+    check("ancestorPathsManaged", dag, 16)(Ontology.ancestorPathsManaged(_))
+  }
+
+  test("closure cycle guard: a 3-cycle fails after maxRounds and frees its blocks") {
+    import graft.ops.Ontology
+    // every row of a cycle joins every round, so none is ever finished:
+    // the fin stop rule must not end the loop, the maxRounds guard must
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("id", "parent")
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
+    Seq[() => Any](() => Ontology.ancestorChain(cycle, maxRounds = 4),
+        () => Ontology.ancestorPaths(cycle, maxRounds = 4)).foreach { run =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("no fixpoint after 4 doubling rounds"), e.getMessage)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size <= pinnedBefore)
+  }
+
   test("fingerprint expression equals Analyzer-free sorted token set") {
     val df = Seq((1L, "b a b c a")).toDF("id", "text")
     val fp = df.select(TextOps.fingerprintExpr(col("text"))).head().getString(0)
